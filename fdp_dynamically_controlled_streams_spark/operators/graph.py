@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fdp_dynamically_controlled_streams_spark.functions.exactround import dratio, dratio_sql
+from fdp_dynamically_controlled_streams_spark.session import batch_partitions
 
 #: total rank mass in micro-units (1e12 => 6 significant decimals per node
 #: at N ~ 1e6 nodes; bigint headroom: 85 * 1e12 << 2^63).
@@ -249,12 +250,9 @@ def triangles(
     # exchange on either side AND inherits real parallelism (AQE coalesces
     # the small checkpoint to 1 partition otherwise, serializing the
     # m^1.5 wedge stage; measured 8.5-10.4 -> 3.1 s at sf0.1 with the
-    # closure hint below). Partition count rides the session's
-    # shuffle-partitions knob — the same value every other shuffle here
-    # uses, sized per deployment, not a local constant.
-    n_parts = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    # closure hint below). Partition count is the one every other batch
+    # shuffle here starts at, sized per deployment, not a local constant.
+    n_parts = batch_partitions(edges.sparkSession)
     oriented = (
         canon.join(da, "a")
         .join(db, "b")

@@ -126,6 +126,18 @@ def _replay_conf(spark: SparkSession, partitions: int):
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_prov)
 
 
+def _await_drain(q, timeout_s: float = 300) -> None:
+    """Wait for an availableNow query to drain, so that an entry never
+    returns partial output: on timeout, stop the query and raise; a query
+    that failed raises its exception."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"streaming query {q.id} did not drain in {timeout_s} s")
+    exc = q.exception()
+    if exc is not None:
+        raise exc
+
+
 def _read_replay_out(spark: SparkSession, ddl: str, path: str) -> DataFrame:
     """Read back a replay sink directory. A replay that produced zero
     micro-batches never creates the directory — return an empty typed frame
@@ -3962,7 +3974,7 @@ def controller_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_drain(q)
     return _read_replay_out(spark, "sensor_id int, command int, seq long", out).select(
         "sensor_id", "command", "seq"
     )

@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
 #: Configs that define the engine's scale posture. On a real cluster the same
 #: dict ships unchanged; only master/memory/executor counts differ.
 ENGINE_CONF: dict[str, str] = {
@@ -30,7 +33,9 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
-    "spark.sql.shuffle.partitions": "32",
+    # Batch shuffles start at 32 partitions, which AQE coalesces; streaming
+    # state partitions are sized to the slots in engine_conf.
+    INITIAL_PARTITIONS: "32",
     # Testdata parquet carries TIMESTAMP(NANOS) which Spark has no native type
     # for; read as long and convert in schemas.load_table (micros truncation,
     # matching DuckDB's TIMESTAMP_NS -> TIMESTAMP behavior).
@@ -49,6 +54,52 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
+def engine_conf(
+    slots: int,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The session conf for a context with ``slots`` task slots.
+
+    Batch and streaming shuffles read different keys. With AQE coalescing
+    on, a batch shuffle starts at ``INITIAL_PARTITIONS`` and AQE merges the
+    small ones. Structured Streaming turns AQE off, so a stateful operator
+    runs on exactly ``SHUFFLE_PARTITIONS`` state partitions and nothing
+    coalesces them. Each state partition is one task per micro-batch, and
+    each task pays a fixed cost whatever its key count: a state-store load
+    and commit, a Python-worker round trip, and PySpark's per-task
+    ``importlib.invalidate_caches()``. So a micro-batch costs roughly
+    (fixed cost per state task) x partitions, plus about 2 ms per key of
+    Arrow->pandas conversion inside PySpark; the controller's own logic
+    costs about 0.1 ms per key. One state partition per slot runs every
+    state task in one wave. The count is pinned when a query's checkpoint
+    is created: a restarted query keeps its count from the offset log
+    whatever the session says.
+
+    An explicit ``shuffle_partitions``, or a ``SHUFFLE_PARTITIONS`` entry in
+    ``extra_conf``, sets both keys unless ``extra_conf`` names
+    ``INITIAL_PARTITIONS`` as well.
+    """
+    conf = {**ENGINE_CONF, SHUFFLE_PARTITIONS: str(slots)}
+    if shuffle_partitions is not None:
+        conf[SHUFFLE_PARTITIONS] = conf[INITIAL_PARTITIONS] = str(shuffle_partitions)
+    if extra_conf:
+        conf.update(extra_conf)
+        if SHUFFLE_PARTITIONS in extra_conf:
+            conf[INITIAL_PARTITIONS] = extra_conf.get(
+                INITIAL_PARTITIONS, extra_conf[SHUFFLE_PARTITIONS]
+            )
+    return conf
+
+
+def batch_partitions(spark: SparkSession) -> int:
+    """Partition count a batch shuffle starts at: the initial AQE count, or
+    the shuffle-partitions count on a session that does not set it (the
+    same fallback Spark applies)."""
+    initial = spark.conf.get(INITIAL_PARTITIONS, None)
+    return int(initial or spark.conf.get(SHUFFLE_PARTITIONS))
+
+
 def get_spark(
     app_name: str = "fdp-dcs-spark",
     master: str | None = None,
@@ -59,7 +110,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
     ``local[*]``) — on a cluster, pass the real master or leave it to
-    spark-submit by passing ``master=""``.
+    spark-submit by passing ``master=""``. Streaming state partitions
+    default to the context's ``defaultParallelism`` (see ``engine_conf``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name)
@@ -67,13 +119,14 @@ def get_spark(
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    conf = dict(ENGINE_CONF)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    # Static settings take effect only when the context starts, and the slot
+    # count is known only once it has: start on the engine conf, then set the
+    # partition counts sized to the context's slots.
+    for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    conf = engine_conf(spark.sparkContext.defaultParallelism, shuffle_partitions, extra_conf)
+    for k in (SHUFFLE_PARTITIONS, INITIAL_PARTITIONS):
+        spark.conf.set(k, conf[k])
     return spark

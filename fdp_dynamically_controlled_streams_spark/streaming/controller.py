@@ -14,10 +14,18 @@ Engine rules on top of the reference:
   * state is the managed GroupState (checkpointed) — never a per-task local
     map (the Flink/Kafka-Streams dedup-loss bug, SURVEY §2.4 G3/G4)
 
-Scale: state is per-key (sensor_id), partitioned by the groupBy hash shuffle;
-with RocksDB state store (session.ENGINE_CONF) key spaces beyond executor
-memory are fine. Arrow batches cross the JVM->Python boundary once per
-micro-batch per partition.
+Scale: state is per-key (sensor_id), hash-partitioned by the groupBy shuffle
+into ``spark.sql.shuffle.partitions`` state partitions, which default to the
+session's task slots (session.engine_conf); with the RocksDB state store key
+spaces beyond executor memory are fine. Each state partition is one task per
+micro-batch, and each task pays a fixed cost whatever its key count: a
+state-store load and commit, one Python-worker round trip, and PySpark's
+per-task ``importlib.invalidate_caches()``. A micro-batch therefore costs
+about (fixed cost per state task) x partitions, plus about 2 ms per key of
+Arrow->pandas conversion inside PySpark; the handler below costs about
+0.1 ms per key. The partition count is pinned when the query's checkpoint is
+created: a restarted query reads it from its offset log, whatever the
+session's default is then.
 """
 
 from __future__ import annotations

@@ -258,17 +258,29 @@ def test_progress_listener_records_batches_and_state(spark, tmpdir):
     assert any((b.state_rows or 0) > 0 for b in rec.batches)  # keyed state seen
 
 
-def test_streaming_resume_from_checkpoint(spark, tmpdir):
-    """Restart semantics: run chunk 1, stop, add chunk 2, resume from the
-    same checkpoint — state (setting + lastAction) must persist."""
+def _resume_controller(spark, tmpdir, partitions=(None, None)):
+    """Run the scenario's first six rows, stop, append the rest as a new
+    chunk and resume from the same checkpoint. ``partitions`` gives the
+    session's shuffle-partition count for each start (None keeps the
+    session's); the session's count is restored afterwards. Returns the rows
+    emitted by the first run, the rows emitted by both, and the last
+    progress of each run."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     pdf = _scenario_unified()
     data_dir = f"{tmpdir}/replay"
     chk = f"{tmpdir}/chk"
-
     write_replay_chunks([pdf.iloc[:6]], data_dir)
     collected: list = []
+    progress: list = []
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
 
-    def start():
+    def start(n_parts):
+        spark.conf.set(key, str(n_parts or prev))
         unified = replay_dir(spark, data_dir, UNIFIED_DDL, files_per_trigger=1)
         q = (
             controller_streaming(unified)
@@ -279,21 +291,36 @@ def test_streaming_resume_from_checkpoint(spark, tmpdir):
             .start()
         )
         q.awaitTermination(180)
+        progress.append(q.lastProgress)
 
-    start()
-    first = sorted((r.sensor_id, r.command, r.seq) for r in collected)
+    try:
+        start(partitions[0])
+        first = sorted((r.sensor_id, r.command, r.seq) for r in collected)
+        fp = f"{data_dir}/chunk-99999.parquet"
+        pq.write_table(pa.Table.from_pandas(pdf.iloc[6:], preserve_index=False), fp)
+        os.utime(fp, (1_700_000_100, 1_700_000_100))
+        start(partitions[1])
+    finally:
+        spark.conf.set(key, prev)
+    return first, sorted((r.sensor_id, r.command, r.seq) for r in collected), progress
+
+
+def test_streaming_resume_from_checkpoint(spark, tmpdir):
+    """Restart semantics: run chunk 1, stop, add chunk 2, resume from the
+    same checkpoint — state (setting + lastAction) must persist."""
+    first, got, _ = _resume_controller(spark, tmpdir)
     assert first == sorted([(1, 1, 2), (1, 0, 5)])
+    assert got == sorted(EXPECTED)
 
-    # append the rest as a new chunk file; resume from checkpoint
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import os
 
-    fp = f"{data_dir}/chunk-99999.parquet"
-    pq.write_table(pa.Table.from_pandas(pdf.iloc[6:], preserve_index=False), fp)
-    os.utime(fp, (1_700_000_100, 1_700_000_100))
-    start()
-    assert sorted((r.sensor_id, r.command, r.seq) for r in collected) == sorted(EXPECTED)
+def test_resume_keeps_checkpoint_state_partitions(spark, tmpdir):
+    """The state partition count is pinned when the checkpoint is created:
+    a query started on 3 partitions resumes on 3 in a session whose default
+    is 5, reads the state it wrote, and emits the same commands."""
+    first, got, progress = _resume_controller(spark, tmpdir, partitions=(3, 5))
+    assert first == sorted([(1, 1, 2), (1, 0, 5)])
+    assert got == sorted(EXPECTED)
+    assert [p["stateOperators"][0]["numShufflePartitions"] for p in progress] == [3, 3]
 
 
 def test_session_window_merges_and_finalizes(spark, tmpdir):
@@ -986,3 +1013,30 @@ def test_overlap_jobs_runs_all_and_propagates_errors():
     with _pytest.raises(RuntimeError, match="boom"):
         overlap_jobs(boom, lambda: ran.append("b"), lambda: ran.append("c"))
     assert sorted(ran) == ["b", "c"]  # siblings still completed
+
+
+def test_await_drain_fails_loudly(spark, tmpdir):
+    """A stream that does not drain in time is stopped and raises; a stream
+    whose sink fails raises with the sink's error, never partial output."""
+    from pyspark.errors import StreamingQueryException
+
+    from fdp_dynamically_controlled_streams_spark.queries import _await_drain
+
+    endless = spark.readStream.format("rate").load().writeStream.format("noop").start()
+    with pytest.raises(TimeoutError):
+        _await_drain(endless, timeout_s=0.5)
+    assert not endless.isActive
+
+    def reject(bdf, bid):
+        raise ValueError("sink rejected batch")
+
+    write_replay_chunks([_scenario_unified()], f"{tmpdir}/replay")
+    failing = (
+        replay_dir(spark, f"{tmpdir}/replay", UNIFIED_DDL)
+        .writeStream.foreachBatch(reject)
+        .option("checkpointLocation", f"{tmpdir}/chk")
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(StreamingQueryException, match="sink rejected batch"):
+        _await_drain(failing)
