@@ -64,17 +64,12 @@ def engine_conf(
     Batch and streaming shuffles read different keys. With AQE coalescing
     on, a batch shuffle starts at ``INITIAL_PARTITIONS`` and AQE merges the
     small ones. Structured Streaming turns AQE off, so a stateful operator
-    runs on exactly ``SHUFFLE_PARTITIONS`` state partitions and nothing
-    coalesces them. Each state partition is one task per micro-batch, and
-    each task pays a fixed cost whatever its key count: a state-store load
-    and commit, a Python-worker round trip, and PySpark's per-task
-    ``importlib.invalidate_caches()``. So a micro-batch costs roughly
-    (fixed cost per state task) x partitions, plus about 2 ms per key of
-    Arrow->pandas conversion inside PySpark; the controller's own logic
-    costs about 0.1 ms per key. One state partition per slot runs every
-    state task in one wave. The count is pinned when a query's checkpoint
-    is created: a restarted query keeps its count from the offset log
-    whatever the session says.
+    runs on exactly ``SHUFFLE_PARTITIONS`` state partitions. Each is one
+    task per micro-batch with a fixed cost (state-store load and commit,
+    Python-worker round trip), so a micro-batch costs about that fixed cost
+    x partitions plus a per-key cost (see streaming/controller.py). One
+    partition per slot runs all state tasks in one wave. The count is pinned
+    when a query's checkpoint is created; a restarted query keeps it.
 
     An explicit ``shuffle_partitions``, or a ``SHUFFLE_PARTITIONS`` entry in
     ``extra_conf``, sets both keys unless ``extra_conf`` names
@@ -85,10 +80,8 @@ def engine_conf(
         conf[SHUFFLE_PARTITIONS] = conf[INITIAL_PARTITIONS] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
-        if SHUFFLE_PARTITIONS in extra_conf:
-            conf[INITIAL_PARTITIONS] = extra_conf.get(
-                INITIAL_PARTITIONS, extra_conf[SHUFFLE_PARTITIONS]
-            )
+        if SHUFFLE_PARTITIONS in extra_conf and INITIAL_PARTITIONS not in extra_conf:
+            conf[INITIAL_PARTITIONS] = extra_conf[SHUFFLE_PARTITIONS]
     return conf
 
 
