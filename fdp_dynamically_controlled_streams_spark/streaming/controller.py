@@ -21,10 +21,11 @@ spaces beyond executor memory are fine. Each state partition is one task per
 micro-batch, and each task pays a fixed cost whatever its key count: a
 state-store load and commit, one Python-worker round trip, and PySpark's
 per-task ``importlib.invalidate_caches()``. A micro-batch therefore costs
-about (fixed cost per state task) x partitions, plus a cost per key that is
-mostly Arrow->pandas conversion inside PySpark. Measured on 4 cores: about
-0.5 s of task time per state task (0.14 s of it state commit) and 2-3 ms
-per key; the handler below takes under 0.1 ms per key. The partition count
+about (fixed cost per state task) x partitions, plus a cost per key paid
+almost all inside PySpark (Arrow->pandas conversion of each group and its
+state). Measured on 4 cores: about 0.5 s of task time per state task
+(0.14 s of it state commit) and 2-3 ms per key; the handler below takes
+under 0.1 ms per key. The partition count
 is pinned when the query's checkpoint is created: a restarted query reads it
 from its offset log, whatever the session's default is then.
 """
