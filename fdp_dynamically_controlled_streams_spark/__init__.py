@@ -17,7 +17,7 @@ Layout:
   sources/      unified batch/stream source+sink interface (parquet/kafka/rate/memory)
   operators/    controller, relational, dedup, similarity, text, multimodal, asof
   functions/    portable hashing, vector math (engine-agnostic column exprs)
-  streaming/    stateful streaming controller (transformWithStateInPandas path)
+  streaming/    stateful streaming controller (applyInPandasWithState over key groups)
   plans/        plan inspection / scale-posture helpers
 """
 

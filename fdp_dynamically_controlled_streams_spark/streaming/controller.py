@@ -2,32 +2,52 @@
 (SparkStructuredController.scala:96-118) as an ``applyInPandasWithState``
 processor over the tagged-union stream.
 
-Semantics (the spec, shared with operators/controller.py):
-  control record -> state.setting := control, lastAction carried (:100-103)
-  sensor record  -> if setting exists: hysteresis action; emit iff action>=0
-                    and action != lastAction; then lastAction := action (:104-114)
+Semantics (the spec, shared with operators/controller.py), per sensor in
+(seq, record_kind) order, starting with no setting and last_action = -1:
+
+  for record in records:
+      if record is control:                      # (:100-103)
+          setting := record.setting              # last_action carried
+      elif setting exists:                       # (:104-114)
+          action := hysteresis(record.temperature, setting)   # 1, 0 or -1
+          if action >= 0 and action != last_action:
+              emit (sensor_id, action, seq)
+          if action >= 0:
+              last_action := action
 
 Engine rules on top of the reference:
-  * intra-batch ordering is explicit — each micro-batch group is sorted by
-    (seq, record_kind) with control first on ties (the reference leans on
-    undefined union order, SparkStructuredController.scala:69-70 / SURVEY §4.2)
+  * intra-batch ordering is explicit — each sensor's records in a micro-batch
+    are sorted by (seq, record_kind) with control first on ties (the
+    reference leans on undefined union order, SparkStructuredController.scala
+    :69-70 / SURVEY §4.2)
   * state is the managed GroupState (checkpointed) — never a per-task local
     map (the Flink/Kafka-Streams dedup-loss bug, SURVEY §2.4 G3/G4)
 
-Scale: state is per-key (sensor_id), hash-partitioned by the groupBy shuffle
-into ``spark.sql.shuffle.partitions`` state partitions, which default to the
-session's task slots (session.engine_conf); with the RocksDB state store key
-spaces beyond executor memory are fine. Each state partition is one task per
-micro-batch, and each task pays a fixed cost whatever its key count: a
-state-store load and commit, one Python-worker round trip, and PySpark's
-per-task ``importlib.invalidate_caches()``. A micro-batch therefore costs
-about (fixed cost per state task) x partitions, plus a cost per key paid
-almost all inside PySpark (Arrow->pandas conversion of each group and its
-state). Measured on 4 cores: about 0.5 s of task time per state task
-(0.14 s of it state commit) and 2-3 ms per key; the handler below takes
-under 0.1 ms per key. The partition count
-is pinned when the query's checkpoint is created: a restarted query reads it
-from its offset log, whatever the session's default is then.
+Key groups: the query groups by ``key_group = pmod(hash(sensor_id),
+KEY_GROUPS)``, not by sensor, and keeps one state value per key group: sorted
+parallel arrays (sensor_id, last_action, desired, up_delta, down_delta) over
+the group's sensors that have a setting. One handler call runs the spec for
+all of a group's sensors in a micro-batch in one vectorized pass.
+
+Scale: PySpark pays about 1.7 ms per handler call whatever its row count
+(Arrow->pandas conversion of the group's columns, pd.concat of its output),
+while the handler itself takes under 0.1 ms per sensor. A micro-batch calls
+the handler min(active keys, KEY_GROUPS) times instead of once per active
+sensor. State groups are hash-partitioned by the groupBy shuffle into
+``spark.sql.shuffle.partitions`` state partitions, which default to the
+session's task slots (session.engine_conf); each state partition is one task
+per micro-batch with a fixed cost (state-store load and commit, one
+Python-worker round trip), about 0.5 s of task time on 4 cores. Trade-offs:
+  * at most KEY_GROUPS state tasks have work, whatever the partition count;
+  * a touched group rewrites its whole value, so each state write carries
+    about keys / KEY_GROUPS sensors;
+  * KEY_GROUPS and the partition count are pinned by the checkpoint. The
+    plan is rebuilt from Python on every restart, so KEY_GROUPS is a module
+    constant rather than a session setting: a restarted query must send its
+    keys to the groups its checkpoint holds them in. A checkpoint written by
+    the earlier per-sensor state layout fails at start with
+    STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE.
+With the RocksDB state store, key spaces beyond executor memory are fine.
 """
 
 from __future__ import annotations
@@ -35,10 +55,14 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
+
+#: Number of key groups. Pinned by every checkpoint the query writes.
+KEY_GROUPS = 256
 
 #: Output rows: the emitted HeaterControl commands.
 OUTPUT_SCHEMA = T.StructType(
@@ -49,95 +73,146 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-#: Keyed state: (last_action, desired, up_delta, down_delta) — the
-#: TemperatureControlWithLastValue carrier (DataModelTransform.scala:39).
+#: Key-group state: the TemperatureControlWithLastValue carrier
+#: (DataModelTransform.scala:39) of each of the group's sensors that has a
+#: setting, as parallel arrays sorted by sensor_id.
 STATE_SCHEMA = T.StructType(
     [
-        T.StructField("last_action", T.IntegerType()),
-        T.StructField("desired", T.DoubleType()),
-        T.StructField("up_delta", T.DoubleType()),
-        T.StructField("down_delta", T.DoubleType()),
+        T.StructField("sensor_id", T.ArrayType(T.IntegerType())),
+        T.StructField("last_action", T.ArrayType(T.IntegerType())),
+        T.StructField("desired", T.ArrayType(T.DoubleType())),
+        T.StructField("up_delta", T.ArrayType(T.DoubleType())),
+        T.StructField("down_delta", T.ArrayType(T.DoubleType())),
     ]
 )
 
+_STATE_DTYPES = (np.int64, np.int64, np.float64, np.float64, np.float64)
+_SETTING = ("desired", "up_delta", "down_delta")
 
-def _control_temperature(
+
+def _run_starts(a: np.ndarray) -> np.ndarray:
+    """True where ``a`` starts a run of equal values."""
+    m = np.empty(len(a), dtype=bool)
+    m[:1] = True
+    np.not_equal(a[1:], a[:-1], out=m[1:])
+    return m
+
+
+def _advance(
+    st: dict[str, np.ndarray], pdf: pd.DataFrame
+) -> tuple[dict[str, np.ndarray], tuple[np.ndarray, ...]]:
+    """Run the spec over one chunk of a key group's records, starting from
+    the group's state ``st``. Returns the new state and the emitted
+    (sensor_id, command, seq) arrays.
+
+    Records are sorted by (sensor_id, seq, record_kind), so each sensor's
+    records form one contiguous segment. Within a segment the sequential
+    state machine decomposes into array ops: settings forward-fill from
+    control rows (seeded from the stored setting), the hysteresis CASE is a
+    nested ``np.where``, and emit-on-change over the ``action>=0``
+    subsequence is consecutive-duplicate suppression, seeded from the carried
+    last_action (suppressed records equal the previous action by definition,
+    so "last emitted" and "last valid" coincide)."""
+    sid = pdf["sensor_id"].to_numpy()
+    seq = pdf["seq"].to_numpy()
+    kind = pdf["record_kind"].to_numpy()
+    # Engine ordering rule: control (record_kind 0) before data on seq ties.
+    order = np.lexsort((kind, seq, sid))
+    sid, seq = sid[order], seq[order]
+    ctrl = kind[order] == 0
+    setting_in = [pdf[c].to_numpy()[order] for c in _SETTING]
+    temp = pdf["temperature"].to_numpy()[order]
+    n = len(sid)
+
+    first = _run_starts(sid)
+    starts = np.flatnonzero(first)
+    seg = np.cumsum(first) - 1  # segment (sensor) number of each row
+    sensors = sid[starts]
+
+    # Each sensor's stored state, if it has one.
+    pos = np.searchsorted(st["sensor_id"], sensors)
+    known = pos < len(st["sensor_id"])
+    known[known] = st["sensor_id"][pos[known]] == sensors[known]
+    at = pos[known]
+    seed_last = np.full(len(sensors), -1, dtype=np.int64)
+    seed_last[known] = st["last_action"][at]
+    seed_setting = []
+    for c in _SETTING:
+        v = np.full(len(sensors), np.nan)
+        v[known] = st[c][at]
+        seed_setting.append(v)
+
+    # Forward-fill settings: latest control row at or before each row, kept
+    # only when it lies in the row's own segment.
+    idx = np.where(ctrl, np.arange(n), -1)
+    np.maximum.accumulate(idx, out=idx)
+    have = idx >= starts[seg]
+    pick = np.maximum(idx, 0)
+    d, u, w = (
+        np.where(have, x[pick], s[seg]) for x, s in zip(setting_in, seed_setting)
+    )
+
+    rows = np.flatnonzero(~ctrl & ~np.isnan(d))
+    act = np.where(
+        temp[rows] > d[rows] + u[rows], 1, np.where(temp[rows] < d[rows] - w[rows], 0, -1)
+    )
+    valid = act >= 0
+    rows, av = rows[valid], act[valid]
+    g = seg[rows]
+    new_g = _run_starts(g)
+    prev = np.empty_like(av)
+    prev[1:] = av[:-1]
+    prev[new_g] = seed_last[g[new_g]]
+    emit = av != prev
+    out = (sid[rows[emit]], av[emit], seq[rows[emit]])
+
+    last = seed_last.copy()
+    seg_end = np.roll(new_g, -1)  # last valid action of each segment
+    last[g[seg_end]] = av[seg_end]
+    last_ctrl = idx[np.append(starts[1:], n) - 1]
+    got_ctrl = last_ctrl >= starts
+    setting = [
+        np.where(got_ctrl, x[np.maximum(last_ctrl, 0)], s)
+        for x, s in zip(setting_in, seed_setting)
+    ]
+
+    # Merge: stored sensors not in this chunk, plus every chunk sensor that
+    # now has a setting (a sensor without one has nothing to carry).
+    keep = np.ones(len(st["sensor_id"]), dtype=bool)
+    keep[at] = False
+    upd = known | got_ctrl
+    fresh = [sensors, last, *setting]
+    merged = {
+        c: np.concatenate((st[c][keep], v[upd]))
+        for c, v in zip(STATE_SCHEMA.names, fresh)
+    }
+    by_sid = np.argsort(merged["sensor_id"], kind="stable")
+    return {c: v[by_sid] for c, v in merged.items()}, out
+
+
+def _control_key_group(
     key: tuple[Any, ...],
     pdf_iter: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """Per-key micro-batch handler — the spec above, vectorized.
-
-    The sequential state machine decomposes into array ops: settings
-    forward-fill from control rows (latest-value semantics), the hysteresis
-    CASE is a nested ``np.where``, and emit-on-change over the ``action>=0``
-    subsequence is exactly consecutive-duplicate suppression — ``a != shift(a)``
-    with the carried ``last_action`` seeding the first comparison (suppressed
-    records equal the previous action by definition, so tracking "last
-    emitted" and "last valid" coincide)."""
-    import numpy as np
-
-    sensor_id = int(key[0])
-    if state.exists:
-        last_action, desired, up_delta, down_delta = state.get
-        has_setting = desired is not None
-    else:
-        last_action, desired, up_delta, down_delta = -1, None, None, None
-        has_setting = False
-    nan = float("nan")
-
-    out_command: list[Any] = []
-    out_seq: list[Any] = []
-
+    """Key-group micro-batch handler: the spec above for every sensor of the
+    group. PySpark may split a group over several chunks; state carries from
+    one chunk to the next."""
+    stored = state.get if state.exists else ([],) * len(STATE_SCHEMA.names)
+    st = {
+        c: np.asarray(v, dtype=dt)
+        for c, v, dt in zip(STATE_SCHEMA.names, stored, _STATE_DTYPES)
+    }
+    outs = []
     for pdf in pdf_iter:
-        seq = pdf["seq"].to_numpy()
-        kind = pdf["record_kind"].to_numpy()
-        # Engine ordering rule: control (record_kind 0) before data on seq ties.
-        order = np.lexsort((kind, seq))
-        seq, kind = seq[order], kind[order]
-        ctrl = kind == 0
-        des_in = pdf["desired"].to_numpy()[order]
-        up_in = pdf["up_delta"].to_numpy()[order]
-        dn_in = pdf["down_delta"].to_numpy()[order]
-        temp_in = pdf["temperature"].to_numpy()[order]
-        n = len(seq)
-        # Forward-fill control settings by last-control-index propagation.
-        idx = np.where(ctrl, np.arange(n), -1)
-        np.maximum.accumulate(idx, out=idx)
-        have = idx >= 0
-        pick = np.maximum(idx, 0)
-        d = np.where(have, des_in[pick], desired if has_setting else nan)
-        u = np.where(have, up_in[pick], up_delta if has_setting else nan)
-        w = np.where(have, dn_in[pick], down_delta if has_setting else nan)
-        sensor_rows = ~ctrl & ~np.isnan(d)
-        t = temp_in[sensor_rows]
-        ds, us, ws = d[sensor_rows], u[sensor_rows], w[sensor_rows]
-        act = np.where(t > ds + us, 1, np.where(t < ds - ws, 0, -1))
-        valid = act >= 0
-        av, sv = act[valid], seq[sensor_rows][valid]
-        if len(av):
-            emit = av != np.concatenate(([last_action], av[:-1]))
-            out_command.append(av[emit])
-            out_seq.append(sv[emit])
-            last_action = int(av[-1])
-        if ctrl.any():
-            last_ci = idx[-1]
-            desired = float(des_in[last_ci])
-            up_delta = float(up_in[last_ci])
-            down_delta = float(dn_in[last_ci])
-            has_setting = True
-
-    if has_setting:
-        state.update((int(last_action), float(desired), float(up_delta), float(down_delta)))
-    if out_command:
-        cmd = np.concatenate(out_command)
-        yield pd.DataFrame(
-            {
-                "sensor_id": np.full(len(cmd), sensor_id, dtype="int64"),
-                "command": cmd,
-                "seq": np.concatenate(out_seq),
-            }
-        )
+        st, out = _advance(st, pdf)
+        if len(out[0]):
+            outs.append(out)
+    if len(st["sensor_id"]):
+        state.update(tuple(st[c].tolist() for c in STATE_SCHEMA.names))
+    if outs:
+        sid, cmd, seq = (np.concatenate(a) for a in zip(*outs))
+        yield pd.DataFrame({"sensor_id": sid, "command": cmd, "seq": seq})
 
 
 def controller_streaming(unified: DataFrame) -> DataFrame:
@@ -152,8 +227,11 @@ def controller_streaming(unified: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
 
     filtered = unified.where(F.col("sensor_id") >= 0)  # P4 bad-record filter
-    return filtered.groupBy("sensor_id").applyInPandasWithState(
-        _control_temperature,
+    grouped = filtered.withColumn(
+        "key_group", F.pmod(F.hash("sensor_id"), F.lit(KEY_GROUPS))
+    )
+    return grouped.groupBy("key_group").applyInPandasWithState(
+        _control_key_group,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",

@@ -140,6 +140,7 @@ def test_golden_heater_closed_loop_streaming(spark, tmp_path):
     from fdp_dynamically_controlled_streams_spark.operators.controller import (
         unify_streams,
     )
+    from fdp_dynamically_controlled_streams_spark.queries import _await_drain
     from fdp_dynamically_controlled_streams_spark.sources.registry import (
         replay_dir,
         write_replay_chunks,
@@ -179,7 +180,7 @@ def test_golden_heater_closed_loop_streaming(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drain(q, 300)
     got = sorted(
         ((r.sensor_id, r.command, r.seq) for r in collected), key=lambda t: t[2]
     )

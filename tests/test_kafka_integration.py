@@ -103,6 +103,7 @@ def test_controller_roundtrip_through_real_topics(spark, kafka_gate):
         decode_control_udf,
         encode_heater_control_udf,
     )
+    from fdp_dynamically_controlled_streams_spark.queries import _await_drain
     from fdp_dynamically_controlled_streams_spark.streaming.controller import (
         controller_streaming,
     )
@@ -139,7 +140,7 @@ def test_controller_roundtrip_through_real_topics(spark, kafka_gate):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drain(q, 300)
 
     # Read back the emitted HeaterControl bytes and compare command counts
     # with the batch twin (per-key totals are replay-order invariant).

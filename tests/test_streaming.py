@@ -8,14 +8,18 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState
 
 from fdp_dynamically_controlled_streams_spark.operators.controller import (
     controller_batch,
     unify_streams,
 )
+from fdp_dynamically_controlled_streams_spark.queries import _await_drain
 from fdp_dynamically_controlled_streams_spark.schemas import UNIFIED_SCHEMA
 from fdp_dynamically_controlled_streams_spark.sources.registry import (
     replay_dir,
@@ -23,6 +27,9 @@ from fdp_dynamically_controlled_streams_spark.sources.registry import (
     write_replay_chunks_df,
 )
 from fdp_dynamically_controlled_streams_spark.streaming.controller import (
+    KEY_GROUPS,
+    STATE_SCHEMA,
+    _control_key_group,
     controller_streaming,
 )
 
@@ -76,11 +83,11 @@ def _scenario_unified() -> pd.DataFrame:
 EXPECTED = [(1, 1, 2), (1, 0, 5), (2, 1, 7), (1, 1, 10), (2, 0, 11), (1, 0, 12)]
 
 
-def _run_stream(spark, chunks, tmp, checkpoint=None, runtime=controller_streaming):
+def _run_stream(spark, chunks, tmp, checkpoint=None):
     data_dir = f"{tmp}/replay"
     write_replay_chunks(chunks, data_dir)
     unified = replay_dir(spark, data_dir, UNIFIED_DDL, files_per_trigger=1)
-    out = runtime(unified)
+    out = controller_streaming(unified)
     collected: list = []
     q = (
         out.writeStream.outputMode("update")
@@ -89,7 +96,7 @@ def _run_stream(spark, chunks, tmp, checkpoint=None, runtime=controller_streamin
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    _await_drain(q, 180)
     return sorted((r.sensor_id, r.command, r.seq) for r in collected)
 
 
@@ -106,26 +113,6 @@ def test_streaming_matches_batch_twin_single_batch(spark, tmpdir):
     assert got == sorted(EXPECTED)
 
 
-def test_tws_runtime_matches_spec_across_batches(spark, tmpdir):
-    """transformWithStateInPandas (Spark 4 runtime) — same semantics, third
-    runtime: output must equal the applyInPandasWithState + batch results."""
-    from fdp_dynamically_controlled_streams_spark.streaming.controller_tws import (
-        TWS_AVAILABLE,
-        controller_streaming_tws,
-    )
-
-    if not TWS_AVAILABLE:
-        pytest.skip(
-            "transformWithState state protocol needs the protobuf package "
-            "(absent in this container); applyInPandasWithState covers the "
-            "same semantics in test_streaming_state_across_micro_batches"
-        )
-    pdf = _scenario_unified()
-    chunks = [pdf.iloc[:4], pdf.iloc[4:9], pdf.iloc[9:]]
-    got = _run_stream(spark, chunks, tmpdir, runtime=controller_streaming_tws)
-    assert got == sorted(EXPECTED)
-
-
 def test_streaming_state_across_micro_batches(spark, tmpdir):
     """Split mid-stream: setting + lastAction must survive batch boundaries."""
     pdf = _scenario_unified()
@@ -134,9 +121,9 @@ def test_streaming_state_across_micro_batches(spark, tmpdir):
     assert got == sorted(EXPECTED)
 
 
-def test_streaming_equals_batch_operator(spark, tmpdir):
-    """Same semantics, two runtimes: streaming output == batch twin output."""
-    pdf = _scenario_unified()
+def _batch_twin_rows(spark, pdf):
+    """The batch twin's sorted (sensor_id, command, seq) rows for a
+    tagged-union frame."""
     control_pdf = pdf[pdf.record_kind == 0][
         ["sensor_id", "desired", "up_delta", "down_delta", "seq"]
     ]
@@ -145,10 +132,16 @@ def test_streaming_equals_batch_operator(spark, tmpdir):
         control_pdf, "sensor_id int, desired double, up_delta double, down_delta double, seq long"
     )
     sensor = spark.createDataFrame(sensor_pdf, "sensor_id int, temperature double, seq long")
-    batch = sorted(
+    return sorted(
         (r.sensor_id, r.command, r.seq)
         for r in controller_batch(control, sensor).collect()
     )
+
+
+def test_streaming_equals_batch_operator(spark, tmpdir):
+    """Same semantics, two runtimes: streaming output == batch twin output."""
+    pdf = _scenario_unified()
+    batch = _batch_twin_rows(spark, pdf)
     got = _run_stream(spark, [pdf.iloc[:6], pdf.iloc[6:]], tmpdir)
     assert got == batch == sorted(EXPECTED)
 
@@ -258,22 +251,24 @@ def test_progress_listener_records_batches_and_state(spark, tmpdir):
     assert any((b.state_rows or 0) > 0 for b in rec.batches)  # keyed state seen
 
 
-def _resume_controller(spark, tmpdir, partitions=(None, None)):
-    """Run the scenario's first six rows, stop, append the rest as a new
-    chunk and resume from the same checkpoint. ``partitions`` gives the
-    session's shuffle-partition count for each start (None keeps the
-    session's); the session's count is restored afterwards. Returns the rows
-    emitted by the first run, the rows emitted by both, and the last
-    progress of each run."""
+def _resume_controller(spark, tmpdir, chunks=None, split=1, partitions=(None, None)):
+    """Replay ``chunks[:split]``, stop, append the remaining chunks and
+    resume from the same checkpoint. ``chunks`` defaults to the scenario cut
+    after its first six rows. ``partitions`` gives the session's
+    shuffle-partition count for each start (None keeps the session's); the
+    session's count is restored afterwards. Returns the rows emitted by the
+    first run, the rows emitted by both, and the last progress of each run."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pdf = _scenario_unified()
+    if chunks is None:
+        pdf = _scenario_unified()
+        chunks = [pdf.iloc[:6], pdf.iloc[6:]]
     data_dir = f"{tmpdir}/replay"
     chk = f"{tmpdir}/chk"
-    write_replay_chunks([pdf.iloc[:6]], data_dir)
+    write_replay_chunks(chunks[:split], data_dir)
     collected: list = []
     progress: list = []
     key = "spark.sql.shuffle.partitions"
@@ -290,15 +285,16 @@ def _resume_controller(spark, tmpdir, partitions=(None, None)):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        _await_drain(q, 180)
         progress.append(q.lastProgress)
 
     try:
         start(partitions[0])
         first = sorted((r.sensor_id, r.command, r.seq) for r in collected)
-        fp = f"{data_dir}/chunk-99999.parquet"
-        pq.write_table(pa.Table.from_pandas(pdf.iloc[6:], preserve_index=False), fp)
-        os.utime(fp, (1_700_000_100, 1_700_000_100))
+        for i, chunk in enumerate(chunks[split:]):
+            fp = f"{data_dir}/chunk-{90000 + i}.parquet"
+            pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False), fp)
+            os.utime(fp, (1_700_000_100 + i, 1_700_000_100 + i))
         start(partitions[1])
     finally:
         spark.conf.set(key, prev)
@@ -321,6 +317,123 @@ def test_resume_keeps_checkpoint_state_partitions(spark, tmpdir):
     assert first == sorted([(1, 1, 2), (1, 0, 5)])
     assert got == sorted(EXPECTED)
     assert [p["stateOperators"][0]["numShufflePartitions"] for p in progress] == [3, 3]
+
+
+def _random_unified(rng, n_keys, n_rows):
+    """Random tagged-union rows over ``n_keys`` sensors in seq order: about
+    10% control; half the readings that follow a control share its seq and
+    sensor (a seq tie); the top tenth of the sensors never get a setting."""
+    seq = np.arange(n_rows, dtype=np.int64)
+    sid = rng.integers(0, n_keys, n_rows).astype(np.int32)
+    ctrl = (rng.random(n_rows) < 0.1) & (sid < n_keys * 9 // 10)
+    tie = np.flatnonzero(ctrl[:-1] & ~ctrl[1:] & (rng.random(n_rows - 1) < 0.5)) + 1
+    sid[tie], seq[tie] = sid[tie - 1], seq[tie - 1]
+    nan = np.full(n_rows, np.nan)
+    return pd.DataFrame(
+        {
+            "sensor_id": sid,
+            "record_kind": np.where(ctrl, 0, 1).astype(np.int32),
+            "temperature": np.where(ctrl, nan, np.round(45 + rng.normal(0, 4, n_rows), 2)),
+            "desired": np.where(ctrl, np.round(45 + rng.uniform(-5, 5, n_rows), 1), nan),
+            "up_delta": np.where(ctrl, rng.choice([0.5, 1.0, 2.0], n_rows), nan),
+            "down_delta": np.where(ctrl, rng.choice([0.5, 1.0, 2.0], n_rows), nan),
+            "seq": seq,
+        }
+    )
+
+
+def _spec_reference(records):
+    """The sequential per-key loop of ``streaming.controller``'s docstring,
+    over records in (seq, record_kind) order. Returns the sorted emitted
+    rows and each set sensor's final (last_action, desired, up_delta,
+    down_delta)."""
+    setting, last, out = {}, {}, []
+    for r in sorted(records, key=lambda r: (r.seq, r.record_kind)):
+        if r.record_kind == 0:
+            setting[r.sensor_id] = (r.desired, r.up_delta, r.down_delta)
+        elif r.sensor_id in setting:
+            d, u, w = setting[r.sensor_id]
+            action = 1 if r.temperature > d + u else 0 if r.temperature < d - w else -1
+            if action >= 0 and action != last.get(r.sensor_id, -1):
+                out.append((r.sensor_id, action, r.seq))
+            if action >= 0:
+                last[r.sensor_id] = action
+    return sorted(out), {k: (last.get(k, -1), *v) for k, v in setting.items()}
+
+
+def _group_state(value):
+    """The GroupState PySpark hands the handler for one key group; ``value``
+    is the stored state row, or None."""
+    return GroupState(
+        optionalValue=value,
+        batchProcessingTimeMs=0,
+        eventTimeWatermarkMs=-1,
+        timeoutConf="NoTimeout",
+        hasTimedOut=False,
+        watermarkPresent=False,
+        defined=value is not None,
+        updated=False,
+        removed=False,
+        timeoutTimestamp=-1,
+        keyAsUnsafe=b"",
+        valueSchema=STATE_SCHEMA,
+    )
+
+
+def _cut(pdf, n, rng=None):
+    """``pdf`` as ``n`` contiguous pieces, at random cuts when ``rng`` is
+    given, else evenly."""
+    if rng is None:
+        cuts = np.linspace(0, len(pdf), n + 1).astype(int)[1:-1]
+    else:
+        cuts = np.sort(rng.choice(np.arange(1, len(pdf)), n - 1, replace=False))
+    bounds = [0, *cuts, len(pdf)]
+    return [pdf.iloc[a:b] for a, b in zip(bounds, bounds[1:])]
+
+
+@pytest.mark.parametrize("seed", range(5))
+def test_key_group_handler_matches_per_key_spec(seed):
+    """No Spark: 40 sensors share one key group through four handler calls,
+    each split over 1-3 chunks of shuffled rows, with the state carried from
+    call to call as a stored row. Emitted rows and every sensor's final
+    state equal the sequential per-key spec. The sensors share the group's
+    arrays, so a setting or last_action leaking from one sensor to another
+    changes the output or the state."""
+    rng = np.random.default_rng(seed)
+    value, got, fed = None, [], []
+    for call in _cut(_random_unified(rng, n_keys=40, n_rows=1200), 4):
+        chunks = [c.sample(frac=1.0, random_state=rng) for c in _cut(call, rng.integers(1, 4), rng)]
+        fed += chunks
+        state = _group_state(value)
+        for out in _control_key_group((0,), iter(chunks), state):
+            got += zip(out.sensor_id, out.command, out.seq)
+        if state.exists:
+            value = Row(*state.get)
+    want, want_state = _spec_reference(pd.concat(fed).itertuples())
+    assert sorted(got) == want
+    sensors, *carried = value
+    assert dict(zip(sensors, zip(*carried))) == want_state
+
+
+def test_streaming_multi_key_matches_batch_and_resumes(spark, tmpdir):
+    """300 sensors over four micro-batches, so most sensors share their key
+    group with others: the output equals the batch twin, both straight
+    through and when the query stops after two micro-batches and resumes
+    from its checkpoint."""
+    pdf = _random_unified(np.random.default_rng(7), n_keys=300, n_rows=4000)
+    groups = (
+        spark.range(300)
+        .select(F.pmod(F.hash(F.col("id").cast("int")), F.lit(KEY_GROUPS)).alias("g"))
+        .groupBy("g")
+        .count()
+    )
+    assert groups.where("count > 1").agg(F.sum("count")).first()[0] > 150
+    chunks = _cut(pdf, 4)
+    want = _batch_twin_rows(spark, pdf)
+    assert len(want) > 300
+    assert _run_stream(spark, chunks, f"{tmpdir}/straight") == want
+    _, resumed, _ = _resume_controller(spark, f"{tmpdir}/resumed", chunks, split=2)
+    assert resumed == want
 
 
 def test_session_window_merges_and_finalizes(spark, tmpdir):
