@@ -31,8 +31,10 @@ all of a group's sensors in a micro-batch in one vectorized pass.
 
 Scale: PySpark pays about 1.7 ms per handler call whatever its row count
 (Arrow->pandas conversion of the group's columns, pd.concat of its output),
-while the handler itself takes about 0.5 us per row (5.2 ms for 10,000 rows
-over a group of 4,000 sensors; SCALE.md rule 7). A micro-batch calls
+while the handler itself takes about 0.3 us per row plus a part that grows
+with the group's stored sensors (4.7 ms for 10,000 rows over a group of
+4,000 sensors, and 0.8 ms more to unpickle and pickle its state; SCALE.md
+rule 7 has end-to-end figures). A micro-batch calls
 the handler min(active keys, KEY_GROUPS) times instead of once per active
 sensor. State groups are hash-partitioned by the groupBy shuffle into
 ``spark.sql.shuffle.partitions`` state partitions, which default to the
@@ -41,7 +43,8 @@ per micro-batch with a fixed cost (state-store load and commit, one
 Python-worker round trip), about 0.5 s of task time on 4 cores. Trade-offs:
   * at most KEY_GROUPS state tasks have work, whatever the partition count;
   * a touched group rewrites its whole value, so each state write carries
-    about keys / KEY_GROUPS sensors;
+    about keys / KEY_GROUPS sensors (131 KB at 4,000 sensors, where the
+    per-sensor layout wrote 0.9 KB for 10 touched sensors);
   * KEY_GROUPS and the partition count are pinned by the checkpoint. The
     plan is rebuilt from Python on every restart, so KEY_GROUPS is a module
     constant rather than a session setting: a restarted query must send its
@@ -102,8 +105,8 @@ def _run_starts(a: np.ndarray) -> np.ndarray:
 def _advance(
     st: dict[str, np.ndarray], pdf: pd.DataFrame
 ) -> tuple[dict[str, np.ndarray], tuple[np.ndarray, ...]]:
-    """Run the spec over one chunk of a key group's records, starting from
-    the group's state ``st``. Returns the new state and the emitted
+    """Run the spec over a key group's records of one micro-batch, starting
+    from the group's state ``st``. Returns the new state and the emitted
     (sensor_id, command, seq) arrays.
 
     Records are sorted by (sensor_id, seq, record_kind), so each sensor's
@@ -177,7 +180,7 @@ def _advance(
         for x, s in zip(setting_in, seed_setting)
     ]
 
-    # Merge: stored sensors not in this chunk, plus every chunk sensor that
+    # Merge: stored sensors not in this batch, plus every batch sensor that
     # now has a setting (a sensor without one has nothing to carry).
     keep = np.ones(len(st["sensor_id"]), dtype=bool)
     keep[at] = False
@@ -197,22 +200,19 @@ def _control_key_group(
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
     """Key-group micro-batch handler: the spec above for every sensor of the
-    group. PySpark may split a group over several chunks; state carries from
-    one chunk to the next."""
+    group. PySpark may split a group over several chunks in no particular
+    order (a union's sources arrive one after another, not in seq order), so
+    the chunks are joined and the spec runs once over all of them; the cost
+    is holding one group's rows of one micro-batch at once."""
     stored = state.get if state.exists else ([],) * len(STATE_SCHEMA.names)
     st = {
         c: np.asarray(v, dtype=dt)
         for c, v, dt in zip(STATE_SCHEMA.names, stored, _STATE_DTYPES)
     }
-    outs = []
-    for pdf in pdf_iter:
-        st, out = _advance(st, pdf)
-        if len(out[0]):
-            outs.append(out)
+    st, (sid, cmd, seq) = _advance(st, pd.concat(list(pdf_iter)))
     if len(st["sensor_id"]):
         state.update(tuple(st[c].tolist() for c in STATE_SCHEMA.names))
-    if outs:
-        sid, cmd, seq = (np.concatenate(a) for a in zip(*outs))
+    if len(sid):
         yield pd.DataFrame({"sensor_id": sid, "command": cmd, "seq": seq})
 
 

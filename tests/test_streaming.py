@@ -394,15 +394,16 @@ def _cut(pdf, n, rng=None):
 @pytest.mark.parametrize("seed", range(5))
 def test_key_group_handler_matches_per_key_spec(seed):
     """No Spark: 40 sensors share one key group through four handler calls,
-    each split over 1-3 chunks of shuffled rows, with the state carried from
-    call to call as a stored row. Emitted rows and every sensor's final
-    state equal the sequential per-key spec. The sensors share the group's
-    arrays, so a setting or last_action leaking from one sensor to another
-    changes the output or the state."""
+    each call's rows shuffled and then split over 1-3 chunks, so chunks
+    overlap in seq as PySpark's may, with the state carried from call to
+    call as a stored row. Emitted rows and every sensor's final state equal
+    the sequential per-key spec. The sensors share the group's arrays, so a
+    setting or last_action leaking from one sensor to another changes the
+    output or the state."""
     rng = np.random.default_rng(seed)
     value, got, fed = None, [], []
     for call in _cut(_random_unified(rng, n_keys=40, n_rows=1200), 4):
-        chunks = [c.sample(frac=1.0, random_state=rng) for c in _cut(call, rng.integers(1, 4), rng)]
+        chunks = _cut(call.sample(frac=1.0, random_state=rng), rng.integers(1, 4), rng)
         fed += chunks
         state = _group_state(value)
         for out in _control_key_group((0,), iter(chunks), state):
@@ -419,7 +420,9 @@ def test_streaming_multi_key_matches_batch_and_resumes(spark, tmpdir):
     """300 sensors over four micro-batches, so most sensors share their key
     group with others: the output equals the batch twin, both straight
     through and when the query stops after two micro-batches and resumes
-    from its checkpoint."""
+    from its checkpoint. Each micro-batch's rows are shuffled, and the
+    straight run cuts Arrow chunks at 3 rows, so PySpark hands the handler
+    a group's records over several chunks out of seq order."""
     pdf = _random_unified(np.random.default_rng(7), n_keys=300, n_rows=4000)
     groups = (
         spark.range(300)
@@ -428,10 +431,16 @@ def test_streaming_multi_key_matches_batch_and_resumes(spark, tmpdir):
         .count()
     )
     assert groups.where("count > 1").agg(F.sum("count")).first()[0] > 150
-    chunks = _cut(pdf, 4)
+    chunks = [c.sample(frac=1.0, random_state=7) for c in _cut(pdf, 4)]
     want = _batch_twin_rows(spark, pdf)
     assert len(want) > 300
-    assert _run_stream(spark, chunks, f"{tmpdir}/straight") == want
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        assert _run_stream(spark, chunks, f"{tmpdir}/straight") == want
+    finally:
+        spark.conf.set(key, prev)
     _, resumed, _ = _resume_controller(spark, f"{tmpdir}/resumed", chunks, split=2)
     assert resumed == want
 
