@@ -85,9 +85,11 @@ def compact_parquet(
     target_file_bytes: int = 128 * 1024 * 1024,
     sort_key: str | None = None,
 ) -> int:
-    """Rewrite a parquet directory to ≈``target_file_bytes`` files; returns
-    the output file count. With ``sort_key``, range-partitions on it so the
-    rewrite preserves (or establishes) clustering; otherwise round-robin."""
+    """Rewrite a parquet directory into ``ceil(input_bytes /
+    target_file_bytes)`` files (at least one), each holding about
+    ``input_bytes / n`` <= the target; returns the output file count. With
+    ``sort_key``, range-partitions on it so the rewrite preserves (or
+    establishes) clustering; otherwise round-robin."""
     total = sum(p.stat().st_size for p in Path(src).glob("**/*.parquet"))
     n = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(src)

@@ -48,6 +48,12 @@ from fdp_dynamically_controlled_streams_spark.functions.exactround import (
     dratio_sql as _dratio_sql,
     dratio_unscaled_sql as _dratio_unscaled_sql,
 )
+from fdp_dynamically_controlled_streams_spark.streaming.drain import (
+    _read_replay_out,
+    _replay_conf,
+    drain,
+    drain_to_parquet,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -98,55 +104,6 @@ def oracle_queries() -> dict[str, str]:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _replay_conf(spark: SparkSession, partitions: int):
-    """Per-streaming-query deploy conf for the finite file replays: state
-    partition count sized to the replay's key cardinality, and the
-    HDFS-backed (in-memory + snapshot) state store instead of the session's
-    RocksDB default — RocksDB is the right posture for 100 TB key spaces
-    (session.ENGINE_CONF), but each instance pays open/commit overhead per
-    store per partition per micro-batch, which dominates a small replay.
-    Both settings are read at query start and restored after."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_prov)
-
-
-def _await_drain(q, timeout_s: float = 300) -> None:
-    """Wait for an availableNow query to drain, so that an entry never
-    returns partial output: on timeout, stop the query and raise; a query
-    that failed raises its exception."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"streaming query {q.id} did not drain in {timeout_s} s")
-    exc = q.exception()
-    if exc is not None:
-        raise exc
-
-
-def _read_replay_out(spark: SparkSession, ddl: str, path: str) -> DataFrame:
-    """Read back a replay sink directory. A replay that produced zero
-    micro-batches never creates the directory — return an empty typed frame
-    instead of raising PATH_NOT_FOUND (latent edge flagged in r2 ADVICE)."""
-    import os
-
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], ddl)
-    return spark.read.schema(ddl).parquet(path)
 
 
 # Decimal-exact money aggregation (see module docstring).
@@ -1807,15 +1764,7 @@ def stream_minhash_index_maintenance_replay(
             _upsert,
         )
 
-    with _replay_conf(spark, partitions=8):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(_proc)
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    drain(stream, _proc, f"{tmp}/chk", partitions=8)
     return _read_replay_out(
         spark,
         "doc_id long, n_matches long, best_est double, is_new boolean",
@@ -2291,15 +2240,7 @@ def stream_exact_substring_incremental_replay(
             bdf, cbase, ch, length=24
         ).write.mode("append").parquet(out)
 
-    with _replay_conf(spark, partitions=8):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(_proc)
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    drain(stream, _proc, f"{tmp}/chk", partitions=8)
     return _read_replay_out(
         spark,
         "doc_id long, span_start long, span_end long, span_len long",
@@ -2413,15 +2354,7 @@ def stream_exact_substring_index_maintenance_replay(
             )
         )
 
-    with _replay_conf(spark, partitions=8):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(_proc)
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    drain(stream, _proc, f"{tmp}/chk", partitions=8)
     return _read_replay_out(
         spark,
         "doc_id long, span_start long, span_end long, span_len long",
@@ -2664,15 +2597,7 @@ def stream_embedding_index_maintenance_replay(
             _upsert,
         )
 
-    with _replay_conf(spark, partitions=8):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(_proc)
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    drain(stream, _proc, f"{tmp}/chk", partitions=8)
     return _read_replay_out(
         spark,
         "vec_id long, n_matches long, best_cos double, is_new boolean",
@@ -3962,22 +3887,13 @@ def controller_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "desired double, up_delta double, down_delta double, seq long",
         files_per_trigger=1,
     )
-    out = f"{tmp}/out"
-    with _replay_conf(spark, partitions=16):
-        q = (
-            controller_streaming(stream)
-            .writeStream.outputMode("update")
-            # Sink = executor-parallel parquet append, never a driver collect
-            # (SCALE.md rule 1); the read-back below is lazy.
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q)
-    return _read_replay_out(spark, "sensor_id int, command int, seq long", out).select(
-        "sensor_id", "command", "seq"
-    )
+    return drain_to_parquet(
+        controller_streaming(stream),
+        tmp,
+        "sensor_id int, command int, seq long",
+        output_mode="update",
+        partitions=16,
+    ).select("sensor_id", "command", "seq")
 
 
 @query(
@@ -4165,22 +4081,14 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         files_per_trigger=1,
     )
     deduped = stream.dropDuplicates(["user_id", "event_type"])
-    out = f"{tmp}/out"
     # Measured at sf0.1: 4 state partitions beat 8 (commit overhead > state
     # volume at replay scale); partition-invariant, oracle-checked.
-    with _replay_conf(spark, partitions=4):
-        q = (
-            deduped.select("user_id", "event_type")
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(spark, "user_id long, event_type string", out).select(
-        "user_id", "event_type"
-    )
+    return drain_to_parquet(
+        deduped.select("user_id", "event_type"),
+        tmp,
+        "user_id long, event_type string",
+        partitions=4,
+    ).select("user_id", "event_type")
 
 
 # =========================================================================
@@ -6541,17 +6449,13 @@ def stream_mv_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(18,4)")).alias("_sum"),
     )
     table = f"{tmp}/mv"
-    with _replay_conf(spark, partitions=8):
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(
-                upsert_sink(spark, table, ["event_type"], ["n_events"])
-            )
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    drain(
+        agg,
+        upsert_sink(spark, table, ["event_type"], ["n_events"]),
+        f"{tmp}/chk",
+        output_mode="update",
+        partitions=8,
+    )
     snap = read_snapshot(spark, table)
     return snap.select(
         "event_type",
@@ -6622,15 +6526,13 @@ def stream_degree_count_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("deg"))
     )
     table = f"{tmp}/degrees"
-    with _replay_conf(spark, partitions=8):
-        q = (
-            deg.writeStream.outputMode("update")
-            .foreachBatch(upsert_sink(spark, table, ["user_id"], ["deg"]))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    drain(
+        deg,
+        upsert_sink(spark, table, ["user_id"], ["deg"]),
+        f"{tmp}/chk",
+        output_mode="update",
+        partitions=8,
+    )
     snap = read_snapshot(spark, table)
     return snap.select(F.col("user_id").alias("node"), "deg")
 
@@ -6759,22 +6661,13 @@ def stream_tumbling_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    out = f"{tmp}/out"
     # Measured at sf0.1: 4 state partitions beat 8 (commit overhead > state
     # volume at replay scale); partition-invariant, oracle-checked.
-    with _replay_conf(spark, partitions=4):
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark,
+    return drain_to_parquet(
+        agg,
+        tmp,
         "window_start string, event_type string, n_events long, total_value double",
-        out,
+        partitions=4,
     ).select("window_start", "event_type", "n_events", "total_value")
 
 
@@ -6859,21 +6752,12 @@ def stream_ohlc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    out = f"{tmp}/out"
-    with _replay_conf(spark, partitions=4):
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark,
+    return drain_to_parquet(
+        agg,
+        tmp,
         "window_start string, event_type string, open double, high double,"
         " low double, close double, n_events long",
-        out,
+        partitions=4,
     ).select(
         "window_start", "event_type", "open", "high", "low", "close", "n_events"
     )
@@ -6958,15 +6842,7 @@ def stream_windowed_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    with _replay_conf(spark, partitions=4):
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(rank_on_close)
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    drain(agg, rank_on_close, f"{tmp}/chk", partitions=4)
     return _read_replay_out(
         spark,
         "window_start string, event_type string, n_events long, rnk int",
@@ -7040,22 +6916,13 @@ def stream_sliding_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    out = f"{tmp}/out"
     # Measured at sf0.1: 4 state partitions beat 8 (commit overhead > state
     # volume at replay scale); partition-invariant, oracle-checked.
-    with _replay_conf(spark, partitions=4):
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark,
+    return drain_to_parquet(
+        agg,
+        tmp,
         "window_start string, event_type string, n_events long, total_value double",
-        out,
+        partitions=4,
     ).select("window_start", "event_type", "n_events", "total_value")
 
 
@@ -7127,23 +6994,16 @@ def stream_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("l_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
         F.date_format("r_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
     )
-    out = f"{tmp}/out"
     # Stream-stream join keeps 4 state stores per shuffle partition per
     # micro-batch, so partition count is the store-commit multiplier here:
     # measured at sf0.1, 4 partitions beat 8 by ~20% (commit overhead
     # dominates this replay's state volume; results are partition-invariant,
     # oracle-checked at both SFs).
-    with _replay_conf(spark, partitions=4):
-        q = (
-            shaped.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark, "user_id long, purchase_ts string, click_ts string", out
+    return drain_to_parquet(
+        shaped,
+        tmp,
+        "user_id long, purchase_ts string, click_ts string",
+        partitions=4,
     ).select("user_id", "purchase_ts", "click_ts")
 
 
@@ -7220,18 +7080,11 @@ def stream_interval_left_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
         F.date_format("l_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
         F.date_format("r_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
     )
-    out = f"{tmp}/out"
-    with _replay_conf(spark, partitions=4):
-        q = (
-            shaped.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark, "user_id long, purchase_ts string, click_ts string", out
+    return drain_to_parquet(
+        shaped,
+        tmp,
+        "user_id long, purchase_ts string, click_ts string",
+        partitions=4,
     ).select("user_id", "purchase_ts", "click_ts")
 
 
@@ -7316,18 +7169,11 @@ def stream_interval_full_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
         F.date_format("l_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
         F.date_format("r_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
     )
-    out = f"{tmp}/out"
-    with _replay_conf(spark, partitions=4):
-        q = (
-            shaped.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark, "user_id long, purchase_ts string, click_ts string", out
+    return drain_to_parquet(
+        shaped,
+        tmp,
+        "user_id long, purchase_ts string, click_ts string",
+        partitions=4,
     ).select("user_id", "purchase_ts", "click_ts")
 
 
@@ -7398,18 +7244,11 @@ def stream_interval_semi_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("l_user_id").alias("user_id"),
         F.date_format("l_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
     )
-    out = f"{tmp}/out"
-    with _replay_conf(spark, partitions=4):
-        q = (
-            shaped.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark, "user_id long, purchase_ts string", out
+    return drain_to_parquet(
+        shaped,
+        tmp,
+        "user_id long, purchase_ts string",
+        partitions=4,
     ).select("user_id", "purchase_ts")
 
 
@@ -7755,15 +7594,7 @@ def stream_bm25_index_maintenance_replay(
             _upsert,
         )
 
-    with _replay_conf(spark, partitions=8):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(_proc)
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    drain(stream, _proc, f"{tmp}/chk", partitions=8)
     return _read_replay_out(
         spark,
         "query_id long, doc_id long, rank int, score double",
@@ -8351,16 +8182,13 @@ def stream_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id long, event_type string, ts timestamp",
         files_per_trigger=1,
     )
-    with _replay_conf(spark, partitions=4):
-        q = (
-            stream.dropDuplicates(["user_id", "event_type"])
-            .writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    # the sink must execute each batch so the dedup state is committed
+    drain(
+        stream.dropDuplicates(["user_id", "event_type"]),
+        lambda bdf, _bid: bdf.write.format("noop").mode("append").save(),
+        f"{tmp}/chk",
+        partitions=4,
+    )
     return (
         spark.read.format("statestore")
         .load(f"{tmp}/chk")
@@ -8421,19 +8249,16 @@ def stream_cms_counters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.array(*_cms_cells(F.col("v"), CMS_D, CMS_W))).alias("r", "c")
     )
     out = f"{tmp}/out"
-    with _replay_conf(spark, partitions=4):
-        q = (
+    drain(
+        (
             cells.groupBy("r", "c")
             .agg(F.count(F.lit(1)).alias("cnt"))
-            .writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda bdf, bid: bdf.write.mode("overwrite").parquet(out)
-            )
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        ),
+        lambda bdf, _bid: bdf.write.mode("overwrite").parquet(out),
+        f"{tmp}/chk",
+        output_mode="complete",
+        partitions=4,
+    )
     counters = _read_replay_out(spark, "r int, c bigint, cnt long", out)
 
     base = events.select(F.col("user_id").cast("string").alias("v"))
@@ -8506,19 +8331,16 @@ def stream_hdr_quantiles_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     buckets = skt.hdr_bucket_rows(stream, "value")
     out = f"{tmp}/out"
-    with _replay_conf(spark, partitions=4):
-        q = (
+    drain(
+        (
             buckets.groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("cnt"))
-            .writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda bdf, bid: bdf.write.mode("overwrite").parquet(out)
-            )
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        ),
+        lambda bdf, _bid: bdf.write.mode("overwrite").parquet(out),
+        f"{tmp}/chk",
+        output_mode="complete",
+        partitions=4,
+    )
     counts = _read_replay_out(spark, "bucket bigint, cnt long", out)
     return skt.hdr_quantiles_from_counts(counts)
 
@@ -8598,21 +8420,12 @@ def stream_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         files_per_trigger=1,
     )
     smoothed = ewma_streaming(stream, alpha=0.2)
-    out = f"{tmp}/out"
     # Python-heavy stateful op: same knee as the CUSUM replay (16 parts).
-    with _replay_conf(spark, partitions=16):
-        q = (
-            smoothed.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark,
+    return drain_to_parquet(
+        smoothed,
+        tmp,
         "user_id long, event_id long, value double, ewma double",
-        out,
+        partitions=16,
     ).select(
         "user_id",
         "event_id",
@@ -8669,25 +8482,16 @@ def stream_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         files_per_trigger=1,
     )
     flagged = cusum_streaming(stream, drift=60.0, threshold=200.0)
-    out = f"{tmp}/out"
     # Python-heavy stateful op (one pandas call per key per batch): unlike
     # the JVM-state replays (4 partitions optimal — commit overhead bound),
     # this one wants worker parallelism. Measured at sf0.1: 4 -> 5.2 s,
     # 8 -> 4.6 s, 16 -> 4.0 s, 32 -> 4.0 s; 16 is the knee.
-    with _replay_conf(spark, partitions=16):
-        q = (
-            flagged.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark,
+    return drain_to_parquet(
+        flagged,
+        tmp,
         "user_id long, ts timestamp, event_id long, value double, "
         "cusum double, flagged boolean",
-        out,
+        partitions=16,
     ).select(
         "user_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
@@ -10417,22 +10221,13 @@ def stream_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "session_start", "n_events", "duration_sec")
     )
-    out = f"{tmp}/out"
     # Measured at sf0.1: 4 state partitions beat 8 (commit overhead > state
     # volume at replay scale); partition-invariant, oracle-checked.
-    with _replay_conf(spark, partitions=4):
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark,
+    return drain_to_parquet(
+        agg,
+        tmp,
         "user_id long, session_start string, n_events long, duration_sec long",
-        out,
+        partitions=4,
     ).select("user_id", "session_start", "n_events", "duration_sec")
 
 
@@ -10494,19 +10289,11 @@ def controller_static_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         "sensor_id int, temperature double, seq long",
         files_per_trigger=1,
     )
-    out = f"{tmp}/out"
-    with _replay_conf(spark, partitions=8):
-        q = (
-            controller_stream_static(spark, stream, f"{fix}/control")
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return _read_replay_out(
-        spark, "sensor_id int, temperature double, command int, seq long", out
+    return drain_to_parquet(
+        controller_stream_static(spark, stream, f"{fix}/control"),
+        tmp,
+        "sensor_id int, temperature double, command int, seq long",
+        partitions=8,
     ).select("sensor_id", "temperature", "command", "seq")
 
 

@@ -39,6 +39,7 @@ from fdp_dynamically_controlled_streams_spark.functions.parallelism import (
     overlap_jobs,
 )
 from fdp_dynamically_controlled_streams_spark.operators import dedup as dedup_ops
+from fdp_dynamically_controlled_streams_spark.streaming.drain import drain
 
 
 def _is_committed(path: str, parts: tuple[str, ...] = ()) -> bool:
@@ -195,6 +196,63 @@ def maybe_compact_outputs(
     return None
 
 
+def _run_epochs(
+    spark: SparkSession,
+    data_path: str,
+    schema: str,
+    work_dir: str,
+    seed_path: str,
+    step,
+    dec_ddl: str,
+    files_per_trigger: int,
+    keep_snapshots: int | None,
+    compact_outputs_depth: int | None,
+    parts: tuple[str, ...] = (),
+    snap_dir: str = "idx",
+) -> str:
+    """The durable epoch loop the four pipelines share: drain the files
+    in ``data_path`` (one micro-batch per ``files_per_trigger`` files)
+    and, per micro-batch ``bid``, checkpoint the batch, find the newest
+    committed snapshot with epoch < ``bid`` (``seed_path`` if none), and
+    call ``step(bdf, bid, prior, out_dir, snap_dir)``.  The step writes
+    the epoch's decisions to ``out_dir`` (``work_dir/out/e<bid>``) and
+    the next snapshot — one relation per name in ``parts``, or a single
+    one — to ``snap_dir`` (``work_dir/<snap_dir>/e<bid>``), both
+    mode=overwrite, so a re-delivered batch rewrites identical
+    artifacts.  Then retention and decisions compaction run.  The
+    streaming checkpoint is ``work_dir/chk``; returns the decisions
+    root."""
+    from fdp_dynamically_controlled_streams_spark.sources.registry import (
+        replay_dir,
+    )
+
+    snap_root = os.path.join(work_dir, snap_dir)
+    out_root = os.path.join(work_dir, "out")
+    os.makedirs(snap_root, exist_ok=True)
+
+    def _proc(bdf: DataFrame, bid: int) -> None:
+        bdf = bdf.localCheckpoint()
+        prior = _latest_snapshot(snap_root, bid, parts) or seed_path
+        step(
+            bdf,
+            bid,
+            prior,
+            os.path.join(out_root, f"e{bid}"),
+            os.path.join(snap_root, f"e{bid}"),
+        )
+        if keep_snapshots is not None:
+            reclaim_epoch_snapshots(snap_root, keep_snapshots, parts)
+        if compact_outputs_depth is not None:
+            maybe_compact_outputs(spark, out_root, dec_ddl, compact_outputs_depth)
+
+    drain(
+        replay_dir(spark, data_path, schema, files_per_trigger),
+        _proc,
+        os.path.join(work_dir, "chk"),
+    )
+    return out_root
+
+
 def minhash_maintenance_pipeline(
     spark: SparkSession,
     data_path: str,
@@ -203,7 +261,6 @@ def minhash_maintenance_pipeline(
     work_dir: str,
     est_threshold: float = 0.3,
     files_per_trigger: int = 1,
-    timeout_sec: int = 300,
     keep_snapshots: int | None = 2,
     compact_outputs_depth: int | None = None,
 ) -> str:
@@ -221,7 +278,8 @@ def minhash_maintenance_pipeline(
     checkpoint, and new epochs screen against the newest persisted
     snapshot (law-tested in tests/test_streaming.py: an interrupted run
     + a resumed run produce exactly the one-shot run's decisions, and
-    re-running a batch body is a no-op).
+    re-running a batch body is a no-op).  A run that does not drain in
+    time is stopped and raises (streaming/drain.py).
 
     ``keep_snapshots`` (r13 verdict task 3): retain only the newest K
     committed index snapshots (K >= 2 — re-delivery can only touch the
@@ -230,19 +288,9 @@ def minhash_maintenance_pipeline(
     roll epoch decision dirs into one ``c<epoch>`` dir whenever
     :func:`compaction_due` fires on the dir count; None disables.  Both
     are answer-invariant by law (tests/test_streaming.py)."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        replay_dir,
-    )
 
-    sig_root = os.path.join(work_dir, "sig")
-    out_root = os.path.join(work_dir, "out")
-    os.makedirs(sig_root, exist_ok=True)
-    dec_ddl = "doc_id long, n_matches long, best_est double, is_new boolean"
-
-    def _proc(bdf: DataFrame, bid: int) -> None:
-        bdf = bdf.localCheckpoint()
-        prior = _latest_snapshot(sig_root, bid)
-        sig_c = spark.read.parquet(prior if prior else seed_sig_path)
+    def _step(bdf, _bid, prior, out_dir, snap):
+        sig_c = spark.read.parquet(prior)
         sig_b = dedup_ops.minhash_signatures(bdf).localCheckpoint()
         # the decisions write and the snapshot write are INDEPENDENT
         # jobs once sig_b is checkpointed (different epoch-addressed
@@ -255,30 +303,16 @@ def minhash_maintenance_pipeline(
             sig_c, bdf.select(F.col("doc_id").alias("id")), sig_b
         )
         overlap_jobs(
-            lambda: dec.write.mode("overwrite").parquet(
-                os.path.join(out_root, f"e{bid}")
-            ),
-            lambda: ups.write.mode("overwrite").parquet(
-                os.path.join(sig_root, f"e{bid}")
-            ),
+            lambda: dec.write.mode("overwrite").parquet(out_dir),
+            lambda: ups.write.mode("overwrite").parquet(snap),
         )
-        if keep_snapshots is not None:
-            reclaim_epoch_snapshots(sig_root, keep_snapshots)
-        if compact_outputs_depth is not None:
-            maybe_compact_outputs(
-                spark, out_root, dec_ddl, compact_outputs_depth
-            )
 
-    stream = replay_dir(spark, data_path, schema, files_per_trigger)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_proc)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    return _run_epochs(
+        spark, data_path, schema, work_dir, seed_sig_path, _step,
+        "doc_id long, n_matches long, best_est double, is_new boolean",
+        files_per_trigger, keep_snapshots, compact_outputs_depth,
+        snap_dir="sig",
     )
-    q.awaitTermination(timeout_sec)
-    return out_root
 
 
 def embedding_maintenance_pipeline(
@@ -289,7 +323,6 @@ def embedding_maintenance_pipeline(
     work_dir: str,
     threshold: float = 0.25,
     files_per_trigger: int = 1,
-    timeout_sec: int = 300,
     keep_snapshots: int | None = 2,
     compact_outputs_depth: int | None = None,
 ) -> str:
@@ -309,15 +342,8 @@ def embedding_maintenance_pipeline(
         similarity as sim_ops,
     )
 
-    idx_root = os.path.join(work_dir, "idx")
-    out_root = os.path.join(work_dir, "out")
-    os.makedirs(idx_root, exist_ok=True)
-    dec_ddl = "vec_id long, n_matches long, best_cos double, is_new boolean"
-
-    def _proc(bdf: DataFrame, bid: int) -> None:
-        bdf = bdf.localCheckpoint()
-        prior = _latest_snapshot(idx_root, bid)
-        idx = spark.read.parquet(prior if prior else seed_index_path)
+    def _step(bdf, _bid, prior, out_dir, snap):
+        idx = spark.read.parquet(prior)
         bits = sim_ops.derived_bits(idx.count())
         idx = sim_ops.embedding_index_rebucket(idx, bits).localCheckpoint()
         # decisions write ∥ snapshot write: independent epoch-addressed
@@ -328,34 +354,15 @@ def embedding_maintenance_pipeline(
         )
         ups = sim_ops.embedding_index_upsert(idx, bdf, bits=bits)
         overlap_jobs(
-            lambda: dec.write.mode("overwrite").parquet(
-                os.path.join(out_root, f"e{bid}")
-            ),
-            lambda: ups.write.mode("overwrite").parquet(
-                os.path.join(idx_root, f"e{bid}")
-            ),
+            lambda: dec.write.mode("overwrite").parquet(out_dir),
+            lambda: ups.write.mode("overwrite").parquet(snap),
         )
-        if keep_snapshots is not None:
-            reclaim_epoch_snapshots(idx_root, keep_snapshots)
-        if compact_outputs_depth is not None:
-            maybe_compact_outputs(
-                spark, out_root, dec_ddl, compact_outputs_depth
-            )
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        replay_dir,
+    return _run_epochs(
+        spark, data_path, schema, work_dir, seed_index_path, _step,
+        "vec_id long, n_matches long, best_cos double, is_new boolean",
+        files_per_trigger, keep_snapshots, compact_outputs_depth,
     )
-
-    stream = replay_dir(spark, data_path, schema, files_per_trigger)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_proc)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    return out_root
 
 
 def exact_substring_maintenance_pipeline(
@@ -366,7 +373,6 @@ def exact_substring_maintenance_pipeline(
     work_dir: str,
     length: int = 24,
     files_per_trigger: int = 1,
-    timeout_sec: int = 300,
     keep_snapshots: int | None = 2,
     compact_outputs_depth: int | None = None,
 ) -> str:
@@ -387,22 +393,10 @@ def exact_substring_maintenance_pipeline(
     and the upsert writes the full next-index snapshot (the durable
     counterpart of the replay entry's lazy delta — a MERGE INTO on a
     transactional table in production)."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        replay_dir,
-    )
 
-    idx_root = os.path.join(work_dir, "idx")
-    out_root = os.path.join(work_dir, "out")
-    os.makedirs(idx_root, exist_ok=True)
-    parts = ("cbase", "ch")
-    dec_ddl = "doc_id long, span_start long, span_end long, span_len long"
-
-    def _proc(bdf: DataFrame, bid: int) -> None:
-        bdf = bdf.localCheckpoint()
-        prior = _latest_snapshot(idx_root, bid, parts)
-        root = prior if prior else seed_index_path
-        cbase = spark.read.parquet(os.path.join(root, "cbase"))
-        ch = spark.read.parquet(os.path.join(root, "ch"))
+    def _step(bdf, _bid, prior, out_dir, snap):
+        cbase = spark.read.parquet(os.path.join(prior, "cbase"))
+        ch = spark.read.parquet(os.path.join(prior, "ch"))
         bbase = bdf.select(
             F.col("doc_id").alias("id"), F.trim(F.col("text")).alias("s")
         )
@@ -416,11 +410,8 @@ def exact_substring_maintenance_pipeline(
             bdf, cbase, ch, length=length, bh=bh
         )
         new_ids = bbase.select("id")
-        snap = os.path.join(idx_root, f"e{bid}")
         overlap_jobs(
-            lambda: dec.write.mode("overwrite").parquet(
-                os.path.join(out_root, f"e{bid}")
-            ),
+            lambda: dec.write.mode("overwrite").parquet(out_dir),
             lambda: cbase.join(F.broadcast(new_ids), "id", "left_anti")
             .unionByName(bbase)
             .write.mode("overwrite")
@@ -430,23 +421,13 @@ def exact_substring_maintenance_pipeline(
             .write.mode("overwrite")
             .parquet(os.path.join(snap, "ch")),
         )
-        if keep_snapshots is not None:
-            reclaim_epoch_snapshots(idx_root, keep_snapshots, parts)
-        if compact_outputs_depth is not None:
-            maybe_compact_outputs(
-                spark, out_root, dec_ddl, compact_outputs_depth
-            )
 
-    stream = replay_dir(spark, data_path, schema, files_per_trigger)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_proc)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    return _run_epochs(
+        spark, data_path, schema, work_dir, seed_index_path, _step,
+        "doc_id long, span_start long, span_end long, span_len long",
+        files_per_trigger, keep_snapshots, compact_outputs_depth,
+        parts=("cbase", "ch"),
     )
-    q.awaitTermination(timeout_sec)
-    return out_root
 
 
 def bm25_maintenance_pipeline(
@@ -458,7 +439,6 @@ def bm25_maintenance_pipeline(
     k: int = 10,
     panel_mod: int = 100,
     files_per_trigger: int = 1,
-    timeout_sec: int = 300,
     keep_snapshots: int | None = 2,
     compact_outputs_depth: int | None = None,
     fold_every: int | None = None,
@@ -488,24 +468,13 @@ def bm25_maintenance_pipeline(
     from fdp_dynamically_controlled_streams_spark.operators import (
         retrieval as retr_ops,
     )
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        replay_dir,
-    )
 
-    idx_root = os.path.join(work_dir, "idx")
     fold_root = os.path.join(work_dir, "fold")
-    out_root = os.path.join(work_dir, "out")
-    os.makedirs(idx_root, exist_ok=True)
-    parts = ("tdc_dl", "df_t", "stats")
-    dec_ddl = "query_id long, doc_id long, rank int, score double"
 
-    def _proc(bdf: DataFrame, bid: int) -> None:
-        bdf = bdf.localCheckpoint()
-        prior = _latest_snapshot(idx_root, bid, parts)
-        root = prior if prior else seed_index_path
-        tdc_dl = spark.read.parquet(os.path.join(root, "tdc_dl"))
-        df_t = spark.read.parquet(os.path.join(root, "df_t"))
-        stats = spark.read.parquet(os.path.join(root, "stats"))
+    def _step(bdf, bid, prior, out_dir, snap):
+        tdc_dl = spark.read.parquet(os.path.join(prior, "tdc_dl"))
+        df_t = spark.read.parquet(os.path.join(prior, "df_t"))
+        stats = spark.read.parquet(os.path.join(prior, "stats"))
         scr = retr_ops.bm25_screen_against_raw(
             bdf.where(F.col("doc_id") % panel_mod == 0),
             tdc_dl, df_t, stats, k=k,
@@ -513,7 +482,6 @@ def bm25_maintenance_pipeline(
         t2, d2, s2 = retr_ops.bm25_raw_index_upsert(
             tdc_dl, df_t, stats, bdf, delta=True
         )
-        snap = os.path.join(idx_root, f"e{bid}")
         # screen ∥ postings ∥ df ∥ stats: the upsert's three relations
         # are mutually independent compositions over the prior
         # snapshot's parquet plus the checkpointed batch postings, and
@@ -524,9 +492,7 @@ def bm25_maintenance_pipeline(
         # epochs instead read back the snapshot the same batch just
         # wrote — bit-identical rows, one composition pass total.
         overlap_jobs(
-            lambda: scr.write.mode("overwrite").parquet(
-                os.path.join(out_root, f"e{bid}")
-            ),
+            lambda: scr.write.mode("overwrite").parquet(out_dir),
             lambda: t2.write.mode("overwrite").parquet(
                 os.path.join(snap, "tdc_dl")
             ),
@@ -548,23 +514,13 @@ def bm25_maintenance_pipeline(
             )
             if keep_snapshots is not None:
                 reclaim_epoch_snapshots(fold_root, keep_snapshots)
-        if keep_snapshots is not None:
-            reclaim_epoch_snapshots(idx_root, keep_snapshots, parts)
-        if compact_outputs_depth is not None:
-            maybe_compact_outputs(
-                spark, out_root, dec_ddl, compact_outputs_depth
-            )
 
-    stream = replay_dir(spark, data_path, schema, files_per_trigger)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_proc)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    return _run_epochs(
+        spark, data_path, schema, work_dir, seed_index_path, _step,
+        "query_id long, doc_id long, rank int, score double",
+        files_per_trigger, keep_snapshots, compact_outputs_depth,
+        parts=("tdc_dl", "df_t", "stats"),
     )
-    q.awaitTermination(timeout_sec)
-    return out_root
 
 
 def read_epoch_outputs(spark: SparkSession, out_root: str, ddl: str) -> DataFrame:

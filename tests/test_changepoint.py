@@ -103,6 +103,7 @@ def test_streaming_matches_batch_across_microbatches(spark, tmp_path):
     from fdp_dynamically_controlled_streams_spark.streaming.cusum import (
         cusum_streaming,
     )
+    from fdp_dynamically_controlled_streams_spark.streaming.drain import drain
     import datetime as dt
 
     t0 = dt.datetime(2024, 5, 1)
@@ -125,15 +126,11 @@ def test_streaming_matches_batch_across_microbatches(spark, tmp_path):
     ddl = "user_id long, ts timestamp, event_id long, value double"
     stream = replay_dir(spark, path, ddl, files_per_trigger=1)
     collected = []
-    q = (
-        cusum_streaming(stream, drift=4.0, threshold=6.0)
-        .writeStream.outputMode("append")
-        .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-        .option("checkpointLocation", str(tmp_path / "chk"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        cusum_streaming(stream, drift=4.0, threshold=6.0),
+        lambda bdf, bid: collected.extend(bdf.collect()),
+        str(tmp_path / "chk"),
     )
-    q.awaitTermination(120)
     got = {(r.user_id, r.event_id): (r.cusum, r.flagged) for r in collected}
 
     batch = cusum_flags(

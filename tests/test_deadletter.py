@@ -19,6 +19,7 @@ from fdp_dynamically_controlled_streams_spark.sources.registry import (
     replay_dir,
     write_replay_chunks,
 )
+from fdp_dynamically_controlled_streams_spark.streaming.drain import drain
 
 
 def test_split_partitions_exactly(spark):
@@ -52,14 +53,7 @@ def test_streaming_dead_letter_captures_corrupt_payloads(spark, tmp_path):
         F.col("sensor_id") >= 0,
         str(tmp_path / "dead"),
     )
-    q = (
-        decoded.writeStream.outputMode("append")
-        .foreachBatch(fb)
-        .option("checkpointLocation", str(tmp_path / "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    drain(decoded, fb, str(tmp_path / "chk"))
 
     # empty bytes are a LEGAL proto3 message (all defaults) -> good branch
     assert sorted((r.sensor_id, r.temperature) for r in good_rows) == [

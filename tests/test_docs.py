@@ -114,3 +114,24 @@ def test_sf01_tier_superset_of_sf1_probe():
 
     missing = sorted(set(PROBE_ENTRIES) - set(TIER))
     assert not missing, f"sf1-probed entries absent from sf0.1 tier: {missing}"
+
+
+def test_one_stream_runner():
+    """Every availableNow drain in the package goes through
+    streaming/drain.py, which stops and raises on a stall: no other
+    package module may start an availableNow query or wait on one
+    itself. (``write_stream_kafka``'s processing-time trigger is a
+    long-running query, not a drain.)"""
+    pkg = REPO / "fdp_dynamically_controlled_streams_spark"
+    runner = pkg / "streaming" / "drain.py"
+    offenders = sorted(
+        f"{path.relative_to(REPO)}: {needle}"
+        for path in pkg.rglob("*.py")
+        if path != runner
+        for needle in ("trigger(availableNow=True)", "awaitTermination(")
+        if needle in path.read_text()
+    )
+    assert not offenders, offenders
+    text = runner.read_text()
+    assert text.count("trigger(availableNow=True)") == 1
+    assert text.count("awaitTermination(") == 1

@@ -140,7 +140,6 @@ def test_golden_heater_closed_loop_streaming(spark, tmp_path):
     from fdp_dynamically_controlled_streams_spark.operators.controller import (
         unify_streams,
     )
-    from fdp_dynamically_controlled_streams_spark.queries import _await_drain
     from fdp_dynamically_controlled_streams_spark.sources.registry import (
         replay_dir,
         write_replay_chunks,
@@ -148,6 +147,7 @@ def test_golden_heater_closed_loop_streaming(spark, tmp_path):
     from fdp_dynamically_controlled_streams_spark.streaming.controller import (
         controller_streaming,
     )
+    from fdp_dynamically_controlled_streams_spark.streaming.drain import drain
 
     readings, expected = simulate_heater(n_ticks=120)
     records = [(SENSOR_ID, 0, (DESIRED, DELTA, DELTA), 0)] + readings
@@ -172,15 +172,12 @@ def test_golden_heater_closed_loop_streaming(spark, tmp_path):
         files_per_trigger=1,
     )
     collected: list = []
-    q = (
-        controller_streaming(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-        .option("checkpointLocation", str(tmp_path / "chk"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        controller_streaming(stream),
+        lambda bdf, bid: collected.extend(bdf.collect()),
+        str(tmp_path / "chk"),
+        output_mode="update",
     )
-    _await_drain(q, 300)
     got = sorted(
         ((r.sensor_id, r.command, r.seq) for r in collected), key=lambda t: t[2]
     )

@@ -21,6 +21,7 @@ from fdp_dynamically_controlled_streams_spark.sources.registry import (
     replay_dir,
     write_replay_chunks,
 )
+from fdp_dynamically_controlled_streams_spark.streaming.drain import drain
 from fdp_dynamically_controlled_streams_spark.streaming.interval_join import (
     interval_join_streams,
 )
@@ -84,14 +85,11 @@ def _streaming_pairs(spark, tmp, watermark="30 minutes", how="inner",
     spark.streams.addListener(rec)
     collected: list = []
     try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-            .option("checkpointLocation", f"{tmp}/chk")
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            joined,
+            lambda bdf, bid: collected.extend(bdf.collect()),
+            f"{tmp}/chk",
         )
-        q.awaitTermination(180)
     finally:
         spark.streams.removeListener(rec)
     # None-safe sort key: fullOuter right-null rows have l_* = None
@@ -212,14 +210,11 @@ def test_resume_from_checkpoint_no_loss_no_dup(spark, tmpdir):
             l, r, "user_id", "ts", "ts", F.expr("INTERVAL 0 SECONDS"),
             F.expr(BAND), "30 minutes",
         )
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-            .option("checkpointLocation", f"{tmpdir}/chk")
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            joined,
+            lambda bdf, bid: collected.extend(bdf.collect()),
+            f"{tmpdir}/chk",
         )
-        q.awaitTermination(180)
 
     run()
     n_first = len(collected)
@@ -331,13 +326,10 @@ def test_left_semi_emits_once_per_matched_left_row(spark, tmpdir):
     )
     assert all(c.startswith("l_") for c in joined.columns)  # left side only
     collected: list = []
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-        .option("checkpointLocation", f"{tmpdir}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        joined,
+        lambda bdf, bid: collected.extend(bdf.collect()),
+        f"{tmpdir}/chk",
     )
-    q.awaitTermination(180)
     got = sorted((x.l_user_id, x.l_ts) for x in collected)
     assert got == [(1, t0 + 10 * m), (3, t0 + 10 * m)]  # once each, no user 2

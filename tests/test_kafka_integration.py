@@ -103,10 +103,10 @@ def test_controller_roundtrip_through_real_topics(spark, kafka_gate):
         decode_control_udf,
         encode_heater_control_udf,
     )
-    from fdp_dynamically_controlled_streams_spark.queries import _await_drain
     from fdp_dynamically_controlled_streams_spark.streaming.controller import (
         controller_streaming,
     )
+    from fdp_dynamically_controlled_streams_spark.streaming.drain import _await_drain
 
     tmp = tempfile.mkdtemp(prefix="dcs-kafka-")
     raw_control = read_stream(

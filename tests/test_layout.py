@@ -89,7 +89,8 @@ def test_compact_parquet_hits_target_count(spark, tmp_path):
     n_src = len(list(Path(src).glob("*.parquet")))
     assert n_src == 32
     total = sum(p.stat().st_size for p in Path(src).glob("*.parquet"))
-    n_out = compact_parquet(spark, src, dst, target_file_bytes=total // 3)
+    # ceil(total / 3) bytes per file: the smallest target that fits in 3
+    n_out = compact_parquet(spark, src, dst, target_file_bytes=-(-total // 3))
     assert n_out == 3
     assert spark.read.parquet(dst).count() == 100_000
 

@@ -19,6 +19,7 @@ from fdp_dynamically_controlled_streams_spark.sources.registry import (
     replay_dir,
     write_replay_chunks,
 )
+from fdp_dynamically_controlled_streams_spark.streaming.drain import drain
 
 DDL = "k long, v string, op string, seq long"
 
@@ -109,15 +110,11 @@ def test_upsert_sink_maintains_snapshot_idempotently(spark, tmpdir):
     )
     table_dir = f"{tmpdir}/snapshot"
     sink = upsert_sink(spark, table_dir, ["k"], ["seq"], op_col="op")
-    q = (
-        replay_dir(spark, f"{tmpdir}/replay", DDL, files_per_trigger=1)
-        .writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", f"{tmpdir}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        replay_dir(spark, f"{tmpdir}/replay", DDL, files_per_trigger=1),
+        sink,
+        f"{tmpdir}/chk",
     )
-    q.awaitTermination(180)
     snap = read_snapshot(spark, table_dir)
     got = {r.k: (r.v, r.seq) for r in snap.collect()}
     assert got == {1: ("a2", 3), 3: ("c", 4), 4: ("dd", 6)}  # 2 tombstoned

@@ -13,6 +13,7 @@ from fdp_dynamically_controlled_streams_spark.sources.registry import (
     replay_dir,
     write_replay_chunks,
 )
+from fdp_dynamically_controlled_streams_spark.streaming.drain import drain
 from fdp_dynamically_controlled_streams_spark.streaming.static_join import (
     controller_stream_static,
     latest_control_table,
@@ -48,14 +49,11 @@ def _run(spark, tmp, control_rows, sensor_rows):
     stream = replay_dir(spark, f"{tmp}/replay", SENSOR_DDL, files_per_trigger=1)
     out = controller_stream_static(spark, stream, control_path)
     collected: list = []
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-        .option("checkpointLocation", f"{tmp}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        out,
+        lambda bdf, bid: collected.extend(bdf.collect()),
+        f"{tmp}/chk",
     )
-    q.awaitTermination(180)
     return sorted((r.sensor_id, r.command, r.seq) for r in collected)
 
 
@@ -102,15 +100,11 @@ def test_control_refresh_by_table_swap(spark, tmpdir):
 
     def run_once(chk):
         collected: list = []
-        q = (
-            controller_stream_static(spark, stream, control_path)
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            controller_stream_static(spark, stream, control_path),
+            lambda bdf, bid: collected.extend(bdf.collect()),
+            chk,
         )
-        q.awaitTermination(180)
         return [(r.sensor_id, r.command, r.seq) for r in collected]
 
     assert run_once(f"{tmpdir}/chk1") == [(1, 1, 1)]  # 50 > 46 -> Off

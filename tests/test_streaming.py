@@ -19,7 +19,6 @@ from fdp_dynamically_controlled_streams_spark.operators.controller import (
     controller_batch,
     unify_streams,
 )
-from fdp_dynamically_controlled_streams_spark.queries import _await_drain
 from fdp_dynamically_controlled_streams_spark.schemas import UNIFIED_SCHEMA
 from fdp_dynamically_controlled_streams_spark.sources.registry import (
     replay_dir,
@@ -32,6 +31,7 @@ from fdp_dynamically_controlled_streams_spark.streaming.controller import (
     _control_key_group,
     controller_streaming,
 )
+from fdp_dynamically_controlled_streams_spark.streaming.drain import _await_drain, drain
 
 UNIFIED_DDL = (
     "sensor_id int, record_kind int, temperature double, "
@@ -89,14 +89,12 @@ def _run_stream(spark, chunks, tmp, checkpoint=None):
     unified = replay_dir(spark, data_dir, UNIFIED_DDL, files_per_trigger=1)
     out = controller_streaming(unified)
     collected: list = []
-    q = (
-        out.writeStream.outputMode("update")
-        .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-        .option("checkpointLocation", checkpoint or f"{tmp}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        out,
+        lambda bdf, bid: collected.extend(bdf.collect()),
+        checkpoint or f"{tmp}/chk",
+        output_mode="update",
     )
-    _await_drain(q, 180)
     return sorted((r.sensor_id, r.command, r.seq) for r in collected)
 
 
@@ -183,14 +181,11 @@ def test_dedup_within_watermark_bounds_state_and_drops_late(spark, tmpdir):
         ["key"]
     )
     collected: list = []
-    q = (
-        deduped.writeStream.outputMode("append")
-        .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-        .option("checkpointLocation", f"{tmpdir}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        deduped,
+        lambda bdf, bid: collected.extend(bdf.collect()),
+        f"{tmpdir}/chk",
     )
-    q.awaitTermination(180)
     got = sorted((r.key, r.ts.minute) for r in collected)
     assert got == [("A", 0), ("A", 25), ("B", 5), ("C", 30), ("D", 31)]
 
@@ -213,14 +208,11 @@ def test_windowed_agg_watermark_finalizes_and_discards_late(spark, tmpdir):
         .select(F.col("w.start").alias("start"), "n")
     )
     collected: list = []
-    q = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-        .option("checkpointLocation", f"{tmpdir}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        agg,
+        lambda bdf, bid: collected.extend(bdf.collect()),
+        f"{tmpdir}/chk",
     )
-    q.awaitTermination(180)
     # Exactly one finalized window; the late row did not reopen or change it.
     assert [(r.start.minute, r.n) for r in collected] == [(0, 2)]
 
@@ -465,14 +457,11 @@ def test_session_window_merges_and_finalizes(spark, tmpdir):
         .select("key", F.col("w.start").alias("start"), F.col("w.end").alias("end"), "n")
     )
     collected: list = []
-    q = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(lambda bdf, bid: collected.extend(bdf.collect()))
-        .option("checkpointLocation", f"{tmpdir}/chk")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        agg,
+        lambda bdf, bid: collected.extend(bdf.collect()),
+        f"{tmpdir}/chk",
     )
-    q.awaitTermination(180)
     got = sorted((r.key, r.start.minute, r.end.minute, r.n) for r in collected)
     # session 1 = [00:00, 00:07) with 2 events (0' and 2', end = 2'+5');
     # session 2 = [00:20, 00:25) with 1; u2's session is still open -> absent
@@ -576,6 +565,25 @@ def test_write_replay_chunks_partitioned_exact_boundaries(spark, tmp_path):
     assert sum(len(pd.read_parquet(f)) for f in files) == df.count()
 
 
+def _redeliver_newest_epoch(work_dir, rerun):
+    """Re-deliver the newest micro-batch of a maintenance pipeline the way
+    a crash between its epoch writes and the engine's commit would: drop
+    the batch from the checkpoint's commit log, then ``rerun()`` the
+    pipeline, so the engine runs that batch again through the shipped
+    epoch body. Returns the re-delivered batch id."""
+    import os
+
+    commits = os.path.join(work_dir, "chk", "commits")
+    bid = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(bid), f".{bid}.crc"):
+        path = os.path.join(commits, name)
+        if os.path.exists(path):
+            os.remove(path)
+    rerun()
+    assert os.path.exists(os.path.join(commits, str(bid)))  # re-ran, re-committed
+    return bid
+
+
 def test_minhash_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
     """Restart-safe maintenance pipeline laws (r12 verdict task 4):
     (1) RESUME-MID-CRAWL — run the pipeline with only day 0 present,
@@ -629,7 +637,7 @@ def test_minhash_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
         add_day(i)
     ref_out = minhash_maintenance_pipeline(
         spark, data_dir, "doc_id long, text string", seed_path,
-        str(tmp_path / "ref"), timeout_sec=180,
+        str(tmp_path / "ref"),
     )
     ref = sorted(map(tuple, read_epoch_outputs(spark, ref_out, ddl).collect()))
     assert ref and any(r[0] == 20 and r[1] >= 1 and not r[3] for r in ref)
@@ -648,7 +656,6 @@ def test_minhash_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
     work = str(tmp_path / "work")
     out = minhash_maintenance_pipeline(
         spark, data2, "doc_id long, text string", seed_path, work,
-        timeout_sec=180,
     )
     partial = read_epoch_outputs(spark, out, ddl)
     assert partial.count() == 2  # day 0 only
@@ -656,33 +663,26 @@ def test_minhash_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
     add_day2(2)
     out = minhash_maintenance_pipeline(
         spark, data2, "doc_id long, text string", seed_path, work,
-        timeout_sec=180,
     )
     resumed = sorted(map(tuple, read_epoch_outputs(spark, out, ddl).collect()))
     assert resumed == ref
 
-    # (2) re-delivery: re-run the NEWEST epoch's body by hand (the only
+    # (2) re-delivery: the engine re-runs the NEWEST epoch (the only
     # epoch foreachBatch can actually re-deliver — and, since r14, the
     # only one the default keep_snapshots=2 retention guarantees a
     # prior for: e0 is reclaimed once e1/e2 commit) — artifacts
     # unchanged
-    from fdp_dynamically_controlled_streams_spark.operators import dedup as dd
-    from pyspark.sql import functions as F
-
     sig_root = os.path.join(work, "sig")
     assert not os.path.exists(f"{sig_root}/e0")  # retention reclaimed it
     before = sorted(map(tuple, spark.read.parquet(f"{sig_root}/e2").collect()))
     prior = _latest_snapshot(sig_root, 2)
     assert prior and prior.endswith("e1")
-    bdf = spark.createDataFrame(days[2], "doc_id long, text string")
-    sig_c = spark.read.parquet(prior)
-    sig_b = dd.minhash_signatures(bdf).localCheckpoint()
-    dd.minhash_decisions_against_sigs(sig_b, sig_c, est_threshold=0.3).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(work, "out", "e2"))
-    dd.minhash_index_upsert_sigs(
-        sig_c, bdf.select(F.col("doc_id").alias("id")), sig_b
-    ).write.mode("overwrite").parquet(f"{sig_root}/e2")
+    assert _redeliver_newest_epoch(
+        work,
+        lambda: minhash_maintenance_pipeline(
+            spark, data2, "doc_id long, text string", seed_path, work
+        ),
+    ) == 2
     after = sorted(map(tuple, spark.read.parquet(f"{sig_root}/e2").collect()))
     assert after == before
     assert sorted(map(tuple, read_epoch_outputs(spark, os.path.join(work, "out"), ddl).collect())) == ref
@@ -692,7 +692,8 @@ def test_embedding_maintenance_pipeline_resume(spark, tmp_path):
     """Embedding restart-safe pipeline (r13): interrupted + resumed run
     equals the one-shot run — with the plane count RE-DERIVED from the
     persisted snapshot's own row count on resume (no bits state beyond
-    the snapshot), so the blocking reconstructs identically."""
+    the snapshot), so the blocking reconstructs identically — and a
+    re-delivered newest epoch rewrites identical artifacts."""
     import os
 
     import pyarrow as pa
@@ -749,7 +750,7 @@ def test_embedding_maintenance_pipeline_resume(spark, tmp_path):
     add1(0); add1(1)
     ref_out = embedding_maintenance_pipeline(
         spark, d1, "vec_id long, embedding array<float>",
-        f"{seed_path}/idx", str(tmp_path / "ref"), timeout_sec=180,
+        f"{seed_path}/idx", str(tmp_path / "ref"),
     )
     ref = sorted(map(tuple, read_epoch_outputs(spark, ref_out, ddl).collect()))
     assert any(r[0] == 200 and r[1] >= 1 and not r[3] for r in ref)
@@ -760,14 +761,29 @@ def test_embedding_maintenance_pipeline_resume(spark, tmp_path):
     work = str(tmp_path / "work")
     out = embedding_maintenance_pipeline(
         spark, d2, "vec_id long, embedding array<float>",
-        f"{seed_path}/idx", work, timeout_sec=180,
+        f"{seed_path}/idx", work,
     )
     assert read_epoch_outputs(spark, out, ddl).count() == 2
     add2(1)
     out = embedding_maintenance_pipeline(
         spark, d2, "vec_id long, embedding array<float>",
-        f"{seed_path}/idx", work, timeout_sec=180,
+        f"{seed_path}/idx", work,
     )
+    assert sorted(map(tuple, read_epoch_outputs(spark, out, ddl).collect())) == ref
+
+    # re-delivery of the newest epoch: it re-derives the same bits from
+    # the same prior snapshot and rewrites identical artifacts
+    idx_root = os.path.join(work, "idx")
+    before = sorted(map(tuple, spark.read.parquet(f"{idx_root}/e1").collect()))
+    assert _redeliver_newest_epoch(
+        work,
+        lambda: embedding_maintenance_pipeline(
+            spark, d2, "vec_id long, embedding array<float>",
+            f"{seed_path}/idx", work,
+        ),
+    ) == 1
+    after = sorted(map(tuple, spark.read.parquet(f"{idx_root}/e1").collect()))
+    assert after == before
     assert sorted(map(tuple, read_epoch_outputs(spark, out, ddl).collect())) == ref
 
 
@@ -842,7 +858,7 @@ def test_exact_substring_maintenance_pipeline_resume_and_idempotent(
         add1(i)
     ref_out = exact_substring_maintenance_pipeline(
         spark, d1, "doc_id long, text string", seed_path,
-        str(tmp_path / "ref"), length=12, timeout_sec=180,
+        str(tmp_path / "ref"), length=12,
     )
     ref = sorted(map(tuple, read_epoch_outputs(spark, ref_out, ddl).collect()))
     assert any(r[0] == 20 and r[3] >= len(blk1) for r in ref)  # via day-0 snapshot
@@ -855,20 +871,18 @@ def test_exact_substring_maintenance_pipeline_resume_and_idempotent(
     work = str(tmp_path / "work")
     out = exact_substring_maintenance_pipeline(
         spark, d2, "doc_id long, text string", seed_path, work,
-        length=12, timeout_sec=180,
+        length=12,
     )
     assert read_epoch_outputs(spark, out, ddl).where("doc_id = 10").count() >= 1
     add2(1)
     add2(2)
     out = exact_substring_maintenance_pipeline(
         spark, d2, "doc_id long, text string", seed_path, work,
-        length=12, timeout_sec=180,
+        length=12,
     )
     assert sorted(map(tuple, read_epoch_outputs(spark, out, ddl).collect())) == ref
 
     # (2) re-delivery of the newest epoch: byte-identical artifacts
-    from fdp_dynamically_controlled_streams_spark.operators import dedup as dd
-
     idx_root = os.path.join(work, "idx")
     parts = ("cbase", "ch")
     assert not os.path.exists(f"{idx_root}/e0")  # retention reclaimed it
@@ -880,23 +894,12 @@ def test_exact_substring_maintenance_pipeline_resume_and_idempotent(
     }
     prior = _latest_snapshot(idx_root, 2, parts)
     assert prior and prior.endswith("e1")
-    bdf = spark.createDataFrame(days[2], "doc_id long, text string")
-    cb = spark.read.parquet(f"{prior}/cbase")
-    chp = spark.read.parquet(f"{prior}/ch")
-    bbase = bdf.select(
-        F.col("doc_id").alias("id"), F.trim(F.col("text")).alias("s")
-    )
-    bh = dd._rolling_window_hashes(bbase, 12).localCheckpoint()
-    dd.exact_substring_incremental_against_index(
-        bdf, cb, chp, length=12, bh=bh
-    ).write.mode("overwrite").parquet(os.path.join(work, "out", "e2"))
-    new_ids = bbase.select("id")
-    cb.join(F.broadcast(new_ids), "id", "left_anti").unionByName(
-        bbase
-    ).write.mode("overwrite").parquet(f"{idx_root}/e2/cbase")
-    chp.join(F.broadcast(new_ids), "id", "left_anti").unionByName(
-        bh
-    ).write.mode("overwrite").parquet(f"{idx_root}/e2/ch")
+    assert _redeliver_newest_epoch(
+        work,
+        lambda: exact_substring_maintenance_pipeline(
+            spark, d2, "doc_id long, text string", seed_path, work, length=12
+        ),
+    ) == 2
     after = {
         part: sorted(
             map(tuple, spark.read.parquet(f"{idx_root}/e2/{part}").collect())
@@ -953,8 +956,7 @@ def test_bm25_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
         add1(i)
     ref_out = bm25_maintenance_pipeline(
         spark, d1, "doc_id long, text string", seed_path,
-        str(tmp_path / "ref"), k=3, panel_mod=1, timeout_sec=180,
-        fold_every=2,
+        str(tmp_path / "ref"), k=3, panel_mod=1, fold_every=2,
     )
     ref = sorted(map(tuple, read_epoch_outputs(spark, ref_out, ddl).collect()))
     # day-1 query 20 must retrieve day-0 docs (grape/kiwi exist only there)
@@ -967,14 +969,14 @@ def test_bm25_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
     work = str(tmp_path / "work")
     out = bm25_maintenance_pipeline(
         spark, d2, "doc_id long, text string", seed_path, work,
-        k=3, panel_mod=1, timeout_sec=180, fold_every=2,
+        k=3, panel_mod=1, fold_every=2,
     )
     assert read_epoch_outputs(spark, out, ddl).where("query_id = 10").count() > 0
     add2(1)
     add2(2)
     out = bm25_maintenance_pipeline(
         spark, d2, "doc_id long, text string", seed_path, work,
-        k=3, panel_mod=1, timeout_sec=180, fold_every=2,
+        k=3, panel_mod=1, fold_every=2,
     )
     assert sorted(map(tuple, read_epoch_outputs(spark, out, ddl).collect())) == ref
 
@@ -996,17 +998,13 @@ def test_bm25_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
     }
     prior = _latest_snapshot(idx_root, 2, parts)
     assert prior and prior.endswith("e1")
-    bdf = spark.createDataFrame(days[2], "doc_id long, text string")
-    tp = spark.read.parquet(f"{prior}/tdc_dl")
-    dp = spark.read.parquet(f"{prior}/df_t")
-    sp = spark.read.parquet(f"{prior}/stats")
-    retr_ops.bm25_screen_against_raw(bdf, tp, dp, sp, k=3).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(work, "out", "e2"))
-    t2, d2_, s2 = retr_ops.bm25_raw_index_upsert(tp, dp, sp, bdf, delta=True)
-    t2.write.mode("overwrite").parquet(f"{idx_root}/e2/tdc_dl")
-    d2_.write.mode("overwrite").parquet(f"{idx_root}/e2/df_t")
-    s2.write.mode("overwrite").parquet(f"{idx_root}/e2/stats")
+    assert _redeliver_newest_epoch(
+        work,
+        lambda: bm25_maintenance_pipeline(
+            spark, d2, "doc_id long, text string", seed_path, work,
+            k=3, panel_mod=1, fold_every=2,
+        ),
+    ) == 2
     after = {
         part: sorted(
             map(tuple, spark.read.parquet(f"{idx_root}/e2/{part}").collect())
@@ -1062,7 +1060,7 @@ def test_pipeline_retention_and_compaction_invariance(spark, tmp_path):
         work = str(tmp_path / f"work_{tag}")
         out = minhash_maintenance_pipeline(
             spark, data, "doc_id long, text string", seed_path, work,
-            timeout_sec=180, **kw,
+            **kw,
         )
         results[tag] = sorted(
             map(tuple, read_epoch_outputs(spark, out, ddl).collect())
@@ -1139,10 +1137,9 @@ def test_overlap_jobs_runs_all_and_propagates_errors():
 
 def test_await_drain_fails_loudly(spark, tmpdir):
     """A stream that does not drain in time is stopped and raises; a stream
-    whose sink fails raises with the sink's error, never partial output."""
+    whose sink fails raises with the sink's error, never partial output,
+    and the replay conf it ran under is restored after the raise."""
     from pyspark.errors import StreamingQueryException
-
-    from fdp_dynamically_controlled_streams_spark.queries import _await_drain
 
     endless = spark.readStream.format("rate").load().writeStream.format("noop").start()
     with pytest.raises(TimeoutError):
@@ -1153,12 +1150,16 @@ def test_await_drain_fails_loudly(spark, tmpdir):
         raise ValueError("sink rejected batch")
 
     write_replay_chunks([_scenario_unified()], f"{tmpdir}/replay")
-    failing = (
-        replay_dir(spark, f"{tmpdir}/replay", UNIFIED_DDL)
-        .writeStream.foreachBatch(reject)
-        .option("checkpointLocation", f"{tmpdir}/chk")
-        .trigger(availableNow=True)
-        .start()
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.stateStore.providerClass",
     )
+    prev = [spark.conf.get(k) for k in keys]
     with pytest.raises(StreamingQueryException, match="sink rejected batch"):
-        _await_drain(failing)
+        drain(
+            replay_dir(spark, f"{tmpdir}/replay", UNIFIED_DDL),
+            reject,
+            f"{tmpdir}/chk",
+            partitions=3,
+        )
+    assert [spark.conf.get(k) for k in keys] == prev
