@@ -3890,10 +3890,9 @@ def controller_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_to_parquet(
         controller_streaming(stream),
         tmp,
-        "sensor_id int, command int, seq long",
         output_mode="update",
         partitions=16,
-    ).select("sensor_id", "command", "seq")
+    )
 
 
 @query(
@@ -4083,12 +4082,7 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.dropDuplicates(["user_id", "event_type"])
     # Measured at sf0.1: 4 state partitions beat 8 (commit overhead > state
     # volume at replay scale); partition-invariant, oracle-checked.
-    return drain_to_parquet(
-        deduped.select("user_id", "event_type"),
-        tmp,
-        "user_id long, event_type string",
-        partitions=4,
-    ).select("user_id", "event_type")
+    return drain_to_parquet(deduped.select("user_id", "event_type"), tmp, partitions=4)
 
 
 # =========================================================================
@@ -6663,12 +6657,7 @@ def stream_tumbling_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Measured at sf0.1: 4 state partitions beat 8 (commit overhead > state
     # volume at replay scale); partition-invariant, oracle-checked.
-    return drain_to_parquet(
-        agg,
-        tmp,
-        "window_start string, event_type string, n_events long, total_value double",
-        partitions=4,
-    ).select("window_start", "event_type", "n_events", "total_value")
+    return drain_to_parquet(agg, tmp, partitions=4)
 
 
 @query(
@@ -6752,15 +6741,7 @@ def stream_ohlc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return drain_to_parquet(
-        agg,
-        tmp,
-        "window_start string, event_type string, open double, high double,"
-        " low double, close double, n_events long",
-        partitions=4,
-    ).select(
-        "window_start", "event_type", "open", "high", "low", "close", "n_events"
-    )
+    return drain_to_parquet(agg, tmp, partitions=4)
 
 
 @query(
@@ -6918,12 +6899,7 @@ def stream_sliding_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Measured at sf0.1: 4 state partitions beat 8 (commit overhead > state
     # volume at replay scale); partition-invariant, oracle-checked.
-    return drain_to_parquet(
-        agg,
-        tmp,
-        "window_start string, event_type string, n_events long, total_value double",
-        partitions=4,
-    ).select("window_start", "event_type", "n_events", "total_value")
+    return drain_to_parquet(agg, tmp, partitions=4)
 
 
 # =========================================================================
@@ -6999,12 +6975,7 @@ def stream_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured at sf0.1, 4 partitions beat 8 by ~20% (commit overhead
     # dominates this replay's state volume; results are partition-invariant,
     # oracle-checked at both SFs).
-    return drain_to_parquet(
-        shaped,
-        tmp,
-        "user_id long, purchase_ts string, click_ts string",
-        partitions=4,
-    ).select("user_id", "purchase_ts", "click_ts")
+    return drain_to_parquet(shaped, tmp, partitions=4)
 
 
 @query(
@@ -7080,12 +7051,7 @@ def stream_interval_left_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
         F.date_format("l_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
         F.date_format("r_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
     )
-    return drain_to_parquet(
-        shaped,
-        tmp,
-        "user_id long, purchase_ts string, click_ts string",
-        partitions=4,
-    ).select("user_id", "purchase_ts", "click_ts")
+    return drain_to_parquet(shaped, tmp, partitions=4)
 
 
 @query(
@@ -7169,12 +7135,7 @@ def stream_interval_full_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
         F.date_format("l_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
         F.date_format("r_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
     )
-    return drain_to_parquet(
-        shaped,
-        tmp,
-        "user_id long, purchase_ts string, click_ts string",
-        partitions=4,
-    ).select("user_id", "purchase_ts", "click_ts")
+    return drain_to_parquet(shaped, tmp, partitions=4)
 
 
 @query(
@@ -7244,12 +7205,7 @@ def stream_interval_semi_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("l_user_id").alias("user_id"),
         F.date_format("l_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
     )
-    return drain_to_parquet(
-        shaped,
-        tmp,
-        "user_id long, purchase_ts string",
-        partitions=4,
-    ).select("user_id", "purchase_ts")
+    return drain_to_parquet(shaped, tmp, partitions=4)
 
 
 @query(
@@ -8421,12 +8377,7 @@ def stream_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     smoothed = ewma_streaming(stream, alpha=0.2)
     # Python-heavy stateful op: same knee as the CUSUM replay (16 parts).
-    return drain_to_parquet(
-        smoothed,
-        tmp,
-        "user_id long, event_id long, value double, ewma double",
-        partitions=16,
-    ).select(
+    return drain_to_parquet(smoothed, tmp, partitions=16).select(
         "user_id",
         "event_id",
         F.round("value", 6).alias("value"),
@@ -8486,13 +8437,7 @@ def stream_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the JVM-state replays (4 partitions optimal — commit overhead bound),
     # this one wants worker parallelism. Measured at sf0.1: 4 -> 5.2 s,
     # 8 -> 4.6 s, 16 -> 4.0 s, 32 -> 4.0 s; 16 is the knee.
-    return drain_to_parquet(
-        flagged,
-        tmp,
-        "user_id long, ts timestamp, event_id long, value double, "
-        "cusum double, flagged boolean",
-        partitions=16,
-    ).select(
+    return drain_to_parquet(flagged, tmp, partitions=16).select(
         "user_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
         "event_id",
@@ -10223,12 +10168,7 @@ def stream_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Measured at sf0.1: 4 state partitions beat 8 (commit overhead > state
     # volume at replay scale); partition-invariant, oracle-checked.
-    return drain_to_parquet(
-        agg,
-        tmp,
-        "user_id long, session_start string, n_events long, duration_sec long",
-        partitions=4,
-    ).select("user_id", "session_start", "n_events", "duration_sec")
+    return drain_to_parquet(agg, tmp, partitions=4)
 
 
 @query(
@@ -10292,9 +10232,8 @@ def controller_static_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     return drain_to_parquet(
         controller_stream_static(spark, stream, f"{fix}/control"),
         tmp,
-        "sensor_id int, temperature double, command int, seq long",
         partitions=8,
-    ).select("sensor_id", "temperature", "command", "seq")
+    )
 
 
 from fdp_dynamically_controlled_streams_spark.sources import heater_sim as hsim

@@ -18,6 +18,7 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @contextlib.contextmanager
@@ -86,7 +87,9 @@ def drain(
         _await_drain(q)
 
 
-def _read_replay_out(spark: SparkSession, ddl: str, path: str) -> DataFrame:
+def _read_replay_out(
+    spark: SparkSession, ddl: str | StructType, path: str
+) -> DataFrame:
     """Read back a replay sink directory. A replay that produced zero
     micro-batches never creates the directory — return an empty typed frame
     instead of raising PATH_NOT_FOUND."""
@@ -98,14 +101,13 @@ def _read_replay_out(spark: SparkSession, ddl: str, path: str) -> DataFrame:
 def drain_to_parquet(
     df: DataFrame,
     tmp: str,
-    ddl: str,
     output_mode: str = "append",
     partitions: int | None = None,
 ) -> DataFrame:
     """:func:`drain` with the replays' usual sink: every micro-batch is
     appended to ``{tmp}/out`` by the executors (never a driver collect —
     SCALE.md rule 1), the checkpoint is ``{tmp}/chk``, and the result is
-    a lazy typed read of the output directory."""
+    a lazy read of the output directory with ``df``'s schema."""
     out = f"{tmp}/out"
     drain(
         df,
@@ -114,4 +116,4 @@ def drain_to_parquet(
         output_mode=output_mode,
         partitions=partitions,
     )
-    return _read_replay_out(df.sparkSession, ddl, out)
+    return _read_replay_out(df.sparkSession, df.schema, out)
