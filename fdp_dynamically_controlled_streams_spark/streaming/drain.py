@@ -70,9 +70,8 @@ def drain(
     runs under :func:`_replay_conf`; without, under the caller's conf —
     the wait stays inside the conf because sinks that read or write
     through the caller's session run while the query does."""
-    spark = df.sparkSession
     conf = (
-        _replay_conf(spark, partitions)
+        _replay_conf(df.sparkSession, partitions)
         if partitions is not None
         else contextlib.nullcontext()
     )
@@ -88,14 +87,14 @@ def drain(
 
 
 def _read_replay_out(
-    spark: SparkSession, ddl: str | StructType, path: str
+    spark: SparkSession, schema: str | StructType, path: str
 ) -> DataFrame:
     """Read back a replay sink directory. A replay that produced zero
     micro-batches never creates the directory — return an empty typed frame
     instead of raising PATH_NOT_FOUND."""
     if not os.path.isdir(path):
-        return spark.createDataFrame([], ddl)
-    return spark.read.schema(ddl).parquet(path)
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def drain_to_parquet(
