@@ -925,24 +925,19 @@ def exact_substring_incremental_against_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     length: int = 24,
-    dh: DataFrame | None = None,
     bh: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`exact_substring_incremental` against a PREBUILT
     :func:`exact_substring_index` — the per-micro-batch body of the
     streaming twin (each document is one row, so any batch partitioning
-    of the docs yields exactly the batch operator's spans).  ``dh`` is
-    accepted for API compatibility but IGNORED since r13: the screen's
-    prefilter and literal verify now share ONE map-side pass over the
-    window index (see :func:`_incremental_positions_hash64`), so a
-    maintained distinct-hash table no longer buys anything.  ``bh``
+    of the docs yields exactly the batch operator's spans).  ``bh``
     optionally supplies the batch's own (checkpointed) window table so
     the rolling-hash kernel runs ONCE per day shared between screen and
     upsert (r12 verdict task 2) instead of once per consumer."""
     bbase = batch.select(
         F.col(id_col).alias("id"), F.trim(F.col(text_col)).alias("s")
     )
-    pos = _incremental_positions_hash64(bbase, cbase, ch, length, dh, bh)
+    pos = _incremental_positions_hash64(bbase, cbase, ch, length, bh)
     return _merge_position_spans(pos, id_col)
 
 
@@ -998,7 +993,7 @@ def exact_substring_index_upsert_delta(
     length: int = 24,
     bbase: DataFrame | None = None,
     bh: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """:func:`exact_substring_index_upsert` with DELTA materialization —
     the form the streaming maintenance loop actually runs: only the
     BATCH's projection and window table are localCheckpointed (batch-
@@ -1009,11 +1004,6 @@ def exact_substring_index_upsert_delta(
     chain grows one broadcast anti-join per day — compact (full
     re-checkpoint / table rewrite) on a cadence for long crawls. Same
     result rows as the non-delta upsert by construction.
-
-    Returns (cbase', ch', bh) — the day's own checkpointed window table
-    rides along so the caller can maintain the DISTINCT-HASH candidate
-    table incrementally (see :func:`exact_substring_distinct_hashes_append`)
-    without re-running the kernel.
 
     ``bbase``/``bh`` (optional, r12 verdict task 2): the batch's
     ALREADY-CHECKPOINTED projection and window table — when the caller's
@@ -1032,66 +1022,7 @@ def exact_substring_index_upsert_delta(
     return (
         cbase.join(F.broadcast(new_ids), "id", "left_anti").unionByName(bbase),
         ch.join(F.broadcast(new_ids), "id", "left_anti").unionByName(bh),
-        bh,
     )
-
-
-def exact_substring_distinct_hashes_append(
-    dh: DataFrame, bh: DataFrame
-) -> DataFrame:
-    """Maintain the DISTINCT window-hash table of the ExactSubstr index
-    incrementally: dh' = dh ∪ (bh's hashes not already present).
-
-    LEGACY since r13: the screen's prefilter and verify now share one
-    map-side pass over the window index itself
-    (:func:`_incremental_positions_hash64`), so the maintenance loop no
-    longer consumes dh at all — this operator remains for pipelines
-    that keep a distinct-hash artifact for OTHER consumers (e.g. a
-    bloom-style admission filter built from it).  Original rationale:
-    this was the candidate PREFILTER side of the r12 shuffle-join
-    orientation — computing it fresh was a full distinct over the
-    corpus-sized window index EVERY day (measured then as the dominant
-    per-day cost of the maintenance loop).  APPEND-ONLY is
-    exact-by-construction even under re-crawl upserts that retire old
-    windows: a stale hash admits candidates with no surviving corpus
-    window, and the literal extend-and-verify join yields zero rows for
-    them — the prefilter may only over-admit, never under-admit, and the
-    verify is the correctness boundary.  (Compact dh on the same cadence
-    as the index to reclaim the stale fraction.)  Only the DAY's
-    distinct hashes are materialized (batch-sized localCheckpoint); the
-    returned table is a lazy union over checkpointed pieces —
-    cross-day duplicate hashes are allowed for the same over-admission
-    reason, so there is no anti-join and no O(index) rewrite per day
-    (the first attempt checkpointed the merged table daily and MEASURED
-    SLOWER than the fresh distinct it replaced).
-
-    [ABSENT in reference: SURVEY §2.7 — engine extension.]
-    """
-    return dh.unionByName(bh.select("h").distinct().localCheckpoint())
-
-
-def exact_substring_index_compact(
-    cbase: DataFrame, ch: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """COMPACT the maintained ExactSubstr index — the cadence operation
-    the delta upsert and append-only distinct-hash table defer to
-    (dedup.py::exact_substring_index_upsert_delta /
-    exact_substring_distinct_hashes_append): re-materialize the
-    composed (cbase, ch) pair, collapsing the accumulated anti-join /
-    union chain, and REBUILD the distinct-hash table from the live
-    windows — reclaiming the stale fraction left by re-crawl upserts
-    (retired windows' hashes) and the cross-day duplicates the
-    append-only table tolerates.  In production this is the periodic
-    table rewrite (OPTIMIZE / rewrite-compaction) every delta-appended
-    table needs; here localCheckpoint is the materialization.  Law
-    (tests/test_dedup_clusters.py): decisions against the compacted
-    index equal decisions against the composed one — compaction is
-    invisible to semantics, it only resets the cost shape.
-
-    [ABSENT in reference: SURVEY §2.7 — engine extension.]
-    """
-    cbase2, ch2 = cbase.localCheckpoint(), ch.localCheckpoint()
-    return cbase2, ch2, ch2.select("h").distinct().localCheckpoint()
 
 
 def exact_substring_maintenance_sql(
@@ -1151,19 +1082,15 @@ def _incremental_positions_hash64(
     cbase: DataFrame,
     ch: DataFrame,
     length: int,
-    dh: DataFrame | None = None,
     bh: DataFrame | None = None,
 ) -> DataFrame:
     """The batch-vs-corpus-index join of
     :func:`exact_substring_incremental` (hash64 key), factored so the
     corpus index ``ch`` — (id, pos, h) rolling-window hashes, the
     persisted table in production — can be built ONCE and reused across
-    micro-batches by the streaming twin.  ``dh`` (optional): a
-    maintained, possibly stale-superset distinct-hash table replacing
-    the on-the-fly distinct — over-admission is corrected by the
-    literal verify below (exact_substring_distinct_hashes_append).
-    ``bh`` (optional): the batch's own precomputed window table, shared
-    with the upsert so the kernel runs once per day.
+    micro-batches by the streaming twin.  ``bh`` (optional): the
+    batch's own precomputed window table, shared with the upsert so the
+    kernel runs once per day.
 
     Join orientation (r13, r12 verdict task 2): the BATCH's distinct
     hash set is day-bounded (the screen contract — a daily batch is
@@ -1171,17 +1098,15 @@ def _incremental_positions_hash64(
     pass over the corpus window index, which yields the candidate
     corpus WINDOWS directly — the prefilter and the verify's corpus
     side come out of the same single scan, the corpus index is never
-    shuffled and never a hash-map build side, and the separate dh
-    membership pass is gone (r12's bh ⋈ dh and ch ⋈ candidate-hash
-    joins each shuffled the multi-million-row index once per day —
-    measured as the loop's dominant cost, 1.7–1.9 s of a ~2.3 s day at
-    sf0.1).  ``dh`` is therefore IGNORED since r13 (kept for API
-    compatibility): a stale-superset prefilter only helped the shuffle
-    orientation.  The production form of the broadcast is a
-    bucket-co-located ch ⋈ bh join on h (a real crawl's day may be too
-    big to broadcast; bucketing both sides on h gives the same
-    zero-shuffle plan)."""
-    del dh  # unused since the single-scan orientation (see docstring)
+    shuffled and never a hash-map build side, and no separate
+    distinct-hash membership pass is needed (r12's shuffle orientation
+    joined the batch windows against a maintained distinct-hash table
+    and then ch against the candidate hashes, each join shuffling the
+    multi-million-row index once per day — measured as the loop's
+    dominant cost, 1.7–1.9 s of a ~2.3 s day at sf0.1).  The production
+    form of the broadcast is a bucket-co-located ch ⋈ bh join on h (a
+    real crawl's day may be too big to broadcast; bucketing both sides
+    on h gives the same zero-shuffle plan)."""
     if bh is None:
         bh = _rolling_window_hashes(bbase, length)
     bhd = bh.select("h").distinct()
@@ -1739,12 +1664,11 @@ def minhash_index_upsert_sigs(
 
 def minhash_index_compact(sig_c: DataFrame) -> DataFrame:
     """COMPACT the maintained MinHash signature index (r12 verdict task
-    3 — the LSH sibling of :func:`exact_substring_index_compact`): after
-    N delta upserts the logical index is N stacked broadcast anti-joins
-    + unions; compaction materializes the merged table (localCheckpoint
-    here; OPTIMIZE/table-rewrite in production), physically reclaiming
-    rows retired by re-crawls and resetting the composition depth to a
-    bare scan.  Law (tests/test_dedup_clusters.py): decisions against
+    3): after N delta upserts the logical index is N stacked broadcast
+    anti-joins + unions; compaction materializes the merged table
+    (localCheckpoint here; OPTIMIZE/table-rewrite in production),
+    physically reclaiming rows retired by re-crawls and resetting the
+    composition depth to a bare scan.  Law (tests/test_dedup_clusters.py): decisions against
     the compacted index equal decisions against the composed one —
     compaction is invisible to semantics, it only resets the cost shape.
 

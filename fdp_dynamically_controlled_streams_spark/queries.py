@@ -48,6 +48,12 @@ from fdp_dynamically_controlled_streams_spark.functions.exactround import (
     dratio_sql as _dratio_sql,
     dratio_unscaled_sql as _dratio_unscaled_sql,
 )
+from fdp_dynamically_controlled_streams_spark.sources.registry import (
+    cached_fixture,
+    replay_dir,
+    write_replay_chunks_df,
+    write_replay_chunks_partitioned,
+)
 from fdp_dynamically_controlled_streams_spark.streaming.drain import (
     _read_replay_out,
     _replay_conf,
@@ -1621,10 +1627,6 @@ def _minhash_index_fixture(spark: SparkSession, sf_dir: str) -> str:
     seed corpus (doc_id % 5 != 0) — shared by the incremental batch
     entry and the maintenance replay (signatures deterministic; parquet
     round-trips the bigint arrays exactly)."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     d = _t(spark, sf_dir, "documents")
     return cached_fixture(
         "minhash_index",
@@ -1633,6 +1635,42 @@ def _minhash_index_fixture(spark: SparkSession, sf_dir: str) -> str:
             d.where(F.col("doc_id") % 5 != 0)
         ).write.mode("overwrite").parquet(f"{p}/sig"),
     )
+
+
+def _day_chunks(
+    spark: SparkSession,
+    sf_dir: str,
+    key: str,
+    table: str,
+    id_col: str,
+    payload_col: str,
+) -> tuple[str, str]:
+    """The daily-crawl replay input of an index-maintenance modality,
+    shared by its driver-state replay and its restart-safe pipeline: the
+    new rows of ``table`` (``id_col % 5 == 0``) as (id, payload), one
+    chunk per day (``day = (id_col % 15) div 5``, days 0-2). Day k must
+    arrive as exactly one micro-batch, or its rows would screen against
+    an index already holding part of their own day — a boundary range
+    chunking cannot guarantee, hence write_replay_chunks_partitioned.
+    Returns (data dir, stream DDL)."""
+    t = _t(spark, sf_dir, table)
+    fix = cached_fixture(
+        key,
+        sf_dir,
+        lambda p: write_replay_chunks_partitioned(
+            t.where(F.col(id_col) % 5 == 0).select(
+                id_col,
+                payload_col,
+                F.expr(f"({id_col} % 15) div 5").alias("day"),
+            ),
+            f"{p}/data",
+            part_col="day",
+            part_values=[0, 1, 2],
+            order_cols=(id_col,),
+        ),
+    )
+    payload_type = t.schema[payload_col].dataType.simpleString()
+    return f"{fix}/data", f"{id_col} long, {payload_col} {payload_type}"
 
 
 _MINHASH_MAINT_ORACLE = f"""
@@ -1703,34 +1741,13 @@ def stream_minhash_index_maintenance_replay(
     day screens against the maintained index)."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_partitioned,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    fix = cached_fixture(
-        "minhash_maint_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_partitioned(
-            d.where(F.col("doc_id") % 5 == 0).select(
-                "doc_id",
-                "text",
-                F.expr("(doc_id % 15) div 5").alias("day"),
-            ),
-            f"{p}/data",
-            part_col="day",
-            part_values=[0, 1, 2],
-            order_cols=("doc_id",),
-        ),
+    data, ddl = _day_chunks(
+        spark, sf_dir, "minhash_maint_replay", "documents", "doc_id", "text"
     )
     idx = _minhash_index_fixture(spark, sf_dir)
     state = {"sig": spark.read.parquet(f"{idx}/sig"), "day": 0}
     tmp = tempfile.mkdtemp(prefix="dcs-mhmaint-")
-    stream = replay_dir(
-        spark, f"{fix}/data", "doc_id long, text string", files_per_trigger=1
-    )
+    stream = replay_dir(spark, data, ddl)
     out = f"{tmp}/out"
 
     def _proc(bdf: DataFrame, _bid: int) -> None:
@@ -1797,38 +1814,21 @@ def stream_minhash_maintenance_pipeline(
     snapshot-per-epoch in production."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        write_replay_chunks_partitioned,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
         minhash_maintenance_pipeline,
         read_epoch_outputs,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    fix = cached_fixture(
-        "minhash_maint_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_partitioned(
-            d.where(F.col("doc_id") % 5 == 0).select(
-                "doc_id",
-                "text",
-                F.expr("(doc_id % 15) div 5").alias("day"),
-            ),
-            f"{p}/data",
-            part_col="day",
-            part_values=[0, 1, 2],
-            order_cols=("doc_id",),
-        ),
+    data, ddl = _day_chunks(
+        spark, sf_dir, "minhash_maint_replay", "documents", "doc_id", "text"
     )
     idx = _minhash_index_fixture(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="dcs-mhpipe-")
     with _replay_conf(spark, partitions=8):
         out = minhash_maintenance_pipeline(
             spark,
-            f"{fix}/data",
-            "doc_id long, text string",
+            data,
+            ddl,
             f"{idx}/sig",
             work,
             est_threshold=0.3,
@@ -1883,10 +1883,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared persisted pair table (r12: pairs are the curation
     artifact the LSH entry builds; clustering consumes the same table
     rather than re-shingling the corpus)."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     d = _t(spark, sf_dir, "documents")
     fix = cached_fixture(
         "minhash_pairs",
@@ -2143,10 +2139,6 @@ def _exact_substring_spans_fixture(spark: SparkSession, sf_dir: str) -> str:
     same table; the spans entry itself still pays the full build (it IS
     the build), while the two consumers measure their genuine marginal
     work. Deterministic longs; parquet round-trip exact."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     d = _t(spark, sf_dir, "documents")
     return cached_fixture(
         "exact_substr_spans",
@@ -2159,7 +2151,7 @@ def _exact_substring_spans_fixture(spark: SparkSession, sf_dir: str) -> str:
 
 def _exact_substring_index_fixture(spark: SparkSession, sf_dir: str) -> str:
     """The session-cached, PERSISTED ExactSubstr corpus index (cbase /
-    ch / dh parquet) over the seed corpus (doc_id % 5 != 0) — shared by
+    ch parquet) over the seed corpus (doc_id % 5 != 0) — shared by
     the incremental replay and the index-maintenance replay entries
     (r12): the docstrings have always called this 'the persisted table
     in production'; now the entries actually read one, and warm bench
@@ -2167,10 +2159,6 @@ def _exact_substring_index_fixture(spark: SparkSession, sf_dir: str) -> str:
     rebuild (the same index-once discipline as _bm25_index). Window
     hashes are deterministic and parquet round-trips them exactly, so
     results are bit-identical to the inline build."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     d = _t(spark, sf_dir, "documents")
 
     def build(p: str) -> None:
@@ -2178,9 +2166,7 @@ def _exact_substring_index_fixture(spark: SparkSession, sf_dir: str) -> str:
             d.where(F.col("doc_id") % 5 != 0), length=24
         )
         cbase.write.mode("overwrite").parquet(f"{p}/cbase")
-        ch = ch.localCheckpoint()  # one kernel pass feeds both writes
         ch.write.mode("overwrite").parquet(f"{p}/ch")
-        ch.select("h").distinct().write.mode("overwrite").parquet(f"{p}/dh")
 
     return cached_fixture("exact_substr_index", sf_dir, build)
 
@@ -2208,12 +2194,6 @@ def stream_exact_substring_incremental_replay(
     replay's union must equal the one-shot batch operator, which is the
     oracle."""
     import tempfile
-
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
 
     d = _t(spark, sf_dir, "documents")
     idx = _exact_substring_index_fixture(spark, sf_dir)
@@ -2278,47 +2258,21 @@ def stream_exact_substring_index_maintenance_replay(
     the loop set-based as "window matches any strictly-earlier day"."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_partitioned,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    fix = cached_fixture(
-        "exact_substr_maint_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_partitioned(
-            d.where(F.col("doc_id") % 5 == 0).select(
-                "doc_id",
-                "text",
-                F.expr("(doc_id % 15) div 5").alias("day"),
-            ),
-            f"{p}/data",
-            part_col="day",
-            part_values=[0, 1, 2],
-            order_cols=("doc_id",),
-        ),
+    data, ddl = _day_chunks(
+        spark, sf_dir, "exact_substr_maint_replay", "documents", "doc_id", "text"
     )
     idx = _exact_substring_index_fixture(spark, sf_dir)
-    # the maintained index starts from the PERSISTED seed artifact; the
-    # distinct-hash candidate table is part of it, appended per day
-    # The seed relations stay PARQUET-backed: an A/B that eagerly
+    # the maintained index starts from the PERSISTED seed artifact. The
+    # seed relations stay PARQUET-backed: an A/B that eagerly
     # localCheckpointed them up front measured SLOWER (7.5 vs 6.8 s —
     # the row-RDD materialization costs more than three days of
     # vectorized parquet re-decode saves; recorded in SCALE.md r13).
-    # The dh distinct-hash table is no longer consumed: since r13 the
-    # screen's prefilter and verify share ONE map-side pass over ch
-    # (see _incremental_positions_hash64), so maintaining dh per day
-    # was pure overhead in this orientation.
     state = {
         "cbase": spark.read.parquet(f"{idx}/cbase"),
         "ch": spark.read.parquet(f"{idx}/ch"),
     }
     tmp = tempfile.mkdtemp(prefix="dcs-xsmaint-")
-    stream = replay_dir(
-        spark, f"{fix}/data", "doc_id long, text string", files_per_trigger=1
-    )
+    stream = replay_dir(spark, data, ddl)
     out = f"{tmp}/out"
 
     def _proc(bdf: DataFrame, _bid: int) -> None:
@@ -2337,21 +2291,16 @@ def stream_exact_substring_index_maintenance_replay(
         # delta upsert: checkpoint the DAY's windows only; the prior
         # index stays materialized and composes lazily (the MERGE-INTO
         # delta a production crawl writes — re-materializing the whole
-        # window index per day is O(corpus) daily), and the distinct-hash
-        # candidate table appends the day's new hashes instead of
-        # re-distincting the whole index
+        # window index per day is O(corpus) daily)
         # the batch projection stays LAZY off the checkpointed bdf (a
         # trim is recomputable for free; eagerly re-materializing the
         # full text measured as a pure extra barrier per day)
-        state["cbase"], state["ch"], bh = (
-            dedup_ops.exact_substring_index_upsert_delta(
-                state["cbase"], state["ch"], bdf, length=24,
-                bbase=bdf.select(
-                    F.col("doc_id").alias("id"),
-                    F.trim(F.col("text")).alias("s"),
-                ),
-                bh=bh,
-            )
+        state["cbase"], state["ch"] = dedup_ops.exact_substring_index_upsert_delta(
+            state["cbase"], state["ch"], bdf, length=24,
+            bbase=bdf.select(
+                F.col("doc_id").alias("id"), F.trim(F.col("text")).alias("s")
+            ),
+            bh=bh,
         )
 
     drain(stream, _proc, f"{tmp}/chk", partitions=8)
@@ -2392,38 +2341,21 @@ def stream_exact_substring_maintenance_pipeline(
     exercises both inside the durable loop."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        write_replay_chunks_partitioned,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
         exact_substring_maintenance_pipeline,
         read_epoch_outputs,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    fix = cached_fixture(
-        "exact_substr_maint_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_partitioned(
-            d.where(F.col("doc_id") % 5 == 0).select(
-                "doc_id",
-                "text",
-                F.expr("(doc_id % 15) div 5").alias("day"),
-            ),
-            f"{p}/data",
-            part_col="day",
-            part_values=[0, 1, 2],
-            order_cols=("doc_id",),
-        ),
+    data, ddl = _day_chunks(
+        spark, sf_dir, "exact_substr_maint_replay", "documents", "doc_id", "text"
     )
     idx = _exact_substring_index_fixture(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="dcs-xspipe-")
     with _replay_conf(spark, partitions=8):
         out = exact_substring_maintenance_pipeline(
             spark,
-            f"{fix}/data",
-            "doc_id long, text string",
+            data,
+            ddl,
             idx,
             work,
             length=24,
@@ -2453,6 +2385,27 @@ def dedup_embedding_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, sign-LSH-bucketed self-join."""
     e = _t(spark, sf_dir, "embeddings")
     return sim_ops.embedding_near_dup_pairs(e, threshold=0.25, bits=6)
+
+
+def _embedding_seed_index(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+    """The session-cached persisted sign-LSH index over the seed vectors
+    (vec_id % 5 != 0), bucketed at derived_bits(n) for its own row count
+    n — shared by the embedding maintenance replay and pipeline. Returns
+    (index dir, n); n is recorded at build time, so a reader derives the
+    index's bits without a count job."""
+
+    def build(p: str) -> None:
+        seed = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") % 5 != 0)
+        n = seed.count()
+        sim_ops.embedding_index(
+            seed, bits=sim_ops.derived_bits(n)
+        ).write.mode("overwrite").parquet(f"{p}/idx")
+        with open(f"{p}/n", "w") as fh:
+            fh.write(str(n))
+
+    root = cached_fixture("embedding_seed_index", sf_dir, build)
+    with open(f"{root}/n") as fh:
+        return f"{root}/idx", int(fh.read())
 
 
 _EMB_MAINT_ORACLE = f"""
@@ -2527,43 +2480,17 @@ def stream_embedding_index_maintenance_replay(
     the same blocking."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_partitioned,
+    data, ddl = _day_chunks(
+        spark, sf_dir, "embedding_maint_replay", "embeddings", "vec_id", "embedding"
     )
-
-    e = _t(spark, sf_dir, "embeddings")
-    fix = cached_fixture(
-        "embedding_maint_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_partitioned(
-            e.where(F.col("vec_id") % 5 == 0).select(
-                "vec_id",
-                "embedding",
-                F.expr("(vec_id % 15) div 5").alias("day"),
-            ),
-            f"{p}/data",
-            part_col="day",
-            part_values=[0, 1, 2],
-            order_cols=("vec_id",),
-        ),
-    )
-    seed = e.where(F.col("vec_id") % 5 != 0)
-    seed_n = seed.count()
-    bits0 = sim_ops.derived_bits(seed_n)
+    idx, seed_n = _embedding_seed_index(spark, sf_dir)
     state = {
-        "idx": sim_ops.embedding_index(seed, bits=bits0).localCheckpoint(),
+        "idx": spark.read.parquet(idx),
         "n": seed_n,
-        "bits": bits0,
+        "bits": sim_ops.derived_bits(seed_n),
     }
     tmp = tempfile.mkdtemp(prefix="dcs-embmaint-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "vec_id long, embedding array<float>",
-        files_per_trigger=1,
-    )
+    stream = replay_dir(spark, data, ddl)
     out = f"{tmp}/out"
 
     def _proc(bdf: DataFrame, _bid: int) -> None:
@@ -2626,48 +2553,22 @@ def stream_embedding_maintenance_pipeline(
     the durable path must produce the replay path's exact decisions."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        write_replay_chunks_partitioned,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
         embedding_maintenance_pipeline,
         read_epoch_outputs,
     )
 
-    e = _t(spark, sf_dir, "embeddings")
-    fix = cached_fixture(
-        "embedding_maint_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_partitioned(
-            e.where(F.col("vec_id") % 5 == 0).select(
-                "vec_id",
-                "embedding",
-                F.expr("(vec_id % 15) div 5").alias("day"),
-            ),
-            f"{p}/data",
-            part_col="day",
-            part_values=[0, 1, 2],
-            order_cols=("vec_id",),
-        ),
+    data, ddl = _day_chunks(
+        spark, sf_dir, "embedding_maint_replay", "embeddings", "vec_id", "embedding"
     )
-
-    def build_seed(p: str) -> None:
-        # seed index persisted at its own derived bits (the pipeline
-        # re-derives from the snapshot row count per epoch anyway)
-        seed = e.where(F.col("vec_id") % 5 != 0)
-        sim_ops.embedding_index(
-            seed, bits=sim_ops.derived_bits(seed.count())
-        ).write.mode("overwrite").parquet(f"{p}/idx")
-
-    idx = cached_fixture("embedding_seed_index", sf_dir, build_seed)
+    idx, _ = _embedding_seed_index(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="dcs-embpipe-")
     with _replay_conf(spark, partitions=8):
         out = embedding_maintenance_pipeline(
             spark,
-            f"{fix}/data",
-            "vec_id long, embedding array<float>",
-            f"{idx}/idx",
+            data,
+            ddl,
+            idx,
             work,
             threshold=0.25,
         )
@@ -2802,10 +2703,6 @@ def _pq_codebooks_fixture(spark: SparkSession, sf_dir: str) -> list:
     import json as _json
     import os
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     def build(p: str) -> None:
         e = _t(spark, sf_dir, "embeddings")
         with open(os.path.join(p, "codebooks.json"), "w") as fh:
@@ -2822,10 +2719,6 @@ def _ivf_pq_index_fixture(spark: SparkSession, sf_dir: str) -> str:
     docstrings price, built once per (session, sf_dir) off the shared
     codebook fixture; the three PQ entries read codes, never re-encode
     the corpus per query."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     e = _t(spark, sf_dir, "embeddings")
     cbs = _pq_codebooks_fixture(spark, sf_dir)
     return cached_fixture(
@@ -3027,10 +2920,6 @@ def _ann_tier_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe-set-sized parquet instead of re-running the sweep. Bench pass-1
     attributes the build to this key; warm passes measure only the
     grouped report aggregates."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     def build(p: str) -> None:
         e = _t(spark, sf_dir, "embeddings")
         sim_ops.ann_tier_table(
@@ -3286,10 +3175,6 @@ def _cosupplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation both oracles recompute via _COSUPPLIER_EDGES_SQL."""
     import os
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     def _build(path: str) -> None:
         li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
         x = li.alias("x")
@@ -3400,10 +3285,6 @@ def graph_sssp_supply_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the rounds exactly; bounded rounds = cost-bounded reach, the
     100 TB posture (diameter convergence is never the plan)."""
     import os
-
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
 
     def _build(path: str) -> None:
         li = _t(spark, sf_dir, "lineitem")
@@ -3851,11 +3732,6 @@ def controller_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         controller_inputs_from_events,
         unify_streams,
     )
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.controller import (
         controller_streaming,
     )
@@ -4036,6 +3912,75 @@ def udx_arrow_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The event-time replays of `events`: two chunks each, range-partitioned on
+# (ts, event_id) and written by the executors, so the input never lands on
+# the driver; Spark-written parquet carries micros, so no nanos coercion is
+# needed. One builder per cache key; every entry that reads the input calls
+# it, so the chunking is defined (and built) once.
+
+
+def _events_user_type_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, event_type, ts) — the dedup, degree-count and
+    state-introspection replays. event_id rides in the chunks only as the
+    range tiebreaker; the stream's DDL projects it away."""
+    events = _t(spark, sf_dir, "events")
+    fix = cached_fixture(
+        "streaming_dedup_replay",
+        sf_dir,
+        lambda p: write_replay_chunks_df(
+            events.select("user_id", "event_type", "ts", "event_id"),
+            f"{p}/data",
+            n_chunks=2,
+            order_cols=("ts", "event_id"),
+        ),
+    )
+    return replay_dir(
+        spark, f"{fix}/data", "user_id long, event_type string, ts timestamp"
+    )
+
+
+def _events_ts_value_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_id, ts, event_type, value) — the materialized-view and the
+    tumbling, sliding, OHLC and windowed-top-k aggregation replays."""
+    events = _t(spark, sf_dir, "events")
+    fix = cached_fixture(
+        "events_ts_value_2chunks",
+        sf_dir,
+        lambda p: write_replay_chunks_df(
+            events.select("event_id", "ts", "event_type", "value"),
+            f"{p}/data",
+            n_chunks=2,
+            order_cols=("ts", "event_id"),
+        ),
+    )
+    return replay_dir(
+        spark,
+        f"{fix}/data",
+        "event_id long, ts timestamp, event_type string, value double",
+    )
+
+
+def _events_user_value_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, ts, event_id, value) — the CMS, HDR, EWMA and CUSUM
+    replays."""
+    events = _t(spark, sf_dir, "events")
+    fix = cached_fixture(
+        "events_user_value_2chunks",
+        sf_dir,
+        lambda p: write_replay_chunks_df(
+            events.select("user_id", "ts", "event_id", "value"),
+            f"{p}/data",
+            n_chunks=2,
+            order_cols=("ts", "event_id"),
+        ),
+    )
+    return replay_dir(
+        spark,
+        f"{fix}/data",
+        "user_id long, ts timestamp, event_id long, value double",
+    )
+
+
 @query(
     "streaming_dedup_replay",
     "SELECT DISTINCT user_id, event_type FROM events",
@@ -4051,34 +3996,8 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     design) is exercised with controlled timing in tests/test_streaming.py."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    # Two micro-batches, chunked distributedly on replay order (event_id
-    # rides along only as the range tiebreaker; the declared stream schema
-    # projects it away at read time). Spark-written parquet carries micros,
-    # so no nanos coercion is needed here.
-    fix = cached_fixture(
-        "streaming_dedup_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("user_id", "event_type", "ts", "event_id"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_user_type_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-dedup-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "user_id long, event_type string, ts timestamp",
-        files_per_trigger=1,
-    )
     deduped = stream.dropDuplicates(["user_id", "event_type"])
     # Measured at sf0.1: 4 state partitions beat 8 (commit overhead > state
     # volume at replay scale); partition-invariant, oracle-checked.
@@ -4449,9 +4368,6 @@ def multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually arrives at 100 TB: as object-store files, not synthesized
     columns. Oracle identical to the column path's closed form."""
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
 
@@ -5142,10 +5058,6 @@ def ann_ivf_derived_cells_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     cells = pq_ops.derived_cells(e.count())
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     idx = cached_fixture(
         "ivf_derived_index",
         sf_dir,
@@ -5348,9 +5260,6 @@ def layout_compacted_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdp_dynamically_controlled_streams_spark.operators.layout import (
         compact_parquet,
     )
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
 
     def build(p: str) -> None:
         li = _t(spark, sf_dir, "lineitem").select(
@@ -5400,10 +5309,6 @@ def layout_sorted_minmax_pruned_read(spark: SparkSession, sf_dir: str) -> DataFr
     asserts the disjointness that makes the skipping real; the plan audit
     asserts the predicate reaches the scan). Values are layout-invariant,
     so the oracle reads the raw table."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     def build(p: str) -> None:
         li = _t(spark, sf_dir, "lineitem").select(
             "l_shipdate", "l_extendedprice", "l_discount"
@@ -6414,30 +6319,9 @@ def stream_mv_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
         upsert_sink,
     )
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
 
-    events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "events_ts_value_2chunks",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("ts", "event_id", "event_type", "value"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_ts_value_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-mv-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "ts timestamp, event_id long, event_type string, value double",
-        files_per_trigger=1,
-    )
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,4)")).alias("_sum"),
@@ -6490,30 +6374,9 @@ def stream_degree_count_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
         upsert_sink,
     )
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
 
-    events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "streaming_dedup_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("user_id", "event_type", "ts", "event_id"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_user_type_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-degree-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "user_id long, event_type string, ts timestamp",
-        files_per_trigger=1,
-    )
     deg = (
         stream.dropDuplicates(["user_id", "event_type"])
         .groupBy("user_id")
@@ -6614,33 +6477,8 @@ def stream_tumbling_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-static join, and now windowed aggregation, all oracle-gated."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    # Shared fixture key: the sliding-window replay consumes the identical
-    # (event_id, ts, event_type, value) event-time chunking — one build
-    # serves both entries.
-    fix = cached_fixture(
-        "events_ts_value_2chunks",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("event_id", "ts", "event_type", "value"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_ts_value_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-twagg-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "event_id long, ts timestamp, event_type string, value double",
-        files_per_trigger=1,
-    )
     agg = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -6696,30 +6534,8 @@ def stream_ohlc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunking-invariant."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "events_ts_value_2chunks",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("event_id", "ts", "event_type", "value"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_ts_value_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-ohlc-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "event_id long, ts timestamp, event_type string, value double",
-        files_per_trigger=1,
-    )
     tb = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
     agg = (
         stream.withWatermark("ts", "30 minutes")
@@ -6776,30 +6592,8 @@ def stream_windowed_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the close-then-rank semantics, chunking-invariant."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "events_ts_value_2chunks",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("event_id", "ts", "event_type", "value"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_ts_value_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-wtopk-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "event_id long, ts timestamp, event_type string, value double",
-        files_per_trigger=1,
-    )
     agg = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -6855,34 +6649,11 @@ def stream_sliding_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (append mode): 1 h windows every 30 min — each event owns 2 open windows
     of state; a window emits exactly once when the watermark passes its end.
     Completes the streaming window trio (tumbling, session, sliding), all
-    against batch-twin oracles with the finalization rule encoded. Reuses
-    the tumbling replay's cached fixture (same chunking spec)."""
+    against batch-twin oracles with the finalization rule encoded."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "events_ts_value_2chunks",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("event_id", "ts", "event_type", "value"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_ts_value_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-slwagg-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "event_id long, ts timestamp, event_type string, value double",
-        files_per_trigger=1,
-    )
     agg = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
@@ -6905,6 +6676,34 @@ def stream_sliding_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 # 18. Stream-stream interval join (streaming/interval_join.py)
 # =========================================================================
+
+
+def _purchase_click_replay(
+    spark: SparkSession, sf_dir: str, key: str
+) -> tuple[DataFrame, DataFrame]:
+    """The interval-join entries' input: purchase and click events as
+    two (user_id, ts) streams, each side chunked distributedly in
+    event-time order (two micro-batches per side). Each entry passes its
+    OWN cache key, so fixture-build cost attributes to that entry in the
+    bench's phase split — a shared key made round-over-round deltas
+    depend on catalog iteration order (r5 verdict)."""
+    ev = _t(spark, sf_dir, "events")
+    ddl = "user_id long, ts timestamp"
+
+    def build(p: str) -> None:
+        for side, etype in (("left", "purchase"), ("right", "click")):
+            write_replay_chunks_df(
+                ev.where(F.col("event_type") == etype).select("user_id", "ts"),
+                f"{p}/{side}",
+                n_chunks=2,
+                order_cols=("ts",),
+            )
+
+    fix = cached_fixture(key, sf_dir, build)
+    return (
+        replay_dir(spark, f"{fix}/left", ddl),
+        replay_dir(spark, f"{fix}/right", ddl),
+    )
 
 
 @query(
@@ -6930,34 +6729,17 @@ def stream_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_interval_join.py)."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.interval_join import (
         interval_join_streams,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    ddl = "user_id long, ts timestamp"
-
-    # Each side chunked distributedly in event-time order (two micro-batches
-    # per side); no driver materialization.
-    def _build(p: str) -> None:
-        for side, etype in (("left", "purchase"), ("right", "click")):
-            write_replay_chunks_df(
-                ev.where(F.col("event_type") == etype).select("user_id", "ts"),
-                f"{p}/{side}",
-                n_chunks=2,
-                order_cols=("ts",),
-            )
-
-    fix = cached_fixture("stream_interval_join_replay", sf_dir, _build)
+    purchases, clicks = _purchase_click_replay(
+        spark, sf_dir, "stream_interval_join_replay"
+    )
     tmp = tempfile.mkdtemp(prefix="dcs-ivj-")
     joined = interval_join_streams(
-        replay_dir(spark, f"{fix}/left", ddl, files_per_trigger=1),
-        replay_dir(spark, f"{fix}/right", ddl, files_per_trigger=1),
+        purchases,
+        clicks,
         "user_id",
         "ts",
         "ts",
@@ -7009,35 +6791,17 @@ def stream_interval_left_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
     equality proves the outer-state eviction semantics, not just the join."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.interval_join import (
         interval_join_streams,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    ddl = "user_id long, ts timestamp"
-
-    def _build(p: str) -> None:
-        for side, etype in (("left", "purchase"), ("right", "click")):
-            write_replay_chunks_df(
-                ev.where(F.col("event_type") == etype).select("user_id", "ts"),
-                f"{p}/{side}",
-                n_chunks=2,
-                order_cols=("ts",),
-            )
-
-    # Own cache key (not shared with the inner entry) so fixture-build cost
-    # attributes to THIS entry in the bench's phase split — shared keys made
-    # round-over-round deltas depend on catalog iteration order (r5 verdict).
-    fix = cached_fixture("stream_interval_left_join_replay", sf_dir, _build)
+    purchases, clicks = _purchase_click_replay(
+        spark, sf_dir, "stream_interval_left_join_replay"
+    )
     tmp = tempfile.mkdtemp(prefix="dcs-ivjlo-")
     joined = interval_join_streams(
-        replay_dir(spark, f"{fix}/left", ddl, files_per_trigger=1),
-        replay_dir(spark, f"{fix}/right", ddl, files_per_trigger=1),
+        purchases,
+        clicks,
         "user_id",
         "ts",
         "ts",
@@ -7094,34 +6858,17 @@ def stream_interval_full_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
     eviction semantics."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.interval_join import (
         interval_join_streams,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    ddl = "user_id long, ts timestamp"
-
-    def _build(p: str) -> None:
-        for side, etype in (("left", "purchase"), ("right", "click")):
-            write_replay_chunks_df(
-                ev.where(F.col("event_type") == etype).select("user_id", "ts"),
-                f"{p}/{side}",
-                n_chunks=2,
-                order_cols=("ts",),
-            )
-
-    # Own cache key for per-entry fixture-build attribution (see the
-    # left-outer entry's note).
-    fix = cached_fixture("stream_interval_full_join_replay", sf_dir, _build)
+    purchases, clicks = _purchase_click_replay(
+        spark, sf_dir, "stream_interval_full_join_replay"
+    )
     tmp = tempfile.mkdtemp(prefix="dcs-ivjfo-")
     joined = interval_join_streams(
-        replay_dir(spark, f"{fix}/left", ddl, files_per_trigger=1),
-        replay_dir(spark, f"{fix}/right", ddl, files_per_trigger=1),
+        purchases,
+        clicks,
         "user_id",
         "ts",
         "ts",
@@ -7165,34 +6912,17 @@ def stream_interval_semi_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
     exactly once, which the inner entry's multiplicity would violate."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.interval_join import (
         interval_join_streams,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    ddl = "user_id long, ts timestamp"
-
-    def _build(p: str) -> None:
-        for side, etype in (("left", "purchase"), ("right", "click")):
-            write_replay_chunks_df(
-                ev.where(F.col("event_type") == etype).select("user_id", "ts"),
-                f"{p}/{side}",
-                n_chunks=2,
-                order_cols=("ts",),
-            )
-
-    # Own cache key for per-entry fixture-build attribution (see the
-    # left-outer entry's note).
-    fix = cached_fixture("stream_interval_semi_join_replay", sf_dir, _build)
+    purchases, clicks = _purchase_click_replay(
+        spark, sf_dir, "stream_interval_semi_join_replay"
+    )
     tmp = tempfile.mkdtemp(prefix="dcs-ivjsm-")
     joined = interval_join_streams(
-        replay_dir(spark, f"{fix}/left", ddl, files_per_trigger=1),
-        replay_dir(spark, f"{fix}/right", ddl, files_per_trigger=1),
+        purchases,
+        clicks,
         "user_id",
         "ts",
         "ts",
@@ -7393,10 +7123,6 @@ def _tfidf_index(spark: SparkSession, sf_dir: str) -> str:
     the RRF fusion and quality-report entries (r12: the second ranker
     gets the same index-once/query-many split the BM25 side has had
     since r7; warm bench passes measure retrieval, not re-weighting)."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     return cached_fixture(
         "retrieval_tfidf_weights",
@@ -7410,16 +7136,28 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> str:
     shared by the plain BM25 entry and the RRF fusion entry (the graph
     edge-fixture pattern: the expensive artifact is built once and every
     consumer's bench cost is attributed to the shared key)."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     return cached_fixture(
         "retrieval_bm25_topk",
         sf_dir,
         lambda p: retr_ops.bm25_index_write(docs, p),
     )
+
+
+def _bm25_raw_seed_index(spark: SparkSession, sf_dir: str) -> str:
+    """The session-cached persisted write-optimized raw BM25 index
+    (tdc_dl / df_t / stats parquet) over the seed corpus (doc_id % 5 !=
+    0) — the seed both BM25 maintenance entries start from (the same
+    index-once discipline as every maintenance loop's seed)."""
+    d = _t(spark, sf_dir, "documents")
+
+    def build(p: str) -> None:
+        t0, d0, s0 = retr_ops.bm25_raw_index(d.where(F.col("doc_id") % 5 != 0))
+        t0.write.mode("overwrite").parquet(f"{p}/tdc_dl")
+        d0.write.mode("overwrite").parquet(f"{p}/df_t")
+        s0.write.mode("overwrite").parquet(f"{p}/stats")
+
+    return cached_fixture("bm25_raw_index", sf_dir, build)
 
 
 @query(
@@ -7454,46 +7192,17 @@ def stream_bm25_index_maintenance_replay(
     from-scratch screens with day-scoped corpus stats."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_partitioned,
+    data, ddl = _day_chunks(
+        spark, sf_dir, "bm25_maint_replay", "documents", "doc_id", "text"
     )
-
-    d = _t(spark, sf_dir, "documents")
-    fix = cached_fixture(
-        "bm25_maint_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_partitioned(
-            d.where(F.col("doc_id") % 5 == 0).select(
-                "doc_id",
-                "text",
-                F.expr("(doc_id % 15) div 5").alias("day"),
-            ),
-            f"{p}/data",
-            part_col="day",
-            part_values=[0, 1, 2],
-            order_cols=("doc_id",),
-        ),
-    )
-    def build_raw(p: str) -> None:
-        # the persisted write-optimized raw index over the seed corpus
-        # (same index-once discipline as every maintenance loop's seed)
-        t0, d0, s0 = retr_ops.bm25_raw_index(d.where(F.col("doc_id") % 5 != 0))
-        t0.write.mode("overwrite").parquet(f"{p}/tdc_dl")
-        d0.write.mode("overwrite").parquet(f"{p}/df_t")
-        s0.write.mode("overwrite").parquet(f"{p}/stats")
-
-    idx = cached_fixture("bm25_raw_index", sf_dir, build_raw)
+    idx = _bm25_raw_seed_index(spark, sf_dir)
     state = {
         "tdc_dl": spark.read.parquet(f"{idx}/tdc_dl"),
         "df_t": spark.read.parquet(f"{idx}/df_t"),
         "stats": spark.read.parquet(f"{idx}/stats"),
     }
     tmp = tempfile.mkdtemp(prefix="dcs-bm25maint-")
-    stream = replay_dir(
-        spark, f"{fix}/data", "doc_id long, text string", files_per_trigger=1
-    )
+    stream = replay_dir(spark, data, ddl)
     out = f"{tmp}/out"
 
     def _proc(bdf: DataFrame, _bid: int) -> None:
@@ -7593,45 +7302,21 @@ def stream_bm25_maintenance_pipeline(
     (tests/test_streaming.py)."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        write_replay_chunks_partitioned,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
         bm25_maintenance_pipeline,
         read_epoch_outputs,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    fix = cached_fixture(
-        "bm25_maint_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_partitioned(
-            d.where(F.col("doc_id") % 5 == 0).select(
-                "doc_id",
-                "text",
-                F.expr("(doc_id % 15) div 5").alias("day"),
-            ),
-            f"{p}/data",
-            part_col="day",
-            part_values=[0, 1, 2],
-            order_cols=("doc_id",),
-        ),
+    data, ddl = _day_chunks(
+        spark, sf_dir, "bm25_maint_replay", "documents", "doc_id", "text"
     )
-
-    def build_raw(p: str) -> None:
-        t0, d0, s0 = retr_ops.bm25_raw_index(d.where(F.col("doc_id") % 5 != 0))
-        t0.write.mode("overwrite").parquet(f"{p}/tdc_dl")
-        d0.write.mode("overwrite").parquet(f"{p}/df_t")
-        s0.write.mode("overwrite").parquet(f"{p}/stats")
-
-    idx = cached_fixture("bm25_raw_index", sf_dir, build_raw)
+    idx = _bm25_raw_seed_index(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="dcs-bm25pipe-")
     with _replay_conf(spark, partitions=8):
         out = bm25_maintenance_pipeline(
             spark,
-            f"{fix}/data",
-            "doc_id long, text string",
+            data,
+            ddl,
             idx,
             work,
             k=10,
@@ -7671,10 +7356,6 @@ def retrieval_bm25_topk_from_maintained(
     the fixture build runs the full write path — seed raw index, three
     delta upserts, compacts, fold — and the entry itself is the
     one-join read path against it."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-    )
-
     d = _t(spark, sf_dir, "documents")
 
     def build(p: str) -> None:
@@ -8114,30 +7795,8 @@ def stream_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition)."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "streaming_dedup_replay",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("user_id", "event_type", "ts", "event_id"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_user_type_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-stintro-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "user_id long, event_type string, ts timestamp",
-        files_per_trigger=1,
-    )
     # the sink must execute each batch so the dedup state is committed
     drain(
         stream.dropDuplicates(["user_id", "event_type"]),
@@ -8175,30 +7834,10 @@ def stream_cms_counters_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         CMS_W,
         _cms_cells,
     )
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
 
     events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "events_user_value_2chunks",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("user_id", "ts", "event_id", "value"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_user_value_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-cms-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "user_id long, ts timestamp, event_id long, value double",
-        files_per_trigger=1,
-    )
     cells = stream.select(
         F.col("user_id").cast("string").alias("v")
     ).select(
@@ -8261,30 +7900,8 @@ def stream_hdr_quantiles_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1024-row read, never a rescan)."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "events_user_value_2chunks",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("user_id", "ts", "event_id", "value"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_user_value_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-hdr-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "user_id long, ts timestamp, event_id long, value double",
-        files_per_trigger=1,
-    )
     buckets = skt.hdr_bucket_rows(stream, "value")
     out = f"{tmp}/out"
     drain(
@@ -8348,33 +7965,12 @@ def stream_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/ewma.py)."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.ewma import (
         ewma_streaming,
     )
 
-    events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "events_user_value_2chunks",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("user_id", "ts", "event_id", "value"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_user_value_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-ewma-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "user_id long, ts timestamp, event_id long, value double",
-        files_per_trigger=1,
-    )
     smoothed = ewma_streaming(stream, alpha=0.2)
     # Python-heavy stateful op: same knee as the CUSUM replay (16 parts).
     return drain_to_parquet(smoothed, tmp, partitions=16).select(
@@ -8405,33 +8001,12 @@ def stream_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero drift (streaming/cusum.py)."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
     from fdp_dynamically_controlled_streams_spark.streaming.cusum import (
         cusum_streaming,
     )
 
-    events = _t(spark, sf_dir, "events")
-    fix = cached_fixture(
-        "events_user_value_2chunks",
-        sf_dir,
-        lambda p: write_replay_chunks_df(
-            events.select("user_id", "ts", "event_id", "value"),
-            f"{p}/data",
-            n_chunks=2,
-            order_cols=("ts", "event_id"),
-        ),
-    )
+    stream = _events_user_value_replay(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="dcs-cusum-")
-    stream = replay_dir(
-        spark,
-        f"{fix}/data",
-        "user_id long, ts timestamp, event_id long, value double",
-        files_per_trigger=1,
-    )
     flagged = cusum_streaming(stream, drift=60.0, threshold=200.0)
     # Python-heavy stateful op (one pandas call per key per batch): unlike
     # the JVM-state replays (4 partitions optimal — commit overhead bound),
@@ -10130,12 +9705,6 @@ def stream_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries (a session spanning the chunk seam must merge, not split)."""
     import tempfile
 
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
-    )
-
     events = _t(spark, sf_dir, "events")
     fix = cached_fixture(
         "stream_session_window_replay",
@@ -10204,11 +9773,6 @@ def controller_static_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from fdp_dynamically_controlled_streams_spark.operators.controller import (
         controller_inputs_from_events,
-    )
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        cached_fixture,
-        replay_dir,
-        write_replay_chunks_df,
     )
     from fdp_dynamically_controlled_streams_spark.streaming.static_join import (
         controller_stream_static,

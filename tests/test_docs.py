@@ -135,3 +135,29 @@ def test_one_stream_runner():
     text = runner.read_text()
     assert text.count("trigger(availableNow=True)") == 1
     assert text.count("awaitTermination(") == 1
+
+
+def test_one_builder_per_fixture_key():
+    """Every cached replay or index input is defined once: no two
+    ``cached_fixture`` call sites in the package pass the same literal
+    key. An entry that reads an input another entry already builds calls
+    that input's builder instead of restating it under the same key (the
+    copies drift — one already had a different column order)."""
+    import ast
+    from collections import Counter
+
+    pkg = REPO / "fdp_dynamically_controlled_streams_spark"
+    keys = Counter(
+        node.args[0].value
+        for path in pkg.rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", getattr(node.func, "attr", None))
+        == "cached_fixture"
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and isinstance(node.args[0].value, str)
+    )
+    assert keys, "no cached_fixture call sites found"
+    shared = sorted(k for k, n in keys.items() if n > 1)
+    assert not shared, shared
