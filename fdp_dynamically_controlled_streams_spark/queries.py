@@ -54,6 +54,7 @@ from fdp_dynamically_controlled_streams_spark.sources.registry import (
     write_replay_chunks_df,
     write_replay_chunks_partitioned,
 )
+from fdp_dynamically_controlled_streams_spark.streaming import maintenance as maint
 from fdp_dynamically_controlled_streams_spark.streaming.drain import (
     _read_replay_out,
     _replay_conf,
@@ -1640,22 +1641,23 @@ def _minhash_index_fixture(spark: SparkSession, sf_dir: str) -> str:
 def _day_chunks(
     spark: SparkSession,
     sf_dir: str,
-    key: str,
     table: str,
     id_col: str,
     payload_col: str,
 ) -> tuple[str, str]:
-    """The daily-crawl replay input of an index-maintenance modality,
-    shared by its driver-state replay and its restart-safe pipeline: the
+    """The daily-crawl replay input of the index-maintenance modalities
+    over ``table``, shared by their driver-state replays and restart-safe
+    pipelines (the three ``documents`` modalities read one copy): the
     new rows of ``table`` (``id_col % 5 == 0``) as (id, payload), one
     chunk per day (``day = (id_col % 15) div 5``, days 0-2). Day k must
     arrive as exactly one micro-batch, or its rows would screen against
     an index already holding part of their own day — a boundary range
     chunking cannot guarantee, hence write_replay_chunks_partitioned.
-    Returns (data dir, stream DDL)."""
+    The cache key is derived from ``table``, so each table has one id
+    and payload column pair. Returns (data dir, stream DDL)."""
     t = _t(spark, sf_dir, table)
     fix = cached_fixture(
-        key,
+        f"{table}_day_chunks",
         sf_dir,
         lambda p: write_replay_chunks_partitioned(
             t.where(F.col(id_col) % 5 == 0).select(
@@ -1671,6 +1673,28 @@ def _day_chunks(
     )
     payload_type = t.schema[payload_col].dataType.simpleString()
     return f"{fix}/data", f"{id_col} long, {payload_col} {payload_type}"
+
+
+def _pipeline_decisions(
+    spark: SparkSession,
+    pipeline: Callable[..., str],
+    dec_ddl: str,
+    data: str,
+    ddl: str,
+    seed: str,
+    **params,
+) -> DataFrame:
+    """Run a restart-safe ``*_maintenance_pipeline`` of
+    streaming/maintenance.py over the day chunks ``data`` from the
+    index at ``seed``, in a fresh work dir and under the 8 state
+    partitions the driver-state replays use, and return its live
+    decisions."""
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix="dcs-pipe-")
+    with _replay_conf(spark, partitions=8):
+        out = pipeline(spark, data, ddl, seed, work, **params)
+    return maint.read_epoch_outputs(spark, out, dec_ddl)
 
 
 _MINHASH_MAINT_ORACLE = f"""
@@ -1732,60 +1756,22 @@ def stream_minhash_index_maintenance_replay(
     the signature index of the seed corpus PLUS all earlier days
     (minhash_decisions_against_index — band-blocked A×B join, never a
     self-join), then UPSERTED into the index (minhash_index_upsert —
-    idempotent anti-join + append). Day-aligned replay chunks; the
-    signature index is localCheckpointed per day (the persisted table's
-    MERGE-INTO commit in production). Oracle: the loop replayed
+    idempotent anti-join + append). Day-aligned replay chunks run
+    through maintenance.minhash_step in the driver-state loop
+    (maintenance.replay_in_driver), which materializes the composed
+    signature index after day 2 (the persisted table's MERGE-INTO
+    commit in production). Oracle: the loop replayed
     set-based — a band collision counts iff the corpus side's day is
     strictly smaller. Day-internal duplicates deliberately do NOT count
     (minhash_incremental_decisions contract: they surface when the next
     day screens against the maintained index)."""
-    import tempfile
-
-    data, ddl = _day_chunks(
-        spark, sf_dir, "minhash_maint_replay", "documents", "doc_id", "text"
-    )
-    idx = _minhash_index_fixture(spark, sf_dir)
-    state = {"sig": spark.read.parquet(f"{idx}/sig"), "day": 0}
-    tmp = tempfile.mkdtemp(prefix="dcs-mhmaint-")
-    stream = replay_dir(spark, data, ddl)
-    out = f"{tmp}/out"
-
-    def _proc(bdf: DataFrame, _bid: int) -> None:
-        bdf = bdf.localCheckpoint()  # one pass over the input files
-        # the day's shingle+minhash kernel runs ONCE (r12 verdict task
-        # 2): the screen and the delta upsert share the checkpointed
-        # batch signatures instead of each re-signing the batch
-        sig_b = dedup_ops.minhash_signatures(bdf).localCheckpoint()
-        # decisions built off the pre-upsert state (closure capture),
-        # so the upsert thunk can re-point state without racing
-        dec = dedup_ops.minhash_decisions_against_sigs(
-            sig_b, state["sig"], est_threshold=0.3
-        )
-
-        def _upsert() -> None:
-            state["sig"] = dedup_ops.minhash_index_upsert_sigs(
-                state["sig"], bdf.select(F.col("doc_id").alias("id")), sig_b
-            )
-            state["day"] += 1
-            if state["day"] == 2:
-                # mid-loop compaction cadence: materialize the composed
-                # anti-join/union chain (semantics-invisible by law —
-                # tests/test_dedup_clusters.py; the replay's hashes are
-                # unchanged with or without this line)
-                state["sig"] = dedup_ops.minhash_index_compact(state["sig"])
-
-        # decisions write ∥ day-2 compaction (the upsert itself is
-        # lazy; the compact is the only job) — guide §2.6 back-fill
-        overlap_jobs(
-            lambda: dec.write.mode("append").parquet(out),
-            _upsert,
-        )
-
-    drain(stream, _proc, f"{tmp}/chk", partitions=8)
-    return _read_replay_out(
+    data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
+    return maint.replay_in_driver(
         spark,
-        "doc_id long, n_matches long, best_est double, is_new boolean",
-        out,
+        data,
+        ddl,
+        f"{_minhash_index_fixture(spark, sf_dir)}/sig",
+        maint.minhash_step(),
     )
 
 
@@ -1812,29 +1798,15 @@ def stream_minhash_maintenance_pipeline(
     driver-state deltas: a real crawl pays the snapshot write for
     restartability; MERGE INTO on a transactional table replaces the
     snapshot-per-epoch in production."""
-    import tempfile
-
-    from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
-        minhash_maintenance_pipeline,
-        read_epoch_outputs,
-    )
-
-    data, ddl = _day_chunks(
-        spark, sf_dir, "minhash_maint_replay", "documents", "doc_id", "text"
-    )
-    idx = _minhash_index_fixture(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="dcs-mhpipe-")
-    with _replay_conf(spark, partitions=8):
-        out = minhash_maintenance_pipeline(
-            spark,
-            data,
-            ddl,
-            f"{idx}/sig",
-            work,
-            est_threshold=0.3,
-        )
-    return read_epoch_outputs(
-        spark, out, "doc_id long, n_matches long, best_est double, is_new boolean"
+    data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
+    return _pipeline_decisions(
+        spark,
+        maint.minhash_maintenance_pipeline,
+        maint.MINHASH_DDL,
+        data,
+        ddl,
+        f"{_minhash_index_fixture(spark, sf_dir)}/sig",
+        est_threshold=0.3,
     )
 
 
@@ -2228,14 +2200,17 @@ def stream_exact_substring_incremental_replay(
     )
 
 
+_EXACT_SUBSTR_MAINT_ORACLE = dedup_ops.exact_substring_maintenance_sql(
+    "documents",
+    length=24,
+    batch_pred="doc_id % 5 = 0",
+    day_expr="(doc_id % 15) // 5",
+)
+
+
 @query(
     "stream_exact_substring_index_maintenance_replay",
-    dedup_ops.exact_substring_maintenance_sql(
-        "documents",
-        length=24,
-        batch_pred="doc_id % 5 = 0",
-        day_expr="(doc_id % 15) // 5",
-    ),
+    _EXACT_SUBSTR_MAINT_ORACLE,
     tags=("dedup", "substring", "span", "incremental", "streaming", "replay"),
 )
 def stream_exact_substring_index_maintenance_replay(
@@ -2250,75 +2225,28 @@ def stream_exact_substring_index_maintenance_replay(
     anti-join + append, merge.py::upsert_sink discipline) so the next
     day screens against it. Day-aligned replay chunks (one micro-batch
     per day, write_replay_chunks_partitioned — range chunking cannot
-    guarantee the day boundary the semantics depend on); the index pair
-    is localCheckpointed per day (the MERGE-INTO commit of the
-    production bucketed table). Law (tests/test_dedup_clusters.py): the
+    guarantee the day boundary the semantics depend on) run through
+    maintenance.exact_substring_step in the driver-state loop
+    (maintenance.replay_in_driver); the index pair starts from the
+    persisted seed and composes lazily, one delta per day (the MERGE-INTO
+    delta of the production bucketed table). Law
+    (tests/test_dedup_clusters.py): the
     replay's decision union equals running the batch incremental
     operator day-by-day with a growing corpus; the DuckDB twin replays
     the loop set-based as "window matches any strictly-earlier day"."""
-    import tempfile
-
-    data, ddl = _day_chunks(
-        spark, sf_dir, "exact_substr_maint_replay", "documents", "doc_id", "text"
-    )
-    idx = _exact_substring_index_fixture(spark, sf_dir)
-    # the maintained index starts from the PERSISTED seed artifact. The
-    # seed relations stay PARQUET-backed: an A/B that eagerly
-    # localCheckpointed them up front measured SLOWER (7.5 vs 6.8 s —
-    # the row-RDD materialization costs more than three days of
-    # vectorized parquet re-decode saves; recorded in SCALE.md r13).
-    state = {
-        "cbase": spark.read.parquet(f"{idx}/cbase"),
-        "ch": spark.read.parquet(f"{idx}/ch"),
-    }
-    tmp = tempfile.mkdtemp(prefix="dcs-xsmaint-")
-    stream = replay_dir(spark, data, ddl)
-    out = f"{tmp}/out"
-
-    def _proc(bdf: DataFrame, _bid: int) -> None:
-        bdf = bdf.localCheckpoint()  # one pass over the input files
-        # the day's rolling-hash kernel runs ONCE (r12 verdict task 2):
-        # screen and delta upsert share the checkpointed window table
-        bh = dedup_ops._rolling_window_hashes(
-            bdf.select(
-                F.col("doc_id").alias("id"), F.trim(F.col("text")).alias("s")
-            ),
-            24,
-        ).localCheckpoint()
-        dedup_ops.exact_substring_incremental_against_index(
-            bdf, state["cbase"], state["ch"], length=24, bh=bh
-        ).write.mode("append").parquet(out)
-        # delta upsert: checkpoint the DAY's windows only; the prior
-        # index stays materialized and composes lazily (the MERGE-INTO
-        # delta a production crawl writes — re-materializing the whole
-        # window index per day is O(corpus) daily)
-        # the batch projection stays LAZY off the checkpointed bdf (a
-        # trim is recomputable for free; eagerly re-materializing the
-        # full text measured as a pure extra barrier per day)
-        state["cbase"], state["ch"] = dedup_ops.exact_substring_index_upsert_delta(
-            state["cbase"], state["ch"], bdf, length=24,
-            bbase=bdf.select(
-                F.col("doc_id").alias("id"), F.trim(F.col("text")).alias("s")
-            ),
-            bh=bh,
-        )
-
-    drain(stream, _proc, f"{tmp}/chk", partitions=8)
-    return _read_replay_out(
+    data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
+    return maint.replay_in_driver(
         spark,
-        "doc_id long, span_start long, span_end long, span_len long",
-        out,
+        data,
+        ddl,
+        _exact_substring_index_fixture(spark, sf_dir),
+        maint.exact_substring_step(),
     )
 
 
 @query(
     "stream_exact_substring_maintenance_pipeline",
-    dedup_ops.exact_substring_maintenance_sql(
-        "documents",
-        length=24,
-        batch_pred="doc_id % 5 = 0",
-        day_expr="(doc_id % 15) // 5",
-    ),
+    _EXACT_SUBSTR_MAINT_ORACLE,
     tags=("dedup", "substring", "span", "incremental", "streaming",
           "replay", "restart-safe"),
 )
@@ -2339,31 +2267,16 @@ def stream_exact_substring_maintenance_pipeline(
     compaction policy ON (keep_snapshots=2, compact_outputs_depth=2):
     retention and roll-up are answer-invariant by law, and this entry
     exercises both inside the durable loop."""
-    import tempfile
-
-    from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
-        exact_substring_maintenance_pipeline,
-        read_epoch_outputs,
-    )
-
-    data, ddl = _day_chunks(
-        spark, sf_dir, "exact_substr_maint_replay", "documents", "doc_id", "text"
-    )
-    idx = _exact_substring_index_fixture(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="dcs-xspipe-")
-    with _replay_conf(spark, partitions=8):
-        out = exact_substring_maintenance_pipeline(
-            spark,
-            data,
-            ddl,
-            idx,
-            work,
-            length=24,
-            compact_outputs_depth=2,
-        )
-    return read_epoch_outputs(
-        spark, out,
-        "doc_id long, span_start long, span_end long, span_len long",
+    data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
+    return _pipeline_decisions(
+        spark,
+        maint.exact_substring_maintenance_pipeline,
+        maint.EXACT_SUBSTRING_DDL,
+        data,
+        ddl,
+        _exact_substring_index_fixture(spark, sf_dir),
+        length=24,
+        compact_outputs_depth=2,
     )
 
 
@@ -2387,25 +2300,19 @@ def dedup_embedding_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim_ops.embedding_near_dup_pairs(e, threshold=0.25, bits=6)
 
 
-def _embedding_seed_index(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+def _embedding_seed_index(spark: SparkSession, sf_dir: str) -> str:
     """The session-cached persisted sign-LSH index over the seed vectors
     (vec_id % 5 != 0), bucketed at derived_bits(n) for its own row count
-    n — shared by the embedding maintenance replay and pipeline. Returns
-    (index dir, n); n is recorded at build time, so a reader derives the
-    index's bits without a count job."""
+    n — shared by the embedding maintenance replay and pipeline, whose
+    step re-derives the bits from the index's row count."""
 
     def build(p: str) -> None:
         seed = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") % 5 != 0)
-        n = seed.count()
         sim_ops.embedding_index(
-            seed, bits=sim_ops.derived_bits(n)
+            seed, bits=sim_ops.derived_bits(seed.count())
         ).write.mode("overwrite").parquet(f"{p}/idx")
-        with open(f"{p}/n", "w") as fh:
-            fh.write(str(n))
 
-    root = cached_fixture("embedding_seed_index", sf_dir, build)
-    with open(f"{root}/n") as fh:
-        return f"{root}/idx", int(fh.read())
+    return f"{cached_fixture('embedding_seed_index', sf_dir, build)}/idx"
 
 
 _EMB_MAINT_ORACLE = f"""
@@ -2464,71 +2371,25 @@ def stream_embedding_index_maintenance_replay(
     UPSERTED into the index (embedding_index_upsert — idempotent
     anti-join + map-side bucketize). Output: one (vec_id, n_matches,
     best_cos, is_new) decision row per new vector. Day-aligned replay
-    chunks; the index is localCheckpointed per day (the persisted
-    bucketed table's commit in production).
+    chunks run through maintenance.embedding_step in the driver-state
+    loop (maintenance.replay_in_driver); the index is localCheckpointed
+    per day (the persisted bucketed table's commit in production).
 
     DERIVED BITS (r13 — the r12 verdict's top task): the plane count is
     NOT pinned — each day re-derives bits = derived_bits(|index|)
-    (occupancy-targeted, exact integer) and RE-BUCKETS the index
-    (embedding_index_rebucket, map-side) when the corpus outgrows its
-    bucket budget, so candidate work per screened vector stays pinned
+    (occupancy-targeted, exact integer) and RE-BUCKETS the index to it
+    (embedding_index_rebucket, map-side), so when the corpus outgrows
+    its bucket budget the plane count follows, and candidate work per
+    screened vector stays pinned
     near the occupancy target at every scale instead of densifying
     super-linearly at a fixed bits (SCALE_FIT r12: 10× volume → ~21×
     wall at pinned bits=6).  The DuckDB twin derives the identical
     per-day bits from the identical corpus count (derived_bits_sql) and
     masks the packed MAX_BITS bucket to the day's bits — bit-for-bit
     the same blocking."""
-    import tempfile
-
-    data, ddl = _day_chunks(
-        spark, sf_dir, "embedding_maint_replay", "embeddings", "vec_id", "embedding"
-    )
-    idx, seed_n = _embedding_seed_index(spark, sf_dir)
-    state = {
-        "idx": spark.read.parquet(idx),
-        "n": seed_n,
-        "bits": sim_ops.derived_bits(seed_n),
-    }
-    tmp = tempfile.mkdtemp(prefix="dcs-embmaint-")
-    stream = replay_dir(spark, data, ddl)
-    out = f"{tmp}/out"
-
-    def _proc(bdf: DataFrame, _bid: int) -> None:
-        bdf = bdf.localCheckpoint()  # one pass over the input files
-        # re-derive the plane count from the CURRENT index size; on a
-        # budget overflow the rebucket (map-side, no shuffle) is the
-        # compaction this index family runs on the upsert cadence
-        bits = sim_ops.derived_bits(state["n"])
-        if bits != state["bits"]:
-            state["idx"] = sim_ops.embedding_index_rebucket(
-                state["idx"], bits
-            ).localCheckpoint()
-            state["bits"] = bits
-        # decisions built off the pre-upsert index (closure capture),
-        # so the upsert thunk can re-point state without racing
-        dec = sim_ops.embedding_decisions_against_index(
-            bdf, state["idx"], threshold=0.25, bits=bits
-        )
-
-        def _upsert() -> None:
-            state["idx"] = sim_ops.embedding_index_upsert(
-                state["idx"], bdf, bits=bits
-            ).localCheckpoint()
-            state["n"] = state["idx"].count()
-
-        # decisions write ∥ index-upsert materialization: independent
-        # off the checkpointed bdf and prior index (guide §2.6 —
-        # back-fill the straggler tails instead of chaining the jobs)
-        overlap_jobs(
-            lambda: dec.write.mode("append").parquet(out),
-            _upsert,
-        )
-
-    drain(stream, _proc, f"{tmp}/chk", partitions=8)
-    return _read_replay_out(
-        spark,
-        "vec_id long, n_matches long, best_cos double, is_new boolean",
-        out,
+    data, ddl = _day_chunks(spark, sf_dir, "embeddings", "vec_id", "embedding")
+    return maint.replay_in_driver(
+        spark, data, ddl, _embedding_seed_index(spark, sf_dir), maint.embedding_step()
     )
 
 
@@ -2551,30 +2412,15 @@ def stream_embedding_maintenance_pipeline(
     value is persisted, so a restart reconstructs the identical
     blocking from the identical data.  Same oracle as the replay entry:
     the durable path must produce the replay path's exact decisions."""
-    import tempfile
-
-    from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
-        embedding_maintenance_pipeline,
-        read_epoch_outputs,
-    )
-
-    data, ddl = _day_chunks(
-        spark, sf_dir, "embedding_maint_replay", "embeddings", "vec_id", "embedding"
-    )
-    idx, _ = _embedding_seed_index(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="dcs-embpipe-")
-    with _replay_conf(spark, partitions=8):
-        out = embedding_maintenance_pipeline(
-            spark,
-            data,
-            ddl,
-            idx,
-            work,
-            threshold=0.25,
-        )
-    return read_epoch_outputs(
-        spark, out,
-        "vec_id long, n_matches long, best_cos double, is_new boolean",
+    data, ddl = _day_chunks(spark, sf_dir, "embeddings", "vec_id", "embedding")
+    return _pipeline_decisions(
+        spark,
+        maint.embedding_maintenance_pipeline,
+        maint.EMBEDDING_DDL,
+        data,
+        ddl,
+        _embedding_seed_index(spark, sf_dir),
+        threshold=0.25,
     )
 
 
@@ -7160,16 +7006,19 @@ def _bm25_raw_seed_index(spark: SparkSession, sf_dir: str) -> str:
     return cached_fixture("bm25_raw_index", sf_dir, build)
 
 
+_BM25_MAINT_ORACLE = retr_ops.bm25_maintenance_sql(
+    "documents",
+    k=10,
+    batch_pred="doc_id % 5 = 0",
+    day_expr="(doc_id % 15) // 5",
+    n_days=3,
+    panel_pred="doc_id % 100 = 0",
+)
+
+
 @query(
     "stream_bm25_index_maintenance_replay",
-    retr_ops.bm25_maintenance_sql(
-        "documents",
-        k=10,
-        batch_pred="doc_id % 5 = 0",
-        day_expr="(doc_id % 15) // 5",
-        n_days=3,
-        panel_pred="doc_id % 100 = 0",
-    ),
+    _BM25_MAINT_ORACLE,
     tags=("text", "retrieval", "bm25", "incremental", "streaming", "replay"),
 )
 def stream_bm25_index_maintenance_replay(
@@ -7188,95 +7037,20 @@ def stream_bm25_index_maintenance_replay(
     index form; the precomputed-contribution postings of
     retrieval_bm25_topk are the READ-optimized compacted form — the
     explicit write-vs-read index trade (operators/retrieval.py::
-    bm25_raw_index docstring). Oracle: a UNION ALL of per-day
-    from-scratch screens with day-scoped corpus stats."""
-    import tempfile
-
-    data, ddl = _day_chunks(
-        spark, sf_dir, "bm25_maint_replay", "documents", "doc_id", "text"
-    )
-    idx = _bm25_raw_seed_index(spark, sf_dir)
-    state = {
-        "tdc_dl": spark.read.parquet(f"{idx}/tdc_dl"),
-        "df_t": spark.read.parquet(f"{idx}/df_t"),
-        "stats": spark.read.parquet(f"{idx}/stats"),
-    }
-    tmp = tempfile.mkdtemp(prefix="dcs-bm25maint-")
-    stream = replay_dir(spark, data, ddl)
-    out = f"{tmp}/out"
-
-    def _proc(bdf: DataFrame, _bid: int) -> None:
-        bdf = bdf.localCheckpoint()  # one pass over the input files
-        # panel-bounded screening (doc_id % 100 == 0, the same panel
-        # density as retrieval_bm25_topk) — the fixture's 31-word vocabulary
-        # makes EVERY corpus doc a candidate for every query, so an
-        # unbounded panel is query-count × corpus quadratic (the same
-        # bound retrieval_bm25_topk applies); the UPSERT below still
-        # folds the WHOLE day into the index.
-        # the screen is BUILT off the pre-upsert state here (plain
-        # closure capture), so the upsert thunk below can re-point the
-        # state dict without racing the write
-        scr = retr_ops.bm25_screen_against_raw(
-            bdf.where(F.col("doc_id") % 100 == 0),
-            state["tdc_dl"], state["df_t"], state["stats"], k=10,
-        )
-
-        def _upsert() -> None:
-            # delta upsert: the day's own relations are checkpointed
-            # inside; the corpus-sized postings composition stays LAZY
-            # over the materialized prior (re-materializing it per day
-            # is O(corpus) daily — the ExactSubstr delta lesson);
-            # df/stats are vocabulary-/row-sized and compose LAZILY too
-            # (r13 verdict task 2): checkpointing them cost one driver
-            # job each per day, pure constant; the day-2 compact below
-            # materializes the chain
-            t2, d2, s2 = retr_ops.bm25_raw_index_upsert(
-                state["tdc_dl"], state["df_t"], state["stats"], bdf,
-                delta=True,
-            )
-            state["tdc_dl"], state["df_t"], state["stats"] = t2, d2, s2
-            state["day"] = state.get("day", 0) + 1
-            if state["day"] == 2:
-                # mid-loop compaction cadence (bm25_raw_index_compact):
-                # materialize the composed postings chain — semantics-
-                # invisible by law (tests/test_retrieval_spans.py), the
-                # replay's hashes are unchanged with or without this
-                # line
-                state["tdc_dl"], state["df_t"], state["stats"] = (
-                    retr_ops.bm25_raw_index_compact(
-                        state["tdc_dl"], state["df_t"], state["stats"]
-                    )
-                )
-
-        # screen write ∥ upsert checkpoints (+ day-2 compact): the
-        # day's decisions job and the index-delta materializations are
-        # independent once bdf is checkpointed — both read only the
-        # prior state's materialized relations — so they back-fill each
-        # other's straggler tails (guide §2.6) instead of running the
-        # per-day job chain end to end
-        overlap_jobs(
-            lambda: scr.write.mode("append").parquet(out),
-            _upsert,
-        )
-
-    drain(stream, _proc, f"{tmp}/chk", partitions=8)
-    return _read_replay_out(
-        spark,
-        "query_id long, doc_id long, rank int, score double",
-        out,
+    bm25_raw_index docstring). The days run through
+    maintenance.bm25_step in the driver-state loop
+    (maintenance.replay_in_driver), which materializes the composed
+    relations after day 2. Oracle: a UNION ALL of per-day from-scratch
+    screens with day-scoped corpus stats."""
+    data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
+    return maint.replay_in_driver(
+        spark, data, ddl, _bm25_raw_seed_index(spark, sf_dir), maint.bm25_step()
     )
 
 
 @query(
     "stream_bm25_maintenance_pipeline",
-    retr_ops.bm25_maintenance_sql(
-        "documents",
-        k=10,
-        batch_pred="doc_id % 5 = 0",
-        day_expr="(doc_id % 15) // 5",
-        n_days=3,
-        panel_pred="doc_id % 100 = 0",
-    ),
+    _BM25_MAINT_ORACLE,
     tags=("text", "retrieval", "bm25", "incremental", "streaming",
           "replay", "restart-safe"),
 )
@@ -7300,32 +7074,18 @@ def stream_bm25_maintenance_pipeline(
     loop.  Retention + decisions compaction ON (keep_snapshots=2,
     compact_outputs_depth=2), answer-invariant by law
     (tests/test_streaming.py)."""
-    import tempfile
-
-    from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
-        bm25_maintenance_pipeline,
-        read_epoch_outputs,
-    )
-
-    data, ddl = _day_chunks(
-        spark, sf_dir, "bm25_maint_replay", "documents", "doc_id", "text"
-    )
-    idx = _bm25_raw_seed_index(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="dcs-bm25pipe-")
-    with _replay_conf(spark, partitions=8):
-        out = bm25_maintenance_pipeline(
-            spark,
-            data,
-            ddl,
-            idx,
-            work,
-            k=10,
-            panel_mod=100,
-            compact_outputs_depth=2,
-            fold_every=2,
-        )
-    return read_epoch_outputs(
-        spark, out, "query_id long, doc_id long, rank int, score double"
+    data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
+    return _pipeline_decisions(
+        spark,
+        maint.bm25_maintenance_pipeline,
+        maint.BM25_DDL,
+        data,
+        ddl,
+        _bm25_raw_seed_index(spark, sf_dir),
+        k=10,
+        panel_mod=100,
+        compact_outputs_depth=2,
+        fold_every=2,
     )
 
 

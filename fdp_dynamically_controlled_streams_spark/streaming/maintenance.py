@@ -1,28 +1,42 @@
-"""The daily-crawl index-maintenance loop as a RESTART-SAFE Structured
-Streaming pipeline (r12 verdict task 4).
+"""The daily-crawl index-maintenance loop, written once per modality and
+run by two loops that differ only in where the index lives between
+micro-batches.
 
-The replay entries compose batch upserts day-by-day with DRIVER-memory
-state (a dict holding the localCheckpointed index) — correct under the
-hermetic availableNow replay, but a crashed driver loses the index and a
-re-delivered micro-batch would double-apply.  This module is the
-production form: **the streaming query's only state is the PERSISTED
-index artifact**, written as one snapshot per micro-batch epoch, so the
-pipeline survives exactly the two failure modes foreachBatch exposes:
+Each modality (MinHash, embedding, ExactSubstr, BM25) has one
+:class:`Step`: ``step.run(bdf, prior) -> (decisions, next)`` screens a
+micro-batch against the index relations ``prior`` and builds the index
+after the batch's upsert, ``next``, as lazy frames.  A step checkpoints
+only batch-sized kernels that both outputs share; it never writes and
+never decides when the index materializes.  Its two clients:
 
-* **restart** — a new run over the same checkpointLocation resumes with
-  the batches Spark knows are uncommitted; the batch body reconstructs
-  its screening index by reading the newest persisted snapshot with
-  epoch < its batch id (seed if none), NOT from driver memory;
-* **re-delivery** — foreachBatch is at-least-once per epoch; both writes
-  (the day's decisions and the index snapshot) go to epoch-addressed
-  directories with mode=overwrite, so re-running a batch rewrites the
-  identical artifacts instead of appending duplicates (the
-  merge.py::upsert_sink idempotence discipline applied to the stream).
+* :func:`replay_in_driver` (the ``*_index_maintenance_replay`` catalog
+  entries) keeps ``next`` in DRIVER memory as a lazily composed frame
+  and materializes it with ``localCheckpoint`` whenever
+  :func:`compaction_due` fires on the number of upserts composed since
+  the last (the modality's ``max_depth``).  Cheap, but a crashed driver
+  loses the index and a re-delivered micro-batch would double-apply.
+* :func:`_run_epochs` (the ``*_maintenance_pipeline`` functions) is
+  RESTART-SAFE: **the streaming query's only state is the PERSISTED
+  index artifact**, written as one snapshot per micro-batch epoch, so
+  the pipeline survives exactly the two failure modes foreachBatch
+  exposes:
+
+  * **restart** — a new run over the same checkpointLocation resumes
+    with the batches Spark knows are uncommitted; the batch body reads
+    its ``prior`` from the newest persisted snapshot with epoch < its
+    batch id (seed if none), NOT from driver memory;
+  * **re-delivery** — foreachBatch is at-least-once per epoch; both
+    writes (the day's decisions and the index snapshot) go to
+    epoch-addressed directories with mode=overwrite, so re-running a
+    batch rewrites the identical artifacts instead of appending
+    duplicates (the merge.py::upsert_sink idempotence discipline
+    applied to the stream).
 
 Reference lineage: the reference keeps ALL its streaming state in the
 engine checkpoint (SparkStructuredController.scala:30 `checkpointLocation`
-— SURVEY §2.5 O4); this extends that discipline to a state object the
-engine cannot checkpoint for us (a whole index table).
+— SURVEY §2.5 O4); the durable loop extends that discipline to a state
+object the engine cannot checkpoint for us (a whole index table), and
+the step is the one stream processor both state placements share.
 
 [ABSENT in reference: SURVEY §2.7 — engine extension.]
 """
@@ -31,6 +45,11 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +58,33 @@ from fdp_dynamically_controlled_streams_spark.functions.parallelism import (
     overlap_jobs,
 )
 from fdp_dynamically_controlled_streams_spark.operators import dedup as dedup_ops
-from fdp_dynamically_controlled_streams_spark.streaming.drain import drain
+from fdp_dynamically_controlled_streams_spark.operators import (
+    retrieval as retr_ops,
+)
+from fdp_dynamically_controlled_streams_spark.operators import (
+    similarity as sim_ops,
+)
+from fdp_dynamically_controlled_streams_spark.sources.registry import replay_dir
+from fdp_dynamically_controlled_streams_spark.streaming.drain import (
+    _read_replay_out,
+    drain,
+)
+
+
+def _relation_paths(path: str, parts: tuple[str, ...] = ()) -> dict[str, str]:
+    """Where each relation of an epoch (or seed) dir lives: a lone
+    relation — or an unnamed one — is the dir itself, the relations of
+    a multi-relation snapshot (``parts``) get one subdir each."""
+    if len(parts) > 1:
+        return {p: os.path.join(path, p) for p in parts}
+    return {p: path for p in parts or ("",)}
+
+
+def _markers(path: str, parts: tuple[str, ...] = ()) -> list[str]:
+    """The parquet _SUCCESS marker of each relation of an epoch dir."""
+    return [
+        os.path.join(p, "_SUCCESS") for p in _relation_paths(path, parts).values()
+    ]
 
 
 def _is_committed(path: str, parts: tuple[str, ...] = ()) -> bool:
@@ -47,12 +92,16 @@ def _is_committed(path: str, parts: tuple[str, ...] = ()) -> bool:
     for a multi-relation snapshot (``parts``), iff EVERY relation's
     marker exists: a crash between relation writes leaves a partial
     epoch dir that is ignored and rewritten whole on re-delivery."""
-    if not parts:
-        return os.path.exists(os.path.join(path, "_SUCCESS"))
-    return all(
-        os.path.exists(os.path.join(path, part, "_SUCCESS"))
-        for part in parts
-    )
+    return all(os.path.exists(m) for m in _markers(path, parts))
+
+
+def _drop_epoch(path: str, parts: tuple[str, ...] = ()) -> None:
+    """Delete an epoch dir, its marker(s) FIRST: a crash mid-delete
+    leaves an uncommitted (ignored) dir, never a half-readable one."""
+    for marker in _markers(path, parts):
+        if os.path.exists(marker):
+            os.remove(marker)
+    shutil.rmtree(path, ignore_errors=True)
 
 
 def _committed_epochs(
@@ -79,11 +128,8 @@ def _latest_snapshot(
     of them, for multi-relation snapshots) — a crash mid-write leaves
     no marker and the snapshot is ignored, so a torn write can never be
     screened against."""
-    best = None
-    for ep, p in _committed_epochs(sig_root, parts):
-        if ep < before_epoch and (best is None or ep > best[0]):
-            best = (ep, p)
-    return best[1] if best else None
+    older = [p for ep, p in _committed_epochs(sig_root, parts) if ep < before_epoch]
+    return older[-1] if older else None
 
 
 def reclaim_epoch_snapshots(
@@ -108,20 +154,9 @@ def reclaim_epoch_snapshots(
     reclaimed paths."""
     if keep_last < 2:
         raise ValueError("keep_last must be >= 2 (re-delivery safety)")
-    import shutil
-
-    committed = _committed_epochs(root, parts)
-    reclaimed = []
-    for _, p in committed[:-keep_last] if len(committed) > keep_last else []:
-        if parts:
-            for part in parts:
-                marker = os.path.join(p, part, "_SUCCESS")
-                if os.path.exists(marker):
-                    os.remove(marker)
-        else:
-            os.remove(os.path.join(p, "_SUCCESS"))
-        shutil.rmtree(p, ignore_errors=True)
-        reclaimed.append(p)
+    reclaimed = [p for _, p in _committed_epochs(root, parts)[:-keep_last]]
+    for p in reclaimed:
+        _drop_epoch(p, parts)
     return reclaimed
 
 
@@ -146,6 +181,17 @@ def compaction_due(
     return depth >= max_depth or retired_frac >= max_retired_frac
 
 
+def _live_outputs(
+    out_root: str,
+) -> tuple[list[tuple[int, str]], list[tuple[int, str]]]:
+    """The committed roll-ups (``c*``) of a decisions root and the
+    committed epoch dirs above the newest of them, each ascending: the
+    newest roll-up plus those epochs are the live decisions."""
+    rolls = _committed_epochs(out_root, prefix="c")
+    upto = rolls[-1][0] if rolls else -1
+    return rolls, [(ep, p) for ep, p in _committed_epochs(out_root) if ep > upto]
+
+
 def compact_epoch_outputs(spark: SparkSession, out_root: str, ddl: str) -> str | None:
     """DECISIONS COMPACTION (r13 verdict task 3): roll every committed
     epoch decision dir (``e*``, plus any prior roll-up ``c*``) into ONE
@@ -159,24 +205,15 @@ def compact_epoch_outputs(spark: SparkSession, out_root: str, ddl: str) -> str |
     between write and reclaim double-lists nothing.  Re-delivery of a
     compacted epoch just recreates an ``e*`` dir the reader ignores.
     Returns the roll-up path (None if there was nothing to compact)."""
-    import shutil
-
-    rolls = _committed_epochs(out_root, prefix="c")
-    upto = rolls[-1][0] if rolls else -1
-    epochs = [(ep, p) for ep, p in _committed_epochs(out_root) if ep > upto]
+    rolls, epochs = _live_outputs(out_root)
     if not epochs:
         return None
-    hi = max(ep for ep, _ in epochs)
-    paths = [p for _, p in epochs] + ([rolls[-1][1]] if rolls else [])
-    target = os.path.join(out_root, f"c{hi}")
-    spark.read.schema(ddl).parquet(*paths).write.mode("overwrite").parquet(
-        target
-    )
+    target = os.path.join(out_root, f"c{epochs[-1][0]}")
+    spark.read.schema(ddl).parquet(
+        *(p for _, p in epochs + rolls[-1:])
+    ).write.mode("overwrite").parquet(target)
     for _, p in epochs + rolls:
-        marker = os.path.join(p, "_SUCCESS")
-        if os.path.exists(marker):
-            os.remove(marker)
-        shutil.rmtree(p, ignore_errors=True)
+        _drop_epoch(p)
     return target
 
 
@@ -188,12 +225,180 @@ def maybe_compact_outputs(
     reaches ``max_depth``.  (The retired-fraction axis is 0 for
     decision outputs — they are append-only facts, never superseded —
     so depth is the only live trigger here.)"""
-    rolls = _committed_epochs(out_root, prefix="c")
-    upto = rolls[-1][0] if rolls else -1
-    depth = sum(1 for ep, _ in _committed_epochs(out_root) if ep > upto)
-    if compaction_due(depth, max_depth=max_depth):
+    if compaction_due(len(_live_outputs(out_root)[1]), max_depth=max_depth):
         return compact_epoch_outputs(spark, out_root, ddl)
     return None
+
+
+# An index: each relation name of a Step's ``parts`` to its frame.
+Index = dict[str, DataFrame]
+
+
+class Step(NamedTuple):
+    """One modality's per-micro-batch body and what its two loops need
+    to know about it."""
+
+    # (bdf, prior) -> (decisions, next)
+    run: Callable[[DataFrame, Index], tuple[DataFrame, Index]]
+    parts: tuple[str, ...]  # the index relations, in snapshot layout order
+    ddl: str  # the decisions' schema
+    # upserts the driver-state loop composes lazily before it
+    # materializes the index (None: never)
+    max_depth: int | None
+
+
+# The driver-state cadences: the minhash and bm25 chains materialize
+# after the second day's upsert (three days in all); the embedding index
+# is checkpointed every day, because the next day counts it to derive
+# its plane count; the ExactSubstr window index stays a lazy composition
+# over the parquet seed (an eager materialization of the seed measured
+# slower than three days of vectorized parquet re-decode, SCALE.md r13).
+MINHASH_MAX_DEPTH = 2
+EMBEDDING_MAX_DEPTH = 1
+EXACT_SUBSTRING_MAX_DEPTH = None
+BM25_MAX_DEPTH = 2
+
+MINHASH_DDL = "doc_id long, n_matches long, best_est double, is_new boolean"
+EMBEDDING_DDL = "vec_id long, n_matches long, best_cos double, is_new boolean"
+EXACT_SUBSTRING_DDL = "doc_id long, span_start long, span_end long, span_len long"
+BM25_DDL = "query_id long, doc_id long, rank int, score double"
+
+BM25_PARTS = ("tdc_dl", "df_t", "stats")
+
+
+def minhash_step(est_threshold: float = 0.3) -> Step:
+    """Band-blocked MinHash decisions against the signature index, then
+    the signature delta upsert."""
+
+    def run(bdf, prior):
+        # the day's shingle+minhash kernel runs ONCE: the screen and the
+        # upsert share the checkpointed batch signatures
+        sig_b = dedup_ops.minhash_signatures(bdf).localCheckpoint()
+        dec = dedup_ops.minhash_decisions_against_sigs(
+            sig_b, prior["sig"], est_threshold=est_threshold
+        )
+        return dec, {
+            "sig": dedup_ops.minhash_index_upsert_sigs(
+                prior["sig"], bdf.select(F.col("doc_id").alias("id")), sig_b
+            )
+        }
+
+    return Step(run, ("sig",), MINHASH_DDL, MINHASH_MAX_DEPTH)
+
+
+def embedding_step(threshold: float = 0.25) -> Step:
+    """Sign-LSH cosine decisions against the vector index, then the
+    vector upsert, with the plane count derived from the prior index's
+    own row count (similarity.derived_bits): the map-side rebucket to it
+    is this family's compaction, and no bits value exists to carry
+    between batches or reconcile on restart."""
+
+    def run(bdf, prior):
+        bits = sim_ops.derived_bits(prior["idx"].count())
+        idx = sim_ops.embedding_index_rebucket(prior["idx"], bits)
+        dec = sim_ops.embedding_decisions_against_index(
+            bdf, idx, threshold=threshold, bits=bits
+        )
+        return dec, {"idx": sim_ops.embedding_index_upsert(idx, bdf, bits=bits)}
+
+    return Step(run, ("idx",), EMBEDDING_DDL, EMBEDDING_MAX_DEPTH)
+
+
+def exact_substring_step(length: int = 24) -> Step:
+    """Verbatim-span screen against the two-relation window index
+    (``cbase`` trimmed corpus projection, ``ch`` rolling-hash windows) —
+    the single-scan broadcast orientation with retire-first re-crawl
+    self-exclusion — then the delta upsert."""
+
+    def run(bdf, prior):
+        bbase = bdf.select(
+            F.col("doc_id").alias("id"), F.trim(F.col("text")).alias("s")
+        )
+        # the day's rolling-hash kernel runs ONCE: screen and upsert
+        # share the checkpointed window table; the trimmed projection
+        # stays lazy (eagerly materializing the text measured as a pure
+        # extra barrier per day)
+        bh = dedup_ops._rolling_window_hashes(bbase, length).localCheckpoint()
+        dec = dedup_ops.exact_substring_incremental_against_index(
+            bdf, prior["cbase"], prior["ch"], length=length, bh=bh
+        )
+        cbase, ch = dedup_ops.exact_substring_index_upsert_delta(
+            prior["cbase"], prior["ch"], bdf, length=length, bbase=bbase, bh=bh
+        )
+        return dec, {"cbase": cbase, "ch": ch}
+
+    return Step(
+        run, ("cbase", "ch"), EXACT_SUBSTRING_DDL, EXACT_SUBSTRING_MAX_DEPTH
+    )
+
+
+def bm25_step(k: int = 10, panel_mod: int = 100) -> Step:
+    """Top-``k`` BM25 screen of the batch's panel docs
+    (``doc_id % panel_mod == 0``) against the raw index
+    (``tdc_dl`` postings, ``df_t`` vocabulary df, 1-row ``stats``),
+    then the delta upsert of the WHOLE batch (bm25_raw_index_upsert:
+    the batch postings checkpoint once; df/stats move by exact integer
+    deltas)."""
+
+    def run(bdf, prior):
+        t, d, s = (prior[p] for p in BM25_PARTS)
+        # the panel bounds the screen: with a small vocabulary every
+        # corpus doc is a candidate for every query, so an unbounded
+        # panel is query-count × corpus (the bound retrieval_bm25_topk
+        # applies too)
+        scr = retr_ops.bm25_screen_against_raw(
+            bdf.where(F.col("doc_id") % panel_mod == 0), t, d, s, k=k
+        )
+        nxt = retr_ops.bm25_raw_index_upsert(t, d, s, bdf, delta=True)
+        return scr, dict(zip(BM25_PARTS, nxt))
+
+    return Step(run, BM25_PARTS, BM25_DDL, BM25_MAX_DEPTH)
+
+
+def _read_snapshot(spark: SparkSession, path: str, parts: tuple[str, ...]) -> Index:
+    return {p: spark.read.parquet(q) for p, q in _relation_paths(path, parts).items()}
+
+
+def replay_in_driver(
+    spark: SparkSession,
+    data_path: str,
+    schema: str,
+    seed_path: str,
+    step: Step,
+) -> DataFrame:
+    """The driver-state client of ``step``: drain the files in
+    ``data_path`` one per micro-batch under 8 state partitions, starting
+    from the index at ``seed_path`` (the snapshot layout of
+    :func:`_run_epochs`).  Each batch is checkpointed and run through
+    the step; its decisions are appended to ``{tmp}/out`` while, when
+    :func:`compaction_due` fires on the upserts composed so far
+    (``step.max_depth``), ``next`` is materialized with
+    ``localCheckpoint`` — the two jobs are independent, so they overlap.
+    ``next`` then becomes the following batch's ``prior``.  Returns a
+    lazy read of the decisions."""
+    tmp = tempfile.mkdtemp(prefix="dcs-maint-")
+    out = os.path.join(tmp, "out")
+    state = {"index": _read_snapshot(spark, seed_path, step.parts), "depth": 0}
+
+    def _proc(bdf: DataFrame, _bid: int) -> None:
+        dec, nxt = step.run(bdf.localCheckpoint(), state["index"])
+        depth = state["depth"] + 1
+        due = step.max_depth is not None and compaction_due(
+            depth, max_depth=step.max_depth
+        )
+        state["depth"] = 0 if due else depth
+
+        def _advance() -> None:
+            state["index"] = (
+                {p: f.localCheckpoint() for p, f in nxt.items()} if due else nxt
+            )
+
+        # dec was built off the prior index, so re-pointing the state
+        # while it is written races nothing
+        overlap_jobs(lambda: dec.write.mode("append").parquet(out), _advance)
+
+    drain(replay_dir(spark, data_path, schema), _proc, f"{tmp}/chk", partitions=8)
+    return _read_replay_out(spark, step.ddl, out)
 
 
 def _run_epochs(
@@ -202,48 +407,51 @@ def _run_epochs(
     schema: str,
     work_dir: str,
     seed_path: str,
-    step,
-    dec_ddl: str,
+    step: Step,
     files_per_trigger: int,
     keep_snapshots: int | None,
     compact_outputs_depth: int | None,
-    parts: tuple[str, ...] = (),
     snap_dir: str = "idx",
+    on_commit: Callable[[int, dict[str, str]], None] | None = None,
 ) -> str:
-    """The durable epoch loop the four pipelines share: drain the files
-    in ``data_path`` (one micro-batch per ``files_per_trigger`` files)
-    and, per micro-batch ``bid``, checkpoint the batch, find the newest
-    committed snapshot with epoch < ``bid`` (``seed_path`` if none), and
-    call ``step(bdf, bid, prior, out_dir, snap_dir)``.  The step writes
-    the epoch's decisions to ``out_dir`` (``work_dir/out/e<bid>``) and
-    the next snapshot — one relation per name in ``parts``, or a single
-    one — to ``snap_dir`` (``work_dir/<snap_dir>/e<bid>``), both
-    mode=overwrite, so a re-delivered batch rewrites identical
-    artifacts.  Then retention and decisions compaction run.  The
-    streaming checkpoint is ``work_dir/chk``; returns the decisions
-    root."""
-    from fdp_dynamically_controlled_streams_spark.sources.registry import (
-        replay_dir,
-    )
-
+    """The durable client of ``step``: drain the files in ``data_path``
+    (one micro-batch per ``files_per_trigger`` files) and, per
+    micro-batch ``bid``, checkpoint the batch, read ``prior`` from the
+    newest committed snapshot with epoch < ``bid`` (``seed_path`` if
+    none) and run the step.  The epoch's decisions go to
+    ``work_dir/out/e<bid>`` and every ``next`` relation to
+    ``work_dir/<snap_dir>/e<bid>``, all mode=overwrite, so a
+    re-delivered batch rewrites identical artifacts.  Then
+    ``on_commit(bid, {relation: path})``, retention and decisions
+    compaction run.  The streaming checkpoint is ``work_dir/chk``;
+    returns the decisions root."""
     snap_root = os.path.join(work_dir, snap_dir)
     out_root = os.path.join(work_dir, "out")
     os.makedirs(snap_root, exist_ok=True)
 
     def _proc(bdf: DataFrame, bid: int) -> None:
-        bdf = bdf.localCheckpoint()
-        prior = _latest_snapshot(snap_root, bid, parts) or seed_path
-        step(
-            bdf,
-            bid,
-            prior,
-            os.path.join(out_root, f"e{bid}"),
-            os.path.join(snap_root, f"e{bid}"),
+        prior = _latest_snapshot(snap_root, bid, step.parts) or seed_path
+        dec, nxt = step.run(
+            bdf.localCheckpoint(), _read_snapshot(spark, prior, step.parts)
         )
+        snap = _relation_paths(os.path.join(snap_root, f"e{bid}"), step.parts)
+        # decisions ∥ every snapshot relation: independent epoch-addressed
+        # overwrite sinks (an epoch stays uncommitted until every
+        # relation's marker exists, whatever the write order), so each
+        # back-fills the others' straggler tails
+        overlap_jobs(
+            partial(dec.write.mode("overwrite").parquet, f"{out_root}/e{bid}"),
+            *(
+                partial(nxt[p].write.mode("overwrite").parquet, path)
+                for p, path in snap.items()
+            ),
+        )
+        if on_commit is not None:
+            on_commit(bid, snap)
         if keep_snapshots is not None:
-            reclaim_epoch_snapshots(snap_root, keep_snapshots, parts)
+            reclaim_epoch_snapshots(snap_root, keep_snapshots, step.parts)
         if compact_outputs_depth is not None:
-            maybe_compact_outputs(spark, out_root, dec_ddl, compact_outputs_depth)
+            maybe_compact_outputs(spark, out_root, step.ddl, compact_outputs_depth)
 
     drain(
         replay_dir(spark, data_path, schema, files_per_trigger),
@@ -264,9 +472,10 @@ def minhash_maintenance_pipeline(
     keep_snapshots: int | None = 2,
     compact_outputs_depth: int | None = None,
 ) -> str:
-    """Run the MinHash screen-then-upsert loop over the files in
-    ``data_path`` (one micro-batch per ``files_per_trigger`` files) with
-    persisted-artifact state under ``work_dir``:
+    """Run the MinHash screen-then-upsert loop (:func:`minhash_step`)
+    over the files in ``data_path`` (one micro-batch per
+    ``files_per_trigger`` files) with persisted-artifact state under
+    ``work_dir``:
 
     * ``work_dir/sig/e<epoch>/``  — index snapshot AFTER epoch's upsert
     * ``work_dir/out/e<epoch>/``  — epoch's decision rows
@@ -288,30 +497,10 @@ def minhash_maintenance_pipeline(
     roll epoch decision dirs into one ``c<epoch>`` dir whenever
     :func:`compaction_due` fires on the dir count; None disables.  Both
     are answer-invariant by law (tests/test_streaming.py)."""
-
-    def _step(bdf, _bid, prior, out_dir, snap):
-        sig_c = spark.read.parquet(prior)
-        sig_b = dedup_ops.minhash_signatures(bdf).localCheckpoint()
-        # the decisions write and the snapshot write are INDEPENDENT
-        # jobs once sig_b is checkpointed (different epoch-addressed
-        # overwrite sinks — commit order is irrelevant to re-delivery);
-        # overlapping them back-fills each job's straggler tail
-        dec = dedup_ops.minhash_decisions_against_sigs(
-            sig_b, sig_c, est_threshold=est_threshold
-        )
-        ups = dedup_ops.minhash_index_upsert_sigs(
-            sig_c, bdf.select(F.col("doc_id").alias("id")), sig_b
-        )
-        overlap_jobs(
-            lambda: dec.write.mode("overwrite").parquet(out_dir),
-            lambda: ups.write.mode("overwrite").parquet(snap),
-        )
-
     return _run_epochs(
-        spark, data_path, schema, work_dir, seed_sig_path, _step,
-        "doc_id long, n_matches long, best_est double, is_new boolean",
-        files_per_trigger, keep_snapshots, compact_outputs_depth,
-        snap_dir="sig",
+        spark, data_path, schema, work_dir, seed_sig_path,
+        minhash_step(est_threshold), files_per_trigger, keep_snapshots,
+        compact_outputs_depth, snap_dir="sig",
     )
 
 
@@ -326,11 +515,11 @@ def embedding_maintenance_pipeline(
     keep_snapshots: int | None = 2,
     compact_outputs_depth: int | None = None,
 ) -> str:
-    """The EMBEDDING modality of the restart-safe loop — same persisted
-    epoch-snapshot state discipline as
-    :func:`minhash_maintenance_pipeline`, composed with the r13
-    derived-parameter rule: each epoch re-derives the sign-LSH plane
-    count from the CURRENT persisted index's size
+    """The EMBEDDING modality of the restart-safe loop
+    (:func:`embedding_step`) — same persisted epoch-snapshot state
+    discipline as :func:`minhash_maintenance_pipeline`, composed with
+    the r13 derived-parameter rule: each epoch re-derives the sign-LSH
+    plane count from the CURRENT persisted index's size
     (similarity.derived_bits) and re-buckets the snapshot map-side
     before screening, so the durable pipeline carries the
     occupancy-pinned scale shape too.  Rebucketing unconditionally (one
@@ -338,30 +527,10 @@ def embedding_maintenance_pipeline(
     pipeline STATELESS beyond the snapshots themselves: no bits value
     to persist or reconcile on restart — the snapshot's own row count
     determines it, bit-identically on any replay."""
-    from fdp_dynamically_controlled_streams_spark.operators import (
-        similarity as sim_ops,
-    )
-
-    def _step(bdf, _bid, prior, out_dir, snap):
-        idx = spark.read.parquet(prior)
-        bits = sim_ops.derived_bits(idx.count())
-        idx = sim_ops.embedding_index_rebucket(idx, bits).localCheckpoint()
-        # decisions write ∥ snapshot write: independent epoch-addressed
-        # overwrite sinks off the shared checkpointed index (see
-        # minhash_maintenance_pipeline)
-        dec = sim_ops.embedding_decisions_against_index(
-            bdf, idx, threshold=threshold, bits=bits
-        )
-        ups = sim_ops.embedding_index_upsert(idx, bdf, bits=bits)
-        overlap_jobs(
-            lambda: dec.write.mode("overwrite").parquet(out_dir),
-            lambda: ups.write.mode("overwrite").parquet(snap),
-        )
-
     return _run_epochs(
-        spark, data_path, schema, work_dir, seed_index_path, _step,
-        "vec_id long, n_matches long, best_cos double, is_new boolean",
-        files_per_trigger, keep_snapshots, compact_outputs_depth,
+        spark, data_path, schema, work_dir, seed_index_path,
+        embedding_step(threshold), files_per_trigger, keep_snapshots,
+        compact_outputs_depth,
     )
 
 
@@ -386,47 +555,16 @@ def exact_substring_maintenance_pipeline(
     between the two writes leaves an ignored partial epoch that
     re-delivery rewrites whole.  ``seed_index_path`` must hold the seed
     pair under ``cbase/`` and ``ch/`` (the exact_substring_index
-    fixture layout).  Per epoch: the day's rolling-hash kernel runs
-    ONCE (screen and upsert share the checkpointed window table — the
-    r12 single-kernel discipline), the screen is the single-scan
-    broadcast orientation with retire-first re-crawl self-exclusion,
-    and the upsert writes the full next-index snapshot (the durable
-    counterpart of the replay entry's lazy delta — a MERGE INTO on a
-    transactional table in production)."""
-
-    def _step(bdf, _bid, prior, out_dir, snap):
-        cbase = spark.read.parquet(os.path.join(prior, "cbase"))
-        ch = spark.read.parquet(os.path.join(prior, "ch"))
-        bbase = bdf.select(
-            F.col("doc_id").alias("id"), F.trim(F.col("text")).alias("s")
-        )
-        bh = dedup_ops._rolling_window_hashes(bbase, length).localCheckpoint()
-        # decisions write ∥ cbase snapshot ∥ ch snapshot: all three read
-        # only the prior snapshot's parquet plus the checkpointed
-        # bdf/bh, and each goes to its own epoch-addressed overwrite
-        # sink (a partial epoch stays uncommitted until BOTH relation
-        # markers exist regardless of write order)
-        dec = dedup_ops.exact_substring_incremental_against_index(
-            bdf, cbase, ch, length=length, bh=bh
-        )
-        new_ids = bbase.select("id")
-        overlap_jobs(
-            lambda: dec.write.mode("overwrite").parquet(out_dir),
-            lambda: cbase.join(F.broadcast(new_ids), "id", "left_anti")
-            .unionByName(bbase)
-            .write.mode("overwrite")
-            .parquet(os.path.join(snap, "cbase")),
-            lambda: ch.join(F.broadcast(new_ids), "id", "left_anti")
-            .unionByName(bh)
-            .write.mode("overwrite")
-            .parquet(os.path.join(snap, "ch")),
-        )
-
+    fixture layout).  Per epoch (:func:`exact_substring_step`): the
+    day's rolling-hash kernel runs ONCE (screen and upsert share the
+    checkpointed window table — the r12 single-kernel discipline), and
+    the upsert's composition is written as the full next-index snapshot
+    (the durable counterpart of the replay entry's lazy delta — a MERGE
+    INTO on a transactional table in production)."""
     return _run_epochs(
-        spark, data_path, schema, work_dir, seed_index_path, _step,
-        "doc_id long, span_start long, span_end long, span_len long",
-        files_per_trigger, keep_snapshots, compact_outputs_depth,
-        parts=("cbase", "ch"),
+        spark, data_path, schema, work_dir, seed_index_path,
+        exact_substring_step(length), files_per_trigger, keep_snapshots,
+        compact_outputs_depth,
     )
 
 
@@ -448,15 +586,14 @@ def bm25_maintenance_pipeline(
     ``e<epoch>/tdc_dl`` (postings), ``e<epoch>/df_t`` (vocabulary df),
     ``e<epoch>/stats`` (1-row n/sumdl) — ride the same _SUCCESS-gated
     epoch-snapshot discipline (committed iff all three markers exist).
-    Per epoch: the day's panel docs (``doc_id % panel_mod == 0``) are
-    BM25-screened against the prior snapshot, then the day is
-    delta-UPSERTED (bm25_raw_index_upsert(delta=True): the batch
-    postings checkpoint once; df/stats move by exact integer deltas)
-    and the composed relations are written as the next snapshot —
-    which is ALSO the compaction (:func:`bm25_raw_index_compact`'s
-    semantics performed by the parquet write: the anti-join/union
-    composition materializes and retired rows physically leave), so
-    the pipeline's snapshot depth is 1 by construction.
+    Per epoch (:func:`bm25_step`): the day's panel docs
+    (``doc_id % panel_mod == 0``) are BM25-screened against the prior
+    snapshot, then the day is delta-UPSERTED and the composed relations
+    are written as the next snapshot — which is ALSO the compaction
+    (:func:`bm25_raw_index_compact`'s semantics performed by the
+    parquet write: the anti-join/union composition materializes and
+    retired rows physically leave), so the pipeline's snapshot depth is
+    1 by construction.
 
     ``fold_every`` (r13 verdict task 1's cadence clause): every N
     epochs ALSO bake the current corpus globals into READ-optimized
@@ -465,61 +602,25 @@ def bm25_maintenance_pipeline(
     index, exactly the maintained→folded serving split of
     retrieval_bm25_topk_from_maintained, now inside the durable loop
     (fold snapshots ride the same retention)."""
-    from fdp_dynamically_controlled_streams_spark.operators import (
-        retrieval as retr_ops,
-    )
-
     fold_root = os.path.join(work_dir, "fold")
 
-    def _step(bdf, bid, prior, out_dir, snap):
-        tdc_dl = spark.read.parquet(os.path.join(prior, "tdc_dl"))
-        df_t = spark.read.parquet(os.path.join(prior, "df_t"))
-        stats = spark.read.parquet(os.path.join(prior, "stats"))
-        scr = retr_ops.bm25_screen_against_raw(
-            bdf.where(F.col("doc_id") % panel_mod == 0),
-            tdc_dl, df_t, stats, k=k,
-        )
-        t2, d2, s2 = retr_ops.bm25_raw_index_upsert(
-            tdc_dl, df_t, stats, bdf, delta=True
-        )
-        # screen ∥ postings ∥ df ∥ stats: the upsert's three relations
-        # are mutually independent compositions over the prior
-        # snapshot's parquet plus the checkpointed batch postings, and
-        # the screen reads only the prior snapshot — four independent
-        # epoch-addressed overwrite sinks.  The postings composition no
-        # longer localCheckpoints per epoch (that double-materialized
-        # the corpus-sized relation on every NON-fold epoch); fold
-        # epochs instead read back the snapshot the same batch just
-        # wrote — bit-identical rows, one composition pass total.
-        overlap_jobs(
-            lambda: scr.write.mode("overwrite").parquet(out_dir),
-            lambda: t2.write.mode("overwrite").parquet(
-                os.path.join(snap, "tdc_dl")
-            ),
-            lambda: d2.write.mode("overwrite").parquet(
-                os.path.join(snap, "df_t")
-            ),
-            lambda: s2.write.mode("overwrite").parquet(
-                os.path.join(snap, "stats")
-            ),
-        )
-        if fold_every is not None and (bid + 1) % fold_every == 0:
-            folded = retr_ops.bm25_fold_postings(
-                spark.read.parquet(os.path.join(snap, "tdc_dl")),
-                spark.read.parquet(os.path.join(snap, "df_t")),
-                spark.read.parquet(os.path.join(snap, "stats")),
-            )
-            folded.write.mode("overwrite").parquet(
-                os.path.join(fold_root, f"e{bid}")
-            )
-            if keep_snapshots is not None:
-                reclaim_epoch_snapshots(fold_root, keep_snapshots)
+    def _fold(bid: int, snap: dict[str, str]) -> None:
+        if (bid + 1) % fold_every:
+            return
+        # read back the snapshot this batch just wrote: bit-identical
+        # rows, and the postings composition is materialized once, by
+        # that write
+        retr_ops.bm25_fold_postings(
+            *(spark.read.parquet(snap[p]) for p in BM25_PARTS)
+        ).write.mode("overwrite").parquet(os.path.join(fold_root, f"e{bid}"))
+        if keep_snapshots is not None:
+            reclaim_epoch_snapshots(fold_root, keep_snapshots)
 
     return _run_epochs(
-        spark, data_path, schema, work_dir, seed_index_path, _step,
-        "query_id long, doc_id long, rank int, score double",
-        files_per_trigger, keep_snapshots, compact_outputs_depth,
-        parts=("tdc_dl", "df_t", "stats"),
+        spark, data_path, schema, work_dir, seed_index_path,
+        bm25_step(k, panel_mod), files_per_trigger, keep_snapshots,
+        compact_outputs_depth,
+        on_commit=None if fold_every is None else _fold,
     )
 
 
@@ -533,11 +634,8 @@ def read_epoch_outputs(spark: SparkSession, out_root: str, ddl: str) -> DataFram
     rewrites of already-rolled-up epochs — counting them would
     double-list), so compaction and re-delivery are both invisible to
     the reader."""
-    rolls = _committed_epochs(out_root, prefix="c")
-    upto = rolls[-1][0] if rolls else -1
-    paths = ([rolls[-1][1]] if rolls else []) + [
-        p for ep, p in _committed_epochs(out_root) if ep > upto
-    ]
+    rolls, epochs = _live_outputs(out_root)
+    paths = [p for _, p in rolls[-1:] + epochs]
     if not paths:
         return spark.createDataFrame([], ddl)
     return spark.read.schema(ddl).parquet(*paths)

@@ -137,6 +137,38 @@ def test_one_stream_runner():
     assert text.count("awaitTermination(") == 1
 
 
+def test_one_step_per_maintenance_modality():
+    """Each index-maintenance modality's screen and upsert are written
+    once, in its step in streaming/maintenance.py, which both the
+    driver-state replay and the restart-safe pipeline run: outside
+    ``operators/`` (where the operators are defined and compose), each
+    of these operators has exactly one package call site, there."""
+    import ast
+    from collections import Counter
+
+    ops = (
+        "minhash_decisions_against_sigs",
+        "minhash_index_upsert_sigs",
+        "exact_substring_index_upsert_delta",
+        "embedding_decisions_against_index",
+        "embedding_index_upsert",
+        "bm25_screen_against_raw",
+    )
+    pkg = REPO / "fdp_dynamically_controlled_streams_spark"
+    sites = Counter(
+        (name, str(path.relative_to(pkg)))
+        for path in pkg.rglob("*.py")
+        if "operators" not in path.relative_to(pkg).parts
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        for name in [getattr(node.func, "id", getattr(node.func, "attr", None))]
+        if name in ops
+    )
+    assert sites == Counter(
+        {(name, "streaming/maintenance.py"): 1 for name in ops}
+    ), sorted(sites.items())
+
+
 def test_one_builder_per_fixture_key():
     """Every cached replay or index input is defined once: no two
     ``cached_fixture`` call sites in the package pass the same literal

@@ -606,7 +606,9 @@ def test_minhash_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
     from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
         _latest_snapshot,
         minhash_maintenance_pipeline,
+        minhash_step,
         read_epoch_outputs,
+        replay_in_driver,
     )
 
     base = "the quick brown fox jumps over the lazy dog again and again"
@@ -641,6 +643,10 @@ def test_minhash_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
     )
     ref = sorted(map(tuple, read_epoch_outputs(spark, ref_out, ddl).collect()))
     assert ref and any(r[0] == 20 and r[1] >= 1 and not r[3] for r in ref)
+    # the driver-state loop runs the same step over the same seed and days
+    assert sorted(map(tuple, replay_in_driver(
+        spark, data_dir, "doc_id long, text string", seed_path, minhash_step()
+    ).collect())) == ref
 
     # (1) interrupted + resumed run over a shared work_dir
     data2 = str(tmp_path / "data2")
@@ -705,7 +711,9 @@ def test_embedding_maintenance_pipeline_resume(spark, tmp_path):
     )
     from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
         embedding_maintenance_pipeline,
+        embedding_step,
         read_epoch_outputs,
+        replay_in_driver,
     )
 
     def vec(i, flip=1.0):
@@ -754,6 +762,11 @@ def test_embedding_maintenance_pipeline_resume(spark, tmp_path):
     )
     ref = sorted(map(tuple, read_epoch_outputs(spark, ref_out, ddl).collect()))
     assert any(r[0] == 200 and r[1] >= 1 and not r[3] for r in ref)
+    # the driver-state loop runs the same step over the same seed and days
+    assert sorted(map(tuple, replay_in_driver(
+        spark, d1, "vec_id long, embedding array<float>", f"{seed_path}/idx",
+        embedding_step(),
+    ).collect())) == ref
 
     # interrupted + resumed
     d2 = str(tmp_path / "d2"); add2 = make_data(d2)
@@ -826,7 +839,9 @@ def test_exact_substring_maintenance_pipeline_resume_and_idempotent(
     from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
         _latest_snapshot,
         exact_substring_maintenance_pipeline,
+        exact_substring_step,
         read_epoch_outputs,
+        replay_in_driver,
     )
 
     blk0 = "a verbatim shared licence block across docs"
@@ -863,6 +878,11 @@ def test_exact_substring_maintenance_pipeline_resume_and_idempotent(
     ref = sorted(map(tuple, read_epoch_outputs(spark, ref_out, ddl).collect()))
     assert any(r[0] == 20 and r[3] >= len(blk1) for r in ref)  # via day-0 snapshot
     assert any(r[0] == 10 for r in ref) and any(r[0] == 30 for r in ref)
+    # the driver-state loop runs the same step over the same seed and days
+    assert sorted(map(tuple, replay_in_driver(
+        spark, d1, "doc_id long, text string", seed_path,
+        exact_substring_step(length=12),
+    ).collect())) == ref
 
     # (1) interrupted + resumed
     d2 = str(tmp_path / "d2")
@@ -928,7 +948,9 @@ def test_bm25_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
     from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
         _latest_snapshot,
         bm25_maintenance_pipeline,
+        bm25_step,
         read_epoch_outputs,
+        replay_in_driver,
     )
 
     seed = spark.createDataFrame(
@@ -961,6 +983,11 @@ def test_bm25_maintenance_pipeline_resume_and_idempotent(spark, tmp_path):
     ref = sorted(map(tuple, read_epoch_outputs(spark, ref_out, ddl).collect()))
     # day-1 query 20 must retrieve day-0 docs (grape/kiwi exist only there)
     assert any(r[0] == 20 and r[1] in (10, 11) for r in ref)
+    # the driver-state loop runs the same step over the same seed and days
+    assert sorted(map(tuple, replay_in_driver(
+        spark, d1, "doc_id long, text string", seed_path,
+        bm25_step(k=3, panel_mod=1),
+    ).collect())) == ref
 
     # (1) interrupted + resumed
     d2 = str(tmp_path / "d2")
