@@ -1684,11 +1684,9 @@ def _pipeline_decisions(
     seed: str,
     **params,
 ) -> DataFrame:
-    """Run a restart-safe ``*_maintenance_pipeline`` of
-    streaming/maintenance.py over the day chunks ``data`` from the
-    index at ``seed``, in a fresh work dir and under the 8 state
-    partitions the driver-state replays use, and return its live
-    decisions."""
+    """Run a restart-safe ``maint.*_maintenance_pipeline`` over the day
+    chunks ``data`` from ``seed`` in a fresh work dir, under the replays'
+    8 state partitions, and return its live decisions."""
     import tempfile
 
     work = tempfile.mkdtemp(prefix="dcs-pipe-")
@@ -1757,10 +1755,9 @@ def stream_minhash_index_maintenance_replay(
     (minhash_decisions_against_index — band-blocked A×B join, never a
     self-join), then UPSERTED into the index (minhash_index_upsert —
     idempotent anti-join + append). Day-aligned replay chunks run
-    through maintenance.minhash_step in the driver-state loop
-    (maintenance.replay_in_driver), which materializes the composed
-    signature index after day 2 (the persisted table's MERGE-INTO
-    commit in production). Oracle: the loop replayed
+    through maint.minhash_step in maint.replay_in_driver, which
+    materializes the composed index after day 2 (the persisted table's
+    MERGE-INTO commit in production). Oracle: the loop replayed
     set-based — a band collision counts iff the corpus side's day is
     strictly smaller. Day-internal duplicates deliberately do NOT count
     (minhash_incremental_decisions contract: they surface when the next
@@ -2226,14 +2223,13 @@ def stream_exact_substring_index_maintenance_replay(
     day screens against it. Day-aligned replay chunks (one micro-batch
     per day, write_replay_chunks_partitioned — range chunking cannot
     guarantee the day boundary the semantics depend on) run through
-    maintenance.exact_substring_step in the driver-state loop
-    (maintenance.replay_in_driver); the index pair starts from the
-    persisted seed and composes lazily, one delta per day (the MERGE-INTO
-    delta of the production bucketed table). Law
-    (tests/test_dedup_clusters.py): the
-    replay's decision union equals running the batch incremental
-    operator day-by-day with a growing corpus; the DuckDB twin replays
-    the loop set-based as "window matches any strictly-earlier day"."""
+    maint.exact_substring_step in maint.replay_in_driver; the index pair
+    composes lazily over the persisted seed, one delta per day (the
+    MERGE-INTO delta of the production bucketed table). Law
+    (tests/test_dedup_clusters.py): the replay's decision union equals
+    running the batch incremental operator day-by-day with a growing
+    corpus; the DuckDB twin replays the loop set-based as "window
+    matches any strictly-earlier day"."""
     data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
     return maint.replay_in_driver(
         spark,
@@ -2371,9 +2367,9 @@ def stream_embedding_index_maintenance_replay(
     UPSERTED into the index (embedding_index_upsert — idempotent
     anti-join + map-side bucketize). Output: one (vec_id, n_matches,
     best_cos, is_new) decision row per new vector. Day-aligned replay
-    chunks run through maintenance.embedding_step in the driver-state
-    loop (maintenance.replay_in_driver); the index is localCheckpointed
-    per day (the persisted bucketed table's commit in production).
+    chunks run through maint.embedding_step in maint.replay_in_driver;
+    the index is localCheckpointed per day (the persisted bucketed
+    table's commit in production).
 
     DERIVED BITS (r13 — the r12 verdict's top task): the plane count is
     NOT pinned — each day re-derives bits = derived_bits(|index|)
@@ -7037,11 +7033,10 @@ def stream_bm25_index_maintenance_replay(
     index form; the precomputed-contribution postings of
     retrieval_bm25_topk are the READ-optimized compacted form — the
     explicit write-vs-read index trade (operators/retrieval.py::
-    bm25_raw_index docstring). The days run through
-    maintenance.bm25_step in the driver-state loop
-    (maintenance.replay_in_driver), which materializes the composed
-    relations after day 2. Oracle: a UNION ALL of per-day from-scratch
-    screens with day-scoped corpus stats."""
+    bm25_raw_index docstring). The days run through maint.bm25_step in
+    maint.replay_in_driver, which materializes the composed relations
+    after day 2. Oracle: a UNION ALL of per-day from-scratch screens
+    with day-scoped corpus stats."""
     data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
     return maint.replay_in_driver(
         spark, data, ddl, _bm25_raw_seed_index(spark, sf_dir), maint.bm25_step()

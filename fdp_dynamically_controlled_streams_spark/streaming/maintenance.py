@@ -349,8 +349,18 @@ def bm25_step(k: int = 10, panel_mod: int = 100) -> Step:
         scr = retr_ops.bm25_screen_against_raw(
             bdf.where(F.col("doc_id") % panel_mod == 0), t, d, s, k=k
         )
-        nxt = retr_ops.bm25_raw_index_upsert(t, d, s, bdf, delta=True)
-        return scr, dict(zip(BM25_PARTS, nxt))
+        # the delta upsert checkpoints the batch postings and retired
+        # rows eagerly; the screen reads only the prior index, so its
+        # batch-sized result (k rows per panel doc) is materialized
+        # beside them instead of after them
+        out: dict[str, object] = {}
+        overlap_jobs(
+            lambda: out.update(scr=scr.localCheckpoint()),
+            lambda: out.update(
+                nxt=retr_ops.bm25_raw_index_upsert(t, d, s, bdf, delta=True)
+            ),
+        )
+        return out["scr"], dict(zip(BM25_PARTS, out["nxt"]))
 
     return Step(run, BM25_PARTS, BM25_DDL, BM25_MAX_DEPTH)
 
@@ -360,22 +370,14 @@ def _read_snapshot(spark: SparkSession, path: str, parts: tuple[str, ...]) -> In
 
 
 def replay_in_driver(
-    spark: SparkSession,
-    data_path: str,
-    schema: str,
-    seed_path: str,
-    step: Step,
+    spark: SparkSession, data_path: str, schema: str, seed_path: str, step: Step
 ) -> DataFrame:
     """The driver-state client of ``step``: drain the files in
-    ``data_path`` one per micro-batch under 8 state partitions, starting
-    from the index at ``seed_path`` (the snapshot layout of
-    :func:`_run_epochs`).  Each batch is checkpointed and run through
-    the step; its decisions are appended to ``{tmp}/out`` while, when
-    :func:`compaction_due` fires on the upserts composed so far
-    (``step.max_depth``), ``next`` is materialized with
-    ``localCheckpoint`` — the two jobs are independent, so they overlap.
-    ``next`` then becomes the following batch's ``prior``.  Returns a
-    lazy read of the decisions."""
+    ``data_path`` one per micro-batch under 8 state partitions from the
+    index at ``seed_path``, appending each batch's decisions to
+    ``{tmp}/out`` while — when :func:`compaction_due` fires on the
+    upserts composed so far — ``next`` is ``localCheckpoint``ed.  Returns
+    a lazy read of the decisions."""
     tmp = tempfile.mkdtemp(prefix="dcs-maint-")
     out = os.path.join(tmp, "out")
     state = {"index": _read_snapshot(spark, seed_path, step.parts), "depth": 0}
