@@ -6,8 +6,9 @@ Each modality (MinHash, embedding, ExactSubstr, BM25) has one
 :class:`Step`: ``step.run(bdf, prior) -> (decisions, next)`` screens a
 micro-batch against the index relations ``prior`` and builds the index
 after the batch's upsert, ``next``, as lazy frames.  A step checkpoints
-only batch-sized kernels that both outputs share; it never writes and
-never decides when the index materializes.  Its two clients:
+only batch-sized frames (a kernel both outputs share, or BM25's
+k-rows-per-panel-doc screen); it never writes and never decides when
+the index materializes.  Its two clients:
 
 * :func:`replay_in_driver` (the ``*_index_maintenance_replay`` catalog
   entries) keeps ``next`` in DRIVER memory as a lazily composed frame
