@@ -1763,13 +1763,8 @@ def stream_minhash_index_maintenance_replay(
     (minhash_incremental_decisions contract: they surface when the next
     day screens against the maintained index)."""
     data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
-    return maint.replay_in_driver(
-        spark,
-        data,
-        ddl,
-        f"{_minhash_index_fixture(spark, sf_dir)}/sig",
-        maint.minhash_step(),
-    )
+    seed = f"{_minhash_index_fixture(spark, sf_dir)}/sig"
+    return maint.replay_in_driver(spark, data, ddl, seed, maint.minhash_step())
 
 
 @query(
@@ -2231,13 +2226,8 @@ def stream_exact_substring_index_maintenance_replay(
     corpus; the DuckDB twin replays the loop set-based as "window
     matches any strictly-earlier day"."""
     data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
-    return maint.replay_in_driver(
-        spark,
-        data,
-        ddl,
-        _exact_substring_index_fixture(spark, sf_dir),
-        maint.exact_substring_step(),
-    )
+    seed = _exact_substring_index_fixture(spark, sf_dir)
+    return maint.replay_in_driver(spark, data, ddl, seed, maint.exact_substring_step())
 
 
 @query(
@@ -2384,9 +2374,8 @@ def stream_embedding_index_maintenance_replay(
     masks the packed MAX_BITS bucket to the day's bits — bit-for-bit
     the same blocking."""
     data, ddl = _day_chunks(spark, sf_dir, "embeddings", "vec_id", "embedding")
-    return maint.replay_in_driver(
-        spark, data, ddl, _embedding_seed_index(spark, sf_dir), maint.embedding_step()
-    )
+    seed = _embedding_seed_index(spark, sf_dir)
+    return maint.replay_in_driver(spark, data, ddl, seed, maint.embedding_step())
 
 
 @query(
@@ -7038,9 +7027,8 @@ def stream_bm25_index_maintenance_replay(
     after day 2. Oracle: a UNION ALL of per-day from-scratch screens
     with day-scoped corpus stats."""
     data, ddl = _day_chunks(spark, sf_dir, "documents", "doc_id", "text")
-    return maint.replay_in_driver(
-        spark, data, ddl, _bm25_raw_seed_index(spark, sf_dir), maint.bm25_step()
-    )
+    seed = _bm25_raw_seed_index(spark, sf_dir)
+    return maint.replay_in_driver(spark, data, ddl, seed, maint.bm25_step())
 
 
 @query(
