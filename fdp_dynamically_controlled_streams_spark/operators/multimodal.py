@@ -1,5 +1,14 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` columns with a
-typed metadata struct, processed via Arrow-batched ``mapInPandas``.
+"""Multimodal columns: image/audio/video as opaque ``binary`` columns,
+processed via Arrow-batched ``mapInPandas``.
+
+The Spark plumbing is written once: :func:`attach_media` derives one media
+blob per id and :func:`decode_features` decodes and feature-extracts each
+blob.  A codec tier supplies only its closed form in the id
+(``*_for_id(id) -> (blob, content_type)``), its feature row
+(``*_features(blob | None) -> tuple``, including its own failure row) and
+the schema of that row.  The tiers: DCSM (``fake_image_*``), BMP/WAV
+(``real_media_*``), PNG, AVI, JPEG, and DCSV fake video
+(``fake_video_for_id``, cut into DCSM frames by :func:`frame_sample`).
 
 Scale design: media bytes ride the same partitions as their metadata (no
 driver round-trips); decode/resize/feature-extract are per-partition
@@ -21,47 +30,99 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_MAGIC = b"DCSM"
-
-MEDIA_META_SCHEMA = T.StructType(
+#: The attached media column, one row per id.
+MEDIA_SCHEMA = T.StructType(
     [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("content", T.BinaryType()),
         T.StructField("content_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
         T.StructField("n_bytes", T.LongType()),
     ]
 )
 
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("mean_intensity", T.DoubleType()),
-        T.StructField("ok", T.BooleanType()),
-    ]
-)
+
+def attach_media(
+    docs: DataFrame,
+    encode: Callable[[int], tuple[bytes, str]],
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """One deterministic media blob per row of ``docs``:
+    ``encode(id) -> (blob, content_type)`` is a tier's closed form in the
+    id, so a SQL oracle can predict every field its decoder recovers.  One
+    ``mapInPandas`` pass over the id column, output :data:`MEDIA_SCHEMA`."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf[id_col].astype("int64")
+            pairs = [encode(int(i)) for i in ids]
+            yield pd.DataFrame(
+                {
+                    "media_id": ids,
+                    "content": [b for b, _ in pairs],
+                    "content_type": [c for _, c in pairs],
+                    "n_bytes": [len(b) for b, _ in pairs],
+                }
+            )
+
+    return docs.select(id_col).mapInPandas(gen, MEDIA_SCHEMA)
+
+
+def decode_features(
+    media: DataFrame,
+    features: Callable[[bytes | None], tuple],
+    schema: T.StructType,
+) -> DataFrame:
+    """Decode + feature-extract over (media_id, content) — the canonical
+    mapInPandas shape: batch in, batch out.  ``features(blob | None)``
+    returns the row after ``media_id`` in ``schema``; a NULL or corrupt
+    blob gets the tier's failure row (``ok`` false), never an error."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (int(mid), *features(None if buf is None else bytes(buf)))
+                for mid, buf in zip(pdf["media_id"], pdf["content"])
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return media.select("media_id", "content").mapInPandas(run, schema)
+
+
+def _micro_mean(px: bytes) -> float:
+    """Mean byte value, truncated (not rounded) at 1e-6: an exact integer
+    quotient, bit-reproducible across engines (the DuckDB oracle twins
+    compute the identical BIGINT quotient), with no half-even vs
+    half-away tie ambiguity."""
+    return (sum(px) * 1_000_000 // len(px)) / 1e6 if px else 0.0
+
+
+def _lcg_bytes(n: int, seed: int) -> bytes:
+    """The shared deterministic payload of every codec tier."""
+    out = bytearray(n)
+    x = (seed * 2654435761 + 12345) & 0xFFFFFFFF
+    for i in range(n):
+        x = (x * 1103515245 + 12345) & 0xFFFFFFFF
+        out[i] = (x >> 16) & 0xFF
+    return bytes(out)
+
+
+_MAGIC = b"DCSM"
+
+
+def _dcsm(width: int, height: int, channels: int, payload: bytes) -> bytes:
+    return _MAGIC + struct.pack("<HHB", width, height, channels) + payload
 
 
 def encode_fake_image(width: int, height: int, channels: int = 3, seed: int = 0) -> bytes:
     """Deterministic fake image: header + LCG-generated pixel payload."""
-    n = width * height * channels
-    payload = bytearray(n)
-    x = (seed * 2654435761 + 12345) & 0xFFFFFFFF
-    for i in range(n):
-        x = (x * 1103515245 + 12345) & 0xFFFFFFFF
-        payload[i] = (x >> 16) & 0xFF
-    return _MAGIC + struct.pack("<HHB", width, height, channels) + bytes(payload)
+    return _dcsm(width, height, channels, _lcg_bytes(width * height * channels, seed))
 
 
 def _decode_fake(buf: bytes) -> tuple[int, int, int, bytes] | None:
@@ -95,24 +156,43 @@ def decode_image(buf: bytes) -> tuple[int, int, int, bytes]:
     raise ValueError("unrecognized or corrupt media payload")
 
 
+DCSM_DECODED_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("content_type", T.StringType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("channels", T.IntegerType()),
+        T.StructField("mean_intensity", T.DoubleType()),
+        T.StructField("ok", T.BooleanType()),
+    ]
+)
+
+
+def fake_image_for_id(i: int) -> tuple[bytes, str]:
+    """DCSM tier: (8 + id%5) x (6 + id%3) x 3, seed id."""
+    return encode_fake_image(8 + i % 5, 6 + i % 3, 3, seed=i), "application/x-dcsm"
+
+
+def fake_image_features(blob: bytes | None) -> tuple:
+    """DCSM header fields and the pixel mean; a corrupt blob's fields are
+    NULL."""
+    d = _decode_fake(blob)
+    if d is None:
+        return (None, None, None, None, None, False)
+    w, h, c, payload = d
+    return ("application/x-dcsm", w, h, c, _micro_mean(payload), True)
+
+
 # ---------------------------------------------------------------------------
 # Real formats, zero dependencies: uncompressed 24-bit BMP and 16-bit PCM WAV.
 # Both are byte-exact implementations of the public file-format specs
 # (BITMAPFILEHEADER/BITMAPINFOHEADER; RIFF/WAVE chunk stream), so the decode
 # path is exercised end-to-end on files any external tool could read — the
 # r3 verdict's ask that at least one *real* format replace the DCSM-only
-# story. The pixel/sample payloads use the same LCG as encode_fake_image so
+# story. The pixel/sample payloads are the shared LCG (``_lcg_bytes``), so
 # generation is deterministic and distributed.
 # ---------------------------------------------------------------------------
-
-
-def _lcg_bytes(n: int, seed: int) -> bytes:
-    out = bytearray(n)
-    x = (seed * 2654435761 + 12345) & 0xFFFFFFFF
-    for i in range(n):
-        x = (x * 1103515245 + 12345) & 0xFFFFFFFF
-        out[i] = (x >> 16) & 0xFF
-    return bytes(out)
 
 
 def encode_bmp(width: int, height: int, seed: int = 0) -> bytes:
@@ -126,14 +206,18 @@ def encode_bmp(width: int, height: int, seed: int = 0) -> bytes:
         "<IiiHHIIiiII", 40, width, height, 1, 24, 0, img_size, 2835, 2835, 0, 0
     )
     pixels = _lcg_bytes(3 * width * height, seed)
-    pad = b"\x00" * (row_stride - 3 * width)
-    # Bottom-up storage per spec: the file's first row is the image's last
-    # (the LCG payload is logical top-down row order).
-    rows = [
+    return file_header + info_header + _dib_rows(pixels, width, height)
+
+
+def _dib_rows(pixels: bytes, width: int, height: int) -> bytes:
+    """Top-down 24-bit rows in DIB storage order (BMP pixel array, AVI
+    frame): bottom-up per spec — the first stored row is the image's
+    last — each row zero-padded to a 4-byte boundary."""
+    pad = b"\x00" * ((3 * width + 3) // 4 * 4 - 3 * width)
+    return b"".join(
         pixels[y * 3 * width : (y + 1) * 3 * width] + pad
         for y in reversed(range(height))
-    ]
-    return file_header + info_header + b"".join(rows)
+    )
 
 
 def decode_bmp(buf: bytes) -> dict | None:
@@ -220,6 +304,46 @@ def decode_wav(buf: bytes) -> dict | None:
     }
 
 
+REAL_DECODED_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("content_type", T.StringType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("channels", T.IntegerType()),
+        T.StructField("sample_rate", T.IntegerType()),
+        T.StructField("n_samples", T.IntegerType()),
+        T.StructField("bit_depth", T.IntegerType()),
+        T.StructField("n_payload_bytes", T.LongType()),
+        T.StructField("file_size", T.LongType()),
+        T.StructField("ok", T.BooleanType()),
+    ]
+)
+
+
+def real_media_for_id(i: int) -> tuple[bytes, str]:
+    """BMP/WAV tier: even ids a BMP of (4 + id%9) x (3 + id%7), odd ids
+    a WAV of 50 + id%101 samples at (8000, 16000, 44100)[id%3] Hz; seed
+    id."""
+    if i % 2 == 0:
+        return encode_bmp(4 + i % 9, 3 + i % 7, seed=i), "image/bmp"
+    return encode_wav(50 + i % 101, (8000, 16000, 44100)[i % 3], seed=i), "audio/wav"
+
+
+def real_media_features(blob: bytes | None) -> tuple:
+    """Sniff BMP, then WAV: image rows carry image header fields, audio
+    rows audio fields; fields that do not apply are 0 (not NULL — keeps
+    every column concretely typed through Arrow and the oracle compare)."""
+    if (d := decode_bmp(blob)) is not None:
+        return ("image/bmp", d["width"], d["height"], 3, 0, 0, d["bit_depth"],
+                d["n_payload_bytes"], d["file_size"], True)
+    if (a := decode_wav(blob)) is not None:
+        return ("audio/wav", 0, 0, a["n_channels"], a["sample_rate"],
+                a["n_samples"], a["bit_depth"], a["n_payload_bytes"],
+                a["file_size"], True)
+    return ("unknown", 0, 0, 0, 0, 0, 0, 0, 0, False)
+
+
 # ---------------------------------------------------------------------------
 # AVI: a real VIDEO container, zero dependencies — RIFF 'AVI ' with the
 # spec's nested LIST structure (hdrl: avih main header + strl stream list;
@@ -269,15 +393,13 @@ def encode_avi(
         _riff_chunk(b"avih", avih)
         + _riff_list(b"strl", _riff_chunk(b"strh", strh) + _riff_chunk(b"strf", strf)),
     )
-    frames = b""
-    pad = b"\x00" * (stride - 3 * width)
-    for f in range(n_frames):
-        px = _lcg_bytes(3 * width * height, seed * 1000 + f)
-        rows = [
-            px[y * 3 * width : (y + 1) * 3 * width] + pad
-            for y in reversed(range(height))
-        ]
-        frames += _riff_chunk(b"00db", b"".join(rows))
+    frames = b"".join(
+        _riff_chunk(
+            b"00db",
+            _dib_rows(_lcg_bytes(3 * width * height, seed * 1000 + f), width, height),
+        )
+        for f in range(n_frames)
+    )
     movi = _riff_list(b"movi", frames)
     body = b"AVI " + hdrl + movi
     return b"RIFF" + struct.pack("<I", len(body)) + body
@@ -356,72 +478,22 @@ AVI_DECODED_SCHEMA = T.StructType(
 )
 
 
-def attach_avi_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic real-AVI media column per row, every header field and
-    frame payload closed-form in the id (frames 2+id%5, width 3+id%6,
-    height 2+id%4, fps 10, frame f seeded id*1000+f) so a SQL oracle can
-    predict the full decode including the per-frame LCG pixel replay."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            blobs = [
-                encode_avi(
-                    2 + int(i) % 5, 3 + int(i) % 6, 2 + int(i) % 4,
-                    fps=10, seed=int(i),
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": blobs,
-                    "content_type": ["video/x-msvideo"] * len(ids),
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    return docs.select(id_col).mapInPandas(gen, out_schema)
+def avi_for_id(i: int) -> tuple[bytes, str]:
+    """AVI tier: 2 + id%5 frames of (3 + id%6) x (2 + id%4) at 10 fps,
+    frame f seeded id*1000 + f."""
+    return encode_avi(2 + i % 5, 3 + i % 6, 2 + i % 4, fps=10, seed=i), "video/x-msvideo"
 
 
-def decode_avi_features(media: DataFrame) -> DataFrame:
-    """Decode real AVIs over (media_id, content): RIFF walk, header fields,
-    frame extraction (unpadded top-down), and the exact mean over ALL frame
-    pixels (bit-reproducible integer truncation) — oracle equality proves
-    the container walk AND every frame's byte-exact recovery."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                d = decode_avi(bytes(buf)) if buf is not None else None
-                if d is None:
-                    rows.append(
-                        (mid, "unknown", 0, 0, 0, 0, 0, 0, 0.0, False)
-                    )
-                else:
-                    all_px = b"".join(d["frames"])
-                    n = len(all_px)
-                    mean = (sum(all_px) * 1_000_000 // n) / 1e6 if n else 0.0
-                    rows.append(
-                        (mid, "video/x-msvideo", d["n_frames"], d["width"],
-                         d["height"], d["micro_sec_per_frame"],
-                         d["n_payload_bytes"], d["file_size"], mean, True)
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AVI_DECODED_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "content").mapInPandas(run, AVI_DECODED_SCHEMA)
+def avi_features(blob: bytes | None) -> tuple:
+    """AVI header fields and the mean over ALL frame pixels — oracle
+    equality proves the container walk AND every frame's byte-exact
+    recovery."""
+    d = decode_avi(blob)
+    if d is None:
+        return ("unknown", 0, 0, 0, 0, 0, 0, 0.0, False)
+    return ("video/x-msvideo", d["n_frames"], d["width"], d["height"],
+            d["micro_sec_per_frame"], d["n_payload_bytes"], d["file_size"],
+            _micro_mean(b"".join(d["frames"])), True)
 
 
 # ---------------------------------------------------------------------------
@@ -568,7 +640,7 @@ def decode_png(buf: bytes) -> dict | None:
     }
 
 
-PNG_DECODED_SCHEMA = T.StructType(
+IMAGE_DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
         T.StructField("content_type", T.StringType()),
@@ -583,218 +655,25 @@ PNG_DECODED_SCHEMA = T.StructType(
 )
 
 
-def attach_png_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic real-PNG media column per row, dimensions closed-form
-    in the id (width 5+id%8, height 3+id%6, seed=id) so a SQL oracle can
-    predict every header field AND the decoded pixel statistics (the LCG
-    payload is SQL-replayable). Same mapInPandas shape as the other
-    attach_* helpers."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            blobs = [
-                encode_png(5 + int(i) % 8, 3 + int(i) % 6, seed=int(i))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": blobs,
-                    "content_type": ["image/png"] * len(ids),
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    return docs.select(id_col).mapInPandas(gen, out_schema)
+def _image_features(d: dict | None, content_type: str) -> tuple:
+    """The PNG and JPEG feature row (:data:`IMAGE_DECODED_SCHEMA`) from a
+    decoder's result: header fields plus the decoded-pixel mean, which
+    equals the oracle's LCG replay only if the decode recovered the
+    byte-exact payload. A corrupt blob's fields are zeroed (concretely
+    typed through Arrow)."""
+    if d is None:
+        return ("unknown", 0, 0, 0, 0, 0, 0.0, False)
+    return (content_type, d["width"], d["height"], d["channels"],
+            d["bit_depth"], d["n_payload_bytes"], _micro_mean(d["pixels"]), True)
 
 
-def decode_png_features(media: DataFrame) -> DataFrame:
-    """Decode + feature-extract real PNGs over (media_id, content):
-    inflate, unfilter, and report header fields plus the exact decoded-pixel
-    mean (same bit-reproducible integer truncation as decode_media) — so
-    oracle equality proves the decompression and unfiltering recovered the
-    byte-exact payload, not just the headers. Corrupt rows flag ok=false
-    with zeroed fields (concretely typed through Arrow)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                d = decode_png(bytes(buf)) if buf is not None else None
-                if d is None:
-                    rows.append((mid, "unknown", 0, 0, 0, 0, 0, 0.0, False))
-                else:
-                    px = d["pixels"]
-                    n = len(px)
-                    mean = (sum(px) * 1_000_000 // n) / 1e6 if n else 0.0
-                    rows.append(
-                        (mid, "image/png", d["width"], d["height"],
-                         d["channels"], d["bit_depth"], d["n_payload_bytes"],
-                         mean, True)
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PNG_DECODED_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "content").mapInPandas(run, PNG_DECODED_SCHEMA)
+def png_for_id(i: int) -> tuple[bytes, str]:
+    """PNG tier: (5 + id%8) x (3 + id%6), seed id."""
+    return encode_png(5 + i % 8, 3 + i % 6, seed=i), "image/png"
 
 
-def attach_real_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Derive a deterministic REAL-format media column per row: even ids get
-    a 24-bit BMP, odd ids a 16-bit PCM WAV, dimensions/rates closed-form in
-    the id so a SQL oracle can predict every header field the decoder must
-    recover. Same mapInPandas shape as attach_fake_media."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            blobs, ctypes = [], []
-            for i in ids:
-                i = int(i)
-                if i % 2 == 0:
-                    blobs.append(encode_bmp(4 + i % 9, 3 + i % 7, seed=i))
-                    ctypes.append("image/bmp")
-                else:
-                    rate = (8000, 16000, 44100)[i % 3]
-                    blobs.append(encode_wav(50 + i % 101, rate, seed=i))
-                    ctypes.append("audio/wav")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": blobs,
-                    "content_type": ctypes,
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    return docs.select(id_col).mapInPandas(gen, out_schema)
-
-
-REAL_DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("bit_depth", T.IntegerType()),
-        T.StructField("n_payload_bytes", T.LongType()),
-        T.StructField("file_size", T.LongType()),
-        T.StructField("ok", T.BooleanType()),
-    ]
-)
-
-
-def decode_media_real(media: DataFrame) -> DataFrame:
-    """Sniff-and-decode real formats over (media_id, content): BMP rows
-    yield image header fields, WAV rows audio fields; fields that do not
-    apply are 0 (not NULL — keeps every column concretely typed through
-    Arrow and the oracle compare). Corrupt rows flag ok=false."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                b = bytes(buf) if buf is not None else b""
-                if (d := decode_bmp(b)) is not None:
-                    rows.append(
-                        (mid, "image/bmp", d["width"], d["height"], 3, 0, 0,
-                         d["bit_depth"], d["n_payload_bytes"], d["file_size"], True)
-                    )
-                elif (a := decode_wav(b)) is not None:
-                    rows.append(
-                        (mid, "audio/wav", 0, 0, a["n_channels"],
-                         a["sample_rate"], a["n_samples"], a["bit_depth"],
-                         a["n_payload_bytes"], a["file_size"], True)
-                    )
-                else:
-                    rows.append(
-                        (mid, "unknown", 0, 0, 0, 0, 0, 0, 0, 0, False)
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in REAL_DECODED_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "content").mapInPandas(run, REAL_DECODED_SCHEMA)
-
-
-def attach_fake_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Test/demo helper: derive a deterministic media column per row — binary
-    payload + metadata struct (the storage schema for multimodal tables)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            blobs = [
-                encode_fake_image(8 + int(i) % 5, 6 + int(i) % 3, 3, seed=int(i))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": blobs,
-                    "content_type": ["application/x-dcsm"] * len(ids),
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    return docs.select(id_col).mapInPandas(gen, out_schema)
-
-
-def decode_media(media: DataFrame) -> DataFrame:
-    """Decode + feature-extract over (media_id, content) — the canonical
-    mapInPandas shape: batch in, batch out, corrupt rows flagged not fatal."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                d = _decode_fake(bytes(buf)) if buf is not None else None
-                if d is None:
-                    rows.append((int(mid), None, None, None, None, None, False))
-                else:
-                    w, h, c, payload = d
-                    # Exact integer truncation at 1e-6 instead of float round:
-                    # bit-reproducible across engines (the DuckDB oracle twin
-                    # computes the identical BIGINT quotient), no half-even vs
-                    # half-away tie ambiguity.
-                    n = len(payload)
-                    mean = (sum(payload) * 1_000_000 // n) / 1e6 if n else 0.0
-                    rows.append(
-                        (int(mid), "application/x-dcsm", w, h, c, mean, True)
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
-
-    return media.select("media_id", "content").mapInPandas(run, DECODED_SCHEMA)
+def png_features(blob: bytes | None) -> tuple:
+    return _image_features(decode_png(blob), "image/png")
 
 
 _VMAGIC = b"DCSV"
@@ -803,9 +682,10 @@ _VMAGIC = b"DCSV"
 def encode_fake_video(
     n_frames: int, width: int, height: int, channels: int = 3, seed: int = 0
 ) -> bytes:
-    """Deterministic fake video: header + n_frames DCSM-payload frames."""
+    """Deterministic fake video: header + n_frames DCSM-payload frames,
+    frame f seeded seed*1000 + f."""
     frames = b"".join(
-        encode_fake_image(width, height, channels, seed=seed * 1000 + f)[9:]
+        _lcg_bytes(width * height * channels, seed * 1000 + f)
         for f in range(n_frames)
     )
     return _VMAGIC + struct.pack("<HHHB", n_frames, width, height, channels) + frames
@@ -820,6 +700,12 @@ def _decode_fake_video(buf: bytes):
     if len(body) != n * frame_len:
         return None
     return n, w, h, c, [body[i * frame_len : (i + 1) * frame_len] for i in range(n)]
+
+
+def fake_video_for_id(i: int) -> tuple[bytes, str]:
+    """DCSV tier, the input of the frame-sample/resize pipeline: 2 + id%3
+    frames of (6 + id%4) x (4 + id%3) x 3, frame f seeded id*1000 + f."""
+    return encode_fake_video(2 + i % 3, 6 + i % 4, 4 + i % 3, 3, seed=i), "application/x-dcsv"
 
 
 def frame_sample(media: DataFrame, every_nth: int = 2) -> DataFrame:
@@ -843,9 +729,7 @@ def frame_sample(media: DataFrame, every_nth: int = 2) -> DataFrame:
                 for fno in range(0, len(frames), every_nth):
                     ids.append(int(mid))
                     frame_nos.append(fno)
-                    blobs.append(
-                        _MAGIC + struct.pack("<HHB", w, h, c) + frames[fno]
-                    )
+                    blobs.append(_dcsm(w, h, c, frames[fno]))
             yield pd.DataFrame(
                 {"media_id": ids, "frame_no": frame_nos, "content": blobs}
             )
@@ -880,9 +764,7 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
                         for ch in range(c):
                             resized.append(payload[(sy * w + sx) * c + ch])
                 out_ids.append(int(mid))
-                out_blobs.append(
-                    _MAGIC + struct.pack("<HHB", width, height, c) + bytes(resized)
-                )
+                out_blobs.append(_dcsm(width, height, c, bytes(resized)))
             yield pd.DataFrame({"media_id": out_ids, "content": out_blobs})
 
     schema = T.StructType(
@@ -1336,93 +1218,14 @@ def _jpeg_huff_decode(reader: "_JpegBitReader", table: dict[tuple[int, int], int
     raise _JpegError("invalid Huffman code")
 
 
-JPEG_DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("bit_depth", T.IntegerType()),
-        T.StructField("n_payload_bytes", T.LongType()),
-        T.StructField("mean_intensity", T.DoubleType()),
-        T.StructField("ok", T.BooleanType()),
-    ]
-)
+def jpeg_for_id(i: int) -> tuple[bytes, str]:
+    """JPEG exact tier: 8*(1 + id%3) x 8*(1 + id%2), seed id — (w/8)*(h/8)
+    flat-gray blocks whose values a SQL oracle replays from the LCG."""
+    return encode_jpeg(8 * (1 + i % 3), 8 * (1 + i % 2), seed=i), "image/jpeg"
 
 
-def attach_jpeg_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic real-JPEG media column per row (exact tier): width
-    8*(1+id%3), height 8*(1+id%2), seed=id — (w/8)*(h/8) flat-gray blocks
-    whose values a SQL oracle replays from the LCG closed form. Same
-    mapInPandas shape as the other attach_* helpers."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            blobs = [
-                encode_jpeg(8 * (1 + int(i) % 3), 8 * (1 + int(i) % 2), seed=int(i))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": blobs,
-                    "content_type": ["image/jpeg"] * len(ids),
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    from fdp_dynamically_controlled_streams_spark.functions.parallelism import (
-        spread_for_kernel,
-    )
-
-    # Full-corpus JPEG encode (and the decode chained on this partitioning)
-    # is the expensive per-row step; a one-row-group local scan would
-    # serialize it on one core (2.60 -> 1.08 s at sf0.1; no-op on wide
-    # scans). The other attach_* tiers measured FLAT or slower spread —
-    # their entries feed row-sampled inputs where 32 task round-trips cost
-    # more than the codec work — so only this corpus-sized tier spreads.
-    return spread_for_kernel(docs.select(id_col)).mapInPandas(gen, out_schema)
-
-
-def decode_jpeg_features(media: DataFrame) -> DataFrame:
-    """Decode + feature-extract real JPEGs over (media_id, content): full
-    baseline decode, then the exact integer-truncated decoded-pixel mean —
-    oracle equality proves Huffman decode, dequant, IDCT, and color
-    conversion recovered the byte-exact flat-tier payload. Corrupt rows
-    flag ok=false with zeroed fields."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                d = decode_jpeg(bytes(buf)) if buf is not None else None
-                if d is None:
-                    rows.append((mid, "unknown", 0, 0, 0, 0, 0, 0.0, False))
-                else:
-                    px = d["pixels"]
-                    n = len(px)
-                    mean = (sum(px) * 1_000_000 // n) / 1e6 if n else 0.0
-                    rows.append(
-                        (mid, "image/jpeg", d["width"], d["height"],
-                         d["channels"], d["bit_depth"], d["n_payload_bytes"],
-                         mean, True)
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_DECODED_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "content").mapInPandas(run, JPEG_DECODED_SCHEMA)
+def jpeg_features(blob: bytes | None) -> tuple:
+    return _image_features(decode_jpeg(blob), "image/jpeg")
 
 
 # ---------------------------------------------------------------------------
@@ -1492,37 +1295,3 @@ def audio_frame_features(media: DataFrame, frame_size: int = 32) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(
         run, AUDIO_FRAME_SCHEMA
     )
-
-
-def attach_fake_video(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Derive a deterministic fake VIDEO per row (2 + id%3 frames of
-    (6 + id%4) x (4 + id%3) x 3, frame f seeded id*1000 + f) — the input
-    side of the frame-sample/resize pipeline entry."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            blobs = [
-                encode_fake_video(
-                    2 + int(i) % 3, 6 + int(i) % 4, 4 + int(i) % 3, 3, seed=int(i)
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": blobs,
-                    "content_type": ["application/x-dcsv"] * len(ids),
-                    "n_bytes": [len(b) for b in blobs],
-                }
-            )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    return docs.select(id_col).mapInPandas(gen, out_schema)

@@ -35,6 +35,7 @@ from fdp_dynamically_controlled_streams_spark.functions.hashing import (
 )
 from fdp_dynamically_controlled_streams_spark.functions.parallelism import (
     overlap_jobs,
+    spread_for_kernel,
 )
 from fdp_dynamically_controlled_streams_spark.functions.vectors import (
     cosine_sql,
@@ -3881,7 +3882,8 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
 
     docs = _t(spark, sf_dir, "documents")
-    return mm.decode_media(mm.attach_fake_media(docs))
+    media = mm.attach_media(docs, mm.fake_image_for_id)
+    return mm.decode_features(media, mm.fake_image_features, mm.DCSM_DECODED_SCHEMA)
 
 
 # Real formats (r3 verdict task 7): even doc_ids carry an actual uncompressed
@@ -3927,7 +3929,8 @@ def multimodal_real_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
 
     docs = _t(spark, sf_dir, "documents")
-    return mm.decode_media_real(mm.attach_real_media(docs))
+    media = mm.attach_media(docs, mm.real_media_for_id)
+    return mm.decode_features(media, mm.real_media_features, mm.REAL_DECODED_SCHEMA)
 
 
 # Video pipeline: attach fake video -> frame_sample(every 2nd) ->
@@ -3989,8 +3992,10 @@ def multimodal_video_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
 
     docs = _t(spark, sf_dir, "documents")
-    sampled = mm.frame_sample(mm.attach_fake_video(docs), every_nth=2)
-    return mm.decode_media(mm.resize_media(sampled, 4, 3))
+    sampled = mm.frame_sample(mm.attach_media(docs, mm.fake_video_for_id), every_nth=2)
+    return mm.decode_features(
+        mm.resize_media(sampled, 4, 3), mm.fake_image_features, mm.DCSM_DECODED_SCHEMA
+    )
 
 
 # Audio feature extraction: the oracle replays the WAV byte stream (the
@@ -4052,7 +4057,9 @@ def multimodal_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFra
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
 
     docs = _t(spark, sf_dir, "documents")
-    return mm.audio_frame_features(mm.attach_real_media(docs), frame_size=32)
+    return mm.audio_frame_features(
+        mm.attach_media(docs, mm.real_media_for_id), frame_size=32
+    )
 
 
 # PNG (r4 verdict task 4): a COMPRESSED real format with zero dependencies —
@@ -4149,7 +4156,8 @@ def multimodal_avi_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
 
     docs = _t(spark, sf_dir, "documents")
-    return mm.decode_avi_features(mm.attach_avi_media(docs))
+    media = mm.attach_media(docs, mm.avi_for_id)
+    return mm.decode_features(media, mm.avi_features, mm.AVI_DECODED_SCHEMA)
 
 
 # Same closed-form oracle as the PNG entry, restricted to the 200-file
@@ -4195,7 +4203,7 @@ def multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per media id, distributed via mapInPandas — no driver loop), read back
     through Spark's native `binaryFile` source (path/length/content rows,
     one file per task), ids parsed from filenames, then the same
-    decode_png_features — proving the codec tier composes with how media
+    PNG decode — proving the codec tier composes with how media
     actually arrives at 100 TB: as object-store files, not synthesized
     columns. Oracle identical to the column path's closed form."""
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
@@ -4211,7 +4219,7 @@ def multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             for pdf in batches:
                 for i in pdf["doc_id"].astype("int64"):
                     i = int(i)
-                    blob = mm.encode_png(5 + i % 8, 3 + i % 6, seed=i)
+                    blob, _ = mm.png_for_id(i)
                     with open(os.path.join(p, f"media_{i:08d}.png"), "wb") as fh:
                         fh.write(blob)
                 yield pd.DataFrame({"n": [len(pdf)]})
@@ -4230,7 +4238,7 @@ def multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "content",
         )
     )
-    return mm.decode_png_features(files)
+    return mm.decode_features(files, mm.png_features, mm.IMAGE_DECODED_SCHEMA)
 
 
 @query(
@@ -4248,7 +4256,8 @@ def multimodal_png_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
 
     docs = _t(spark, sf_dir, "documents")
-    return mm.decode_png_features(mm.attach_png_media(docs))
+    media = mm.attach_media(docs, mm.png_for_id)
+    return mm.decode_features(media, mm.png_features, mm.IMAGE_DECODED_SCHEMA)
 
 
 # Baseline JPEG, the exact flat-gray tier: every 8x8 block is one LCG byte
@@ -4304,7 +4313,14 @@ def multimodal_jpeg_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
 
     docs = _t(spark, sf_dir, "documents")
-    return mm.decode_jpeg_features(mm.attach_jpeg_media(docs))
+    # Full-corpus JPEG encode (and the decode chained on this partitioning)
+    # is the expensive per-row step; a one-row-group local scan would
+    # serialize it on one core (2.60 -> 1.08 s at sf0.1; no-op on wide
+    # scans). The other codec tiers measured FLAT or slower spread —
+    # their entries feed row-sampled inputs where 32 task round-trips cost
+    # more than the codec work — so only this corpus-sized tier spreads.
+    media = mm.attach_media(spread_for_kernel(docs.select("doc_id")), mm.jpeg_for_id)
+    return mm.decode_features(media, mm.jpeg_features, mm.IMAGE_DECODED_SCHEMA)
 
 
 # =========================================================================

@@ -169,6 +169,34 @@ def test_one_step_per_maintenance_modality():
     ), sorted(sites.items())
 
 
+def test_one_closed_form_per_codec_tier():
+    """Each codec tier's closed form in the id is written once, in its
+    ``*_for_id`` in operators/multimodal.py, which the attach loop, the
+    binaryFile ingest fixture and the oracle's replay all agree with:
+    outside that module no package code calls a codec encoder."""
+    import ast
+
+    encoders = {
+        "encode_fake_image",
+        "encode_bmp",
+        "encode_wav",
+        "encode_png",
+        "encode_avi",
+        "encode_jpeg",
+        "encode_fake_video",
+    }
+    pkg = REPO / "fdp_dynamically_controlled_streams_spark"
+    sites = sorted(
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in pkg.rglob("*.py")
+        if path.relative_to(pkg).as_posix() != "operators/multimodal.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", getattr(node.func, "attr", None)) in encoders
+    )
+    assert sites == [], sites
+
+
 def test_one_builder_per_fixture_key():
     """Every cached replay or index input is defined once: no two
     ``cached_fixture`` call sites in the package pass the same literal

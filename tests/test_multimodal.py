@@ -11,10 +11,14 @@ from pyspark.sql import functions as F
 from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
 
 
+def _decode_dcsm(media):
+    return mm.decode_features(media, mm.fake_image_features, mm.DCSM_DECODED_SCHEMA)
+
+
 @pytest.fixture(scope="module")
 def media(spark):
     docs = spark.range(0, 40).select(F.col("id").alias("doc_id"))
-    return mm.attach_fake_media(docs).cache()
+    return mm.attach_media(docs, mm.fake_image_for_id).cache()
 
 
 def test_attach_schema_and_counts(media):
@@ -31,24 +35,24 @@ def test_attach_schema_and_counts(media):
 
 
 def test_decode_features_deterministic(media, spark):
-    out = mm.decode_media(media).orderBy("media_id").collect()
+    out = _decode_dcsm(media).orderBy("media_id").collect()
     assert len(out) == 40 and all(r.ok for r in out)
     assert out[0].width == 8 and out[0].height == 6 and out[0].channels == 3
     # decode twice -> identical features (determinism across partitions)
-    again = mm.decode_media(media).orderBy("media_id").collect()
+    again = _decode_dcsm(media).orderBy("media_id").collect()
     assert [r.mean_intensity for r in out] == [r.mean_intensity for r in again]
 
 
 def test_corrupt_payload_flagged_not_fatal(spark):
     rows = [(1, mm.encode_fake_image(4, 4)), (2, b"JUNK" + b"\x00" * 10), (3, None)]
     df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = {r.media_id: r.ok for r in mm.decode_media(df).collect()}
+    out = {r.media_id: r.ok for r in _decode_dcsm(df).collect()}
     assert out == {1: True, 2: False, 3: False}
 
 
 def test_resize_roundtrip(media):
     resized = mm.resize_media(media, 4, 4)
-    decoded = mm.decode_media(resized).orderBy("media_id").collect()
+    decoded = _decode_dcsm(resized).orderBy("media_id").collect()
     assert all(r.width == 4 and r.height == 4 and r.ok for r in decoded)
 
 
@@ -65,10 +69,46 @@ def test_frame_sample_fan_out_and_compose(spark):
     got = [(r.media_id, r.frame_no) for r in frames.collect()]
     assert got == [(1, 0), (1, 2), (1, 4), (2, 0), (2, 2)]
     # sampled frames are standalone images: decode composes unchanged
-    decoded = mm.decode_media(frames.withColumn(
+    decoded = _decode_dcsm(frames.withColumn(
         "media_id", F.col("media_id") * 10 + F.col("frame_no"))).collect()
     assert all(r.ok for r in decoded)
     assert {(r.width, r.height) for r in decoded} == {(4, 3), (5, 2)}
+
+
+def _sampled_frame_features(blob):
+    """The fake-video tier's row: its first frame, cut as frame_sample cuts
+    it, through the DCSM feature row."""
+    v = mm._decode_fake_video(blob)
+    return mm.fake_image_features(None if v is None else mm._dcsm(*v[1:4], v[4][0]))
+
+
+TIERS = {
+    "dcsm": (mm.fake_image_for_id, mm.fake_image_features, mm.DCSM_DECODED_SCHEMA),
+    "bmp_wav": (mm.real_media_for_id, mm.real_media_features, mm.REAL_DECODED_SCHEMA),
+    "png": (mm.png_for_id, mm.png_features, mm.IMAGE_DECODED_SCHEMA),
+    "avi": (mm.avi_for_id, mm.avi_features, mm.AVI_DECODED_SCHEMA),
+    "jpeg": (mm.jpeg_for_id, mm.jpeg_features, mm.IMAGE_DECODED_SCHEMA),
+    "dcsv": (mm.fake_video_for_id, _sampled_frame_features, mm.DCSM_DECODED_SCHEMA),
+}
+
+
+@pytest.mark.parametrize("tier", sorted(TIERS))
+def test_tier_feature_rows(tier):
+    """Every tier's closed form decodes through its own feature row, one
+    field per schema column after media_id, under the content type its
+    encoder attached; NULL and junk blobs get the tier's failure row at
+    the same arity. No Spark needed."""
+    encode, features, schema = TIERS[tier]
+    arity = len(schema) - 1
+    for i in range(10):
+        blob, content_type = encode(i)
+        row = features(blob)
+        assert len(row) == arity and row[-1] is True, (i, row)
+        if tier != "dcsv":  # the video is decoded as its DCSM frames
+            assert row[0] == content_type
+    fail = features(None)
+    assert len(fail) == arity and fail[-1] is False
+    assert features(b"JUNK") == fail
 
 
 def test_unrecognized_payload_raises():
@@ -219,7 +259,11 @@ def test_wav_truncation_flagged():
 
 def test_real_media_distributed(spark):
     docs = spark.range(0, 30).select(F.col("id").alias("doc_id"))
-    out = mm.decode_media_real(mm.attach_real_media(docs)).orderBy("media_id").collect()
+    out = mm.decode_features(
+        mm.attach_media(docs, mm.real_media_for_id),
+        mm.real_media_features,
+        mm.REAL_DECODED_SCHEMA,
+    ).orderBy("media_id").collect()
     assert len(out) == 30 and all(r.ok for r in out)
     for r in out:
         i = r.media_id
@@ -245,7 +289,8 @@ def test_real_media_corrupt_flagged(spark):
         (5, None),
     ]
     df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = {r.media_id: r.ok for r in mm.decode_media_real(df).collect()}
+    out = mm.decode_features(df, mm.real_media_features, mm.REAL_DECODED_SCHEMA)
+    out = {r.media_id: r.ok for r in out.collect()}
     assert out == {1: True, 2: False, 3: True, 4: False, 5: False}
 
 
@@ -322,7 +367,9 @@ def test_decode_image_jpeg_path():
 
 def test_jpeg_media_distributed(spark):
     docs = spark.range(0, 24).select(F.col("id").alias("doc_id"))
-    out = mm.decode_jpeg_features(mm.attach_jpeg_media(docs)).orderBy("media_id").collect()
+    out = mm.decode_features(
+        mm.attach_media(docs, mm.jpeg_for_id), mm.jpeg_features, mm.IMAGE_DECODED_SCHEMA
+    ).orderBy("media_id").collect()
     assert len(out) == 24 and all(r.ok for r in out)
     for r in out:
         i = r.media_id
