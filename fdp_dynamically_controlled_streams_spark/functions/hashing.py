@@ -77,31 +77,15 @@ def affine_hash_sql(base: str, a: int, b: int) -> str:
     )
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct n-gram word shingles of a text column as an array<string>.
-
-    Tokenize on whitespace runs, join each n consecutive tokens with a single
-    space. Built from transform/slice/array_join. NOTE: lambda higher-order
-    functions are evaluated interpreted, per element, outside whole-stage
-    codegen — measured ~4× slower than :func:`shingle_rows`; prefer that
-    row form in any hot path.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(F.trim(c), r"\s+")
-    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    idx = F.sequence(F.lit(1), k)  # empty when fewer than n tokens
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    )
-
-
 def shingle_rows(df, id_col: str, text_col: str, n: int = 3):
     """One row per n-gram word shingle: ``(id, s)``, duplicates kept.
 
     Codegen-friendly construction: zip the token array with its n-1 shifted
     slices (``arrays_zip`` pads the tail with nulls — filtered out), explode,
     ``concat_ws``. Every expression is a regular codegen'd one — no lambda
-    higher-order functions (4× measured win over the ``word_shingles`` form)
+    higher-order functions (those run interpreted, per element, outside
+    whole-stage codegen: a transform/slice/array_join shingle array
+    measured 4× slower)
     and no window shuffle (a ``lead()``-based build would exchange raw
     tokens; this shape keeps shingle construction entirely map-side, so the
     only shuffle in a signature pass is the downstream per-doc groupBy).

@@ -1652,29 +1652,16 @@ def minhash_index_upsert_sigs(
     its old signature).  The prior index composes lazily through a
     broadcast anti-join (the MERGE-INTO delta a production crawl
     writes); re-materializing the whole signature table per day is
-    O(corpus) daily — compact on a cadence instead
-    (:func:`minhash_index_compact`).
+    O(corpus) daily — compact on a cadence instead: the maintenance
+    loops materialize the composed index themselves (a
+    ``localCheckpoint`` in ``replay_in_driver``, the snapshot write in
+    the restart-safe pipeline).
 
     [ABSENT in reference: SURVEY §2.7 — engine extension.]
     """
     return sig_c.join(F.broadcast(new_ids), "id", "left_anti").unionByName(
         sig_b
     )
-
-
-def minhash_index_compact(sig_c: DataFrame) -> DataFrame:
-    """COMPACT the maintained MinHash signature index (r12 verdict task
-    3): after N delta upserts the logical index is N stacked broadcast
-    anti-joins + unions; compaction materializes the merged table
-    (localCheckpoint here; OPTIMIZE/table-rewrite in production),
-    physically reclaiming rows retired by re-crawls and resetting the
-    composition depth to a bare scan.  Law (tests/test_dedup_clusters.py): decisions against
-    the compacted index equal decisions against the composed one —
-    compaction is invisible to semantics, it only resets the cost shape.
-
-    [ABSENT in reference: SURVEY §2.7 — engine extension.]
-    """
-    return sig_c.localCheckpoint()
 
 
 def minhash_decisions_against_index(

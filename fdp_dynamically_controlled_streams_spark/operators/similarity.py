@@ -681,8 +681,8 @@ def derived_bits_sql(
 
 def embedding_index_rebucket(index: DataFrame, bits: int) -> DataFrame:
     """RE-BUCKET a maintained sign-LSH vector index to a new plane count
-    — the embedding family's compaction operator (the sibling of
-    dedup.minhash_index_compact): one map-side recompute of the
+    — the embedding family's compaction operator (the MinHash index
+    compacts by plain materialization): one map-side recompute of the
     bucket column from the stored vectors, NO shuffle, no re-read of the
     source corpus.  Law (tests/test_dedup_clusters.py): rebucket(index,
     b) ≡ embedding_index(vectors, b) from scratch — compaction is

@@ -103,7 +103,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif isinstance(dt, T.TimestampNTZType):  # micros, no TZ: session is UTC
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}

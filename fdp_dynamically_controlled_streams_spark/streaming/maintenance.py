@@ -161,25 +161,16 @@ def reclaim_epoch_snapshots(
     return reclaimed
 
 
-def compaction_due(
-    depth: int,
-    retired_frac: float = 0.0,
-    max_depth: int = 8,
-    max_retired_frac: float = 0.5,
-) -> bool:
+def compaction_due(depth: int, max_depth: int = 8) -> bool:
     """The WHEN-TO-COMPACT policy as code, not a docstring (r13 verdict
     task 3): compact when the composition/accumulation DEPTH (delta
     upserts since the last compaction, or epoch output dirs since the
-    last decisions roll-up) reaches ``max_depth``, or when the RETIRED
-    FRACTION of a maintained index (rows superseded by re-crawl upserts
-    that a compaction would physically reclaim) reaches
-    ``max_retired_frac``.  Depth bounds read amplification (every read
-    unions depth pieces / replays depth anti-joins); retired fraction
-    bounds storage amplification — two independent failure axes, so the
-    rule is an OR.  Pure integer/float comparison, so the pipelines'
-    cadence choices are testable (and the law is that ANY choice yields
+    last decisions roll-up) reaches ``max_depth``.  Depth bounds read
+    amplification (every read unions depth pieces / replays depth
+    anti-joins).  A pure integer comparison, so the loops' cadence
+    choices are testable (and the law is that ANY choice yields
     identical answers — compaction is semantics-invisible)."""
-    return depth >= max_depth or retired_frac >= max_retired_frac
+    return depth >= max_depth
 
 
 def _live_outputs(
@@ -223,9 +214,7 @@ def maybe_compact_outputs(
 ) -> str | None:
     """Apply the :func:`compaction_due` policy to a decisions root: roll
     up when the committed-epoch-dir count since the last roll-up
-    reaches ``max_depth``.  (The retired-fraction axis is 0 for
-    decision outputs — they are append-only facts, never superseded —
-    so depth is the only live trigger here.)"""
+    reaches ``max_depth``."""
     if compaction_due(len(_live_outputs(out_root)[1]), max_depth=max_depth):
         return compact_epoch_outputs(spark, out_root, ddl)
     return None

@@ -587,7 +587,6 @@ def test_minhash_index_compaction_invisible(spark):
     from fdp_dynamically_controlled_streams_spark.operators.dedup import (
         minhash_decisions_against_index,
         minhash_index,
-        minhash_index_compact,
         minhash_index_upsert_sigs,
         minhash_signatures,
     )
@@ -607,7 +606,7 @@ def test_minhash_index_compaction_invisible(spark):
         sig = minhash_index_upsert_sigs(
             sig, day.select(F.col("doc_id").alias("id")), sb
         )
-    compacted = minhash_index_compact(sig)
+    compacted = sig.localCheckpoint()  # what replay_in_driver runs
     probe = spark.createDataFrame(
         [(99, base + " extra"), (98, alt + " suffix")],
         "doc_id long, text string",

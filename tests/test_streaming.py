@@ -1113,7 +1113,7 @@ def test_pipeline_retention_and_compaction_invariance(spark, tmp_path):
 
 def test_compaction_policy_rule():
     """compaction_due is the when-to-compact rule as code (r13 verdict
-    task 3): depth OR retired-fraction triggers, pure comparisons."""
+    task 3): composition depth triggers, a pure comparison."""
     from fdp_dynamically_controlled_streams_spark.streaming.maintenance import (
         compaction_due,
         reclaim_epoch_snapshots,
@@ -1123,9 +1123,6 @@ def test_compaction_policy_rule():
     assert not compaction_due(7)
     assert compaction_due(8)
     assert compaction_due(3, max_depth=3)
-    assert compaction_due(0, retired_frac=0.5)
-    assert compaction_due(0, retired_frac=0.9, max_retired_frac=0.9)
-    assert not compaction_due(1, retired_frac=0.1)
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
