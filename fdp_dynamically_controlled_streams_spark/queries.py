@@ -3875,10 +3875,10 @@ FROM lcg WHERE i = n
 
 @query("multimodal_decode_features", _MULTIMODAL_ORACLE, tags=("multimodal",))
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Attach deterministic media blobs to documents, decode + feature-extract
-    via mapInPandas, return per-media features (real codecs stubbed per
-    charter — plumbing is real, see operators/multimodal.py). The DCSM LCG
-    payload is replayed exactly by the DuckDB recursive-CTE oracle above."""
+    """Attach deterministic DCSM media blobs to documents, decode +
+    feature-extract via mapInPandas, return per-media features (the real
+    codecs have their own entries). The DCSM LCG payload is replayed
+    exactly by the DuckDB recursive-CTE oracle above."""
     from fdp_dynamically_controlled_streams_spark.operators import multimodal as mm
 
     docs = _t(spark, sf_dir, "documents")
