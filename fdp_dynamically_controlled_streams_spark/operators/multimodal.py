@@ -47,19 +47,15 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 
-def attach_media(
-    docs: DataFrame,
-    encode: Callable[[int], tuple[bytes, str]],
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """One deterministic media blob per row of ``docs``:
+def attach_media(docs: DataFrame, encode: Callable[[int], tuple[bytes, str]]) -> DataFrame:
+    """One deterministic media blob per ``doc_id`` of ``docs``:
     ``encode(id) -> (blob, content_type)`` is a tier's closed form in the
     id, so a SQL oracle can predict every field its decoder recovers.  One
     ``mapInPandas`` pass over the id column, output :data:`MEDIA_SCHEMA`."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf[id_col].astype("int64")
+            ids = pdf["doc_id"].astype("int64")
             pairs = [encode(int(i)) for i in ids]
             yield pd.DataFrame(
                 {
@@ -70,7 +66,7 @@ def attach_media(
                 }
             )
 
-    return docs.select(id_col).mapInPandas(gen, MEDIA_SCHEMA)
+    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
 
 
 def decode_features(

@@ -75,20 +75,12 @@ def test_frame_sample_fan_out_and_compose(spark):
     assert {(r.width, r.height) for r in decoded} == {(4, 3), (5, 2)}
 
 
-def _sampled_frame_features(blob):
-    """The fake-video tier's row: its first frame, cut as frame_sample cuts
-    it, through the DCSM feature row."""
-    v = mm._decode_fake_video(blob)
-    return mm.fake_image_features(None if v is None else mm._dcsm(*v[1:4], v[4][0]))
-
-
 TIERS = {
     "dcsm": (mm.fake_image_for_id, mm.fake_image_features, mm.DCSM_DECODED_SCHEMA),
     "bmp_wav": (mm.real_media_for_id, mm.real_media_features, mm.REAL_DECODED_SCHEMA),
     "png": (mm.png_for_id, mm.png_features, mm.IMAGE_DECODED_SCHEMA),
     "avi": (mm.avi_for_id, mm.avi_features, mm.AVI_DECODED_SCHEMA),
     "jpeg": (mm.jpeg_for_id, mm.jpeg_features, mm.IMAGE_DECODED_SCHEMA),
-    "dcsv": (mm.fake_video_for_id, _sampled_frame_features, mm.DCSM_DECODED_SCHEMA),
 }
 
 
@@ -104,11 +96,23 @@ def test_tier_feature_rows(tier):
         blob, content_type = encode(i)
         row = features(blob)
         assert len(row) == arity and row[-1] is True, (i, row)
-        if tier != "dcsv":  # the video is decoded as its DCSM frames
-            assert row[0] == content_type
+        assert row[0] == content_type
     fail = features(None)
     assert len(fail) == arity and fail[-1] is False
     assert features(b"JUNK") == fail
+
+
+def test_fake_video_closed_form():
+    """The DCSV tier has no feature row of its own (its frames decode as
+    DCSM images); its closed form parses to 2 + id%3 frames of
+    (6 + id%4) x (4 + id%3) x 3."""
+    for i in range(10):
+        blob, content_type = mm.fake_video_for_id(i)
+        v = mm._decode_fake_video(blob)
+        assert v is not None and content_type == "application/x-dcsv"
+        n, w, h, c, frames = v
+        assert (n, w, h, c) == (2 + i % 3, 6 + i % 4, 4 + i % 3, 3)
+        assert len(frames) == n and all(len(f) == w * h * c for f in frames)
 
 
 def test_unrecognized_payload_raises():
