@@ -33,6 +33,11 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
+    # A RocksDB commit writes the batch's changes as <v>.changelog instead of
+    # uploading a snapshot zip; snapshots are taken in the background. This
+    # is a RocksDBConf key, read at query start and absent from SET -v; the
+    # rocksdb* custom metrics show that it took effect.
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     # Batch shuffles start at 32 partitions, which AQE coalesces; streaming
     # state partitions are sized to the slots in engine_conf.
     INITIAL_PARTITIONS: "32",

@@ -26,32 +26,40 @@ Engine rules on top of the reference:
 Key groups: the query groups by ``key_group = pmod(hash(sensor_id),
 KEY_GROUPS)``, not by sensor, and keeps one state value per key group: sorted
 parallel arrays (sensor_id, last_action, desired, up_delta, down_delta) over
-the group's sensors that have a setting. One handler call runs the spec for
-all of a group's sensors in a micro-batch in one vectorized pass.
+the group's sensors that have a setting, plus the KEY_GROUPS count it was
+written under. One handler call runs the spec for all of a group's sensors in
+a micro-batch in one vectorized pass.
 
 Scale: PySpark pays about 1.7 ms per handler call whatever its row count
 (Arrow->pandas conversion of the group's columns, pd.concat of its output),
 while the handler itself takes about 0.3 us per row plus a part that grows
 with the group's stored sensors (4.7 ms for 10,000 rows over a group of
 4,000 sensors, and 0.8 ms more to unpickle and pickle its state; SCALE.md
-rule 7 has end-to-end figures). A micro-batch calls
-the handler min(active keys, KEY_GROUPS) times instead of once per active
-sensor. State groups are hash-partitioned by the groupBy shuffle into
-``spark.sql.shuffle.partitions`` state partitions, which default to the
-session's task slots (session.engine_conf); each state partition is one task
-per micro-batch with a fixed cost (state-store load and commit, one
-Python-worker round trip), about 0.5 s of task time on 4 cores. Trade-offs:
-  * at most KEY_GROUPS state tasks have work, whatever the partition count;
+rule 7 has end-to-end figures). A micro-batch calls the handler
+min(active keys, KEY_GROUPS) times instead of once per active sensor, so
+KEY_GROUPS = 32 bounds that fixed cost at about 54 ms per micro-batch, summed
+over its state tasks (SCALE.md rule 7 has the K sweep). State groups are
+hash-partitioned by the groupBy shuffle into ``spark.sql.shuffle.partitions``
+state partitions, which default to the session's task slots
+(session.engine_conf); each state partition is one task per micro-batch with
+a fixed cost (state-store load and commit, one Python-worker round trip).
+Trade-offs:
+  * at most KEY_GROUPS state tasks have work, whatever the partition count:
+    the 32 groups land 5-10 per partition on 4 partitions, and on 13 of 16;
   * a touched group rewrites its whole value, so each state write carries
-    about keys / KEY_GROUPS sensors (131 KB at 4,000 sensors, where the
-    per-sensor layout wrote 0.9 KB for 10 touched sensors);
+    about keys / KEY_GROUPS sensors (about 3,100 at 100,000 sensors), however
+    few of them the micro-batch touched;
   * KEY_GROUPS and the partition count are pinned by the checkpoint. The
     plan is rebuilt from Python on every restart, so KEY_GROUPS is a module
     constant rather than a session setting: a restarted query must send its
-    keys to the groups its checkpoint holds them in. A checkpoint written by
-    the earlier per-sensor state layout fails at start with
-    STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE.
-With the RocksDB state store, key spaces beyond executor memory are fine.
+    keys to the groups its checkpoint holds them in. Each state value
+    carries the count it was written under and the handler raises on a
+    different one, so a changed KEY_GROUPS fails the first micro-batch
+    instead of losing settings. Checkpoints written by an earlier state
+    layout (per sensor, or per key group without the stored count) fail at
+    start with STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE.
+With the RocksDB state store, key spaces beyond executor memory are fine; each
+commit writes a changelog rather than a snapshot (session.ENGINE_CONF).
 """
 
 from __future__ import annotations
@@ -65,8 +73,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-#: Number of key groups. Pinned by every checkpoint the query writes.
-KEY_GROUPS = 256
+#: Number of key groups. Pinned by every checkpoint the query writes, and
+#: stored in every state value so that a mismatch fails loudly.
+KEY_GROUPS = 32
 
 #: Output rows: the emitted HeaterControl commands.
 OUTPUT_SCHEMA = T.StructType(
@@ -79,7 +88,8 @@ OUTPUT_SCHEMA = T.StructType(
 
 #: Key-group state: the TemperatureControlWithLastValue carrier
 #: (DataModelTransform.scala:39) of each of the group's sensors that has a
-#: setting, as parallel arrays sorted by sensor_id.
+#: setting, as parallel arrays sorted by sensor_id, and the KEY_GROUPS count
+#: the value was written under.
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("sensor_id", T.ArrayType(T.IntegerType())),
@@ -87,9 +97,11 @@ STATE_SCHEMA = T.StructType(
         T.StructField("desired", T.ArrayType(T.DoubleType())),
         T.StructField("up_delta", T.ArrayType(T.DoubleType())),
         T.StructField("down_delta", T.ArrayType(T.DoubleType())),
+        T.StructField("key_groups", T.IntegerType()),
     ]
 )
 
+_ARRAYS = STATE_SCHEMA.names[:-1]
 _STATE_DTYPES = (np.int64, np.int64, np.float64, np.float64, np.float64)
 _SETTING = ("desired", "up_delta", "down_delta")
 
@@ -188,7 +200,7 @@ def _advance(
     fresh = [sensors, last, *setting]
     merged = {
         c: np.concatenate((st[c][keep], v[upd]))
-        for c, v in zip(STATE_SCHEMA.names, fresh)
+        for c, v in zip(_ARRAYS, fresh)
     }
     by_sid = np.argsort(merged["sensor_id"], kind="stable")
     return {c: v[by_sid] for c, v in merged.items()}, out
@@ -203,15 +215,28 @@ def _control_key_group(
     group. PySpark may split a group over several chunks in no particular
     order (a union's sources arrive one after another, not in seq order), so
     the chunks are joined and the spec runs once over all of them; the cost
-    is holding one group's rows of one micro-batch at once."""
-    stored = state.get if state.exists else ([],) * len(STATE_SCHEMA.names)
+    is holding one group's rows of one micro-batch at once.
+
+    Raises ValueError on a stored value written under another KEY_GROUPS:
+    its sensors hash to other groups now, so running on would lose their
+    settings without an error."""
+    stored = ([],) * len(_ARRAYS)
+    if state.exists:
+        *stored, groups = state.get
+        if groups != KEY_GROUPS:
+            raise ValueError(
+                f"controller state for key group {key[0]} was written with "
+                f"KEY_GROUPS={groups}, but this query uses KEY_GROUPS="
+                f"{KEY_GROUPS}; resume it with the count its checkpoint was "
+                "written under, or start from a new checkpoint"
+            )
     st = {
         c: np.asarray(v, dtype=dt)
-        for c, v, dt in zip(STATE_SCHEMA.names, stored, _STATE_DTYPES)
+        for c, v, dt in zip(_ARRAYS, stored, _STATE_DTYPES)
     }
     st, (sid, cmd, seq) = _advance(st, pd.concat(list(pdf_iter)))
     if len(st["sensor_id"]):
-        state.update(tuple(st[c].tolist() for c in STATE_SCHEMA.names))
+        state.update((*(st[c].tolist() for c in _ARRAYS), KEY_GROUPS))
     if len(sid):
         yield pd.DataFrame({"sensor_id": sid, "command": cmd, "seq": seq})
 

@@ -243,13 +243,17 @@ def test_progress_listener_records_batches_and_state(spark, tmpdir):
     assert any((b.state_rows or 0) > 0 for b in rec.batches)  # keyed state seen
 
 
-def _resume_controller(spark, tmpdir, chunks=None, split=1, partitions=(None, None)):
+def _resume_controller(
+    spark, tmpdir, chunks=None, split=1, partitions=(None, None), on_resume=None
+):
     """Replay ``chunks[:split]``, stop, append the remaining chunks and
     resume from the same checkpoint. ``chunks`` defaults to the scenario cut
     after its first six rows. ``partitions`` gives the session's
     shuffle-partition count for each start (None keeps the session's); the
-    session's count is restored afterwards. Returns the rows emitted by the
-    first run, the rows emitted by both, and the last progress of each run."""
+    session's count is restored afterwards. ``on_resume`` is called between
+    the two runs. Returns the rows emitted by the
+    first run, the rows emitted by both, and the progress of each run's
+    micro-batches, one list per run."""
     import os
 
     import pyarrow as pa
@@ -278,11 +282,13 @@ def _resume_controller(spark, tmpdir, chunks=None, split=1, partitions=(None, No
             .start()
         )
         _await_drain(q, 180)
-        progress.append(q.lastProgress)
+        progress.append(q.recentProgress)
 
     try:
         start(partitions[0])
         first = sorted((r.sensor_id, r.command, r.seq) for r in collected)
+        if on_resume is not None:
+            on_resume()
         for i, chunk in enumerate(chunks[split:]):
             fp = f"{data_dir}/chunk-{90000 + i}.parquet"
             pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False), fp)
@@ -308,7 +314,29 @@ def test_resume_keeps_checkpoint_state_partitions(spark, tmpdir):
     first, got, progress = _resume_controller(spark, tmpdir, partitions=(3, 5))
     assert first == sorted([(1, 1, 2), (1, 0, 5)])
     assert got == sorted(EXPECTED)
-    assert [p["stateOperators"][0]["numShufflePartitions"] for p in progress] == [3, 3]
+    counts = [run[-1]["stateOperators"][0]["numShufflePartitions"] for run in progress]
+    assert counts == [3, 3]
+
+
+def test_resume_under_other_key_group_count_raises(spark, tmpdir, monkeypatch):
+    """A checkpoint whose state values were written under another KEY_GROUPS
+    count fails the resumed query in its first micro-batch, which commits
+    nothing, instead of running on with sensors routed to groups that do not
+    hold their settings."""
+    import os
+
+    from fdp_dynamically_controlled_streams_spark.streaming import controller
+
+    def stale(key, pdf_iter, state):
+        out = list(_control_key_group(key, pdf_iter, state))
+        if state.exists:
+            state.update((*state.get[:-1], KEY_GROUPS * 8))
+        yield from out
+
+    monkeypatch.setattr(controller, "_control_key_group", stale)
+    with pytest.raises(Exception, match=f"KEY_GROUPS={KEY_GROUPS * 8}"):
+        _resume_controller(spark, tmpdir, on_resume=monkeypatch.undo)
+    assert [f for f in os.listdir(f"{tmpdir}/chk/commits") if f[0] != "."] == ["0"]
 
 
 def _random_unified(rng, n_keys, n_rows):
@@ -404,8 +432,21 @@ def test_key_group_handler_matches_per_key_spec(seed):
             value = Row(*state.get)
     want, want_state = _spec_reference(pd.concat(fed).itertuples())
     assert sorted(got) == want
-    sensors, *carried = value
+    sensors, *carried, groups = value
     assert dict(zip(sensors, zip(*carried))) == want_state
+    assert groups == KEY_GROUPS
+
+
+def test_key_group_handler_rejects_other_key_group_count():
+    """No Spark: a stored value written under another KEY_GROUPS raises
+    before the handler emits or writes anything, since the group no longer
+    holds the sensors that hash to it."""
+    pdf = _scenario_unified()
+    value = Row([1], [-1], [45.0], [1.0], [1.0], KEY_GROUPS * 8)
+    state = _group_state(value)
+    with pytest.raises(ValueError, match=f"KEY_GROUPS={KEY_GROUPS * 8}"):
+        list(_control_key_group((0,), iter([pdf]), state))
+    assert state.get == value
 
 
 def test_streaming_multi_key_matches_batch_and_resumes(spark, tmpdir):
@@ -433,8 +474,40 @@ def test_streaming_multi_key_matches_batch_and_resumes(spark, tmpdir):
         assert _run_stream(spark, chunks, f"{tmpdir}/straight") == want
     finally:
         spark.conf.set(key, prev)
-    _, resumed, _ = _resume_controller(spark, f"{tmpdir}/resumed", chunks, split=2)
+    _, resumed, progress = _resume_controller(
+        spark, f"{tmpdir}/resumed", chunks, split=2
+    )
     assert resumed == want
+    # The resumed run rebuilt its state by replaying the first run's
+    # changelog files, not by loading a snapshot.
+    replays = [_rocksdb_metric(p, "rocksdbNumReplayChangelogFiles") for p in progress[1]]
+    assert max(replays) > 0
+
+
+def _rocksdb_metric(progress, name):
+    """A RocksDB custom metric of a micro-batch's state operator."""
+    return progress["stateOperators"][0]["customMetrics"][name]
+
+
+def test_controller_state_commits_write_changelogs(spark, tmpdir):
+    """On the session's RocksDB store every state commit writes the batch's
+    changes as <v>.changelog in each state partition's dir and uploads no
+    snapshot zip, in the first run and in the resumed one."""
+    import os
+
+    _, got, progress = _resume_controller(spark, tmpdir)
+    assert got == sorted(EXPECTED)
+    batches = [p for run in progress for p in run]
+    uploads = [_rocksdb_metric(p, "rocksdbSaveZipFilesLatencyMs") for p in batches]
+    assert uploads == [0] * len(batches)
+    versions = {f"{v}.changelog" for v in range(1, len(batches) + 1)}
+    state_dir = f"{tmpdir}/chk/state/0"
+    parts = [d for d in os.listdir(state_dir) if d.isdigit()]
+    assert len(parts) == batches[0]["stateOperators"][0]["numShufflePartitions"]
+    for part in parts:
+        files = set(os.listdir(f"{state_dir}/{part}"))
+        assert versions <= files, (part, sorted(files))
+        assert not [f for f in files if f.endswith(".zip")], (part, sorted(files))
 
 
 def test_session_window_merges_and_finalizes(spark, tmpdir):
