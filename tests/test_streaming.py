@@ -251,9 +251,9 @@ def _resume_controller(
     after its first six rows. ``partitions`` gives the session's
     shuffle-partition count for each start (None keeps the session's); the
     session's count is restored afterwards. ``on_resume`` is called between
-    the two runs. Returns the rows emitted by the
-    first run, the rows emitted by both, and the progress of each run's
-    micro-batches, one list per run."""
+    the two runs. Returns the rows emitted by the first run, the rows
+    emitted by both, and the progress of each run's micro-batches, one list
+    per run."""
     import os
 
     import pyarrow as pa
